@@ -6,9 +6,11 @@ SF001 ?= /root/testdata/sf0.01
 
 .PHONY: test parity parity-sf001 driver-sim driver-coverage plans bench
 
-# full local suite (sf0.001 oracles + goldens + e2e)
+# full local suite (sf0.001 oracles + goldens + e2e), run exactly as
+# the Tier-1 gate runs it (ROADMAP.md "Tier-1 verify")
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 # oracle parity only, default sf0.001
 parity:

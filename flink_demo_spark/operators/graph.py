@@ -32,9 +32,14 @@ def pagerank_fixed_point(
     """Weighted PageRank in pure fixed-point integer arithmetic.
 
     ``edges`` is a weighted edge list ``(src, dst, cnt)`` (multiplicity
-    counts); returns ``(node, rank_fp)`` where ``rank_fp`` is the rank
-    scaled by ``scale`` (BIGINT — no floats anywhere, so the result is
-    bit-identical across engines and the DuckDB oracle can replay it
+    counts). ``nodes`` (first column) is the vertex set; it defaults to
+    every src and dst. An explicit set may be narrower than the edges:
+    ranks are returned for exactly its nodes, contributions to a dst
+    outside it are dropped, and an edge out of a non-node carries no
+    rank (it still counts in its src's out-degree). Returns
+    ``(node, rank_fp)`` with ``node`` in the dst type and ``rank_fp``
+    the rank scaled by ``scale`` (BIGINT — no floats anywhere, so the
+    result is bit-identical across engines and the DuckDB oracle can replay it
     with the iterations unrolled as CTEs, the same contract as
     embedding_kmeans / quality_perceptron).
 
@@ -85,6 +90,8 @@ def pagerank_fixed_point(
         F.col(dst).alias("__dst"),
         F.col(cnt).cast("long").alias("__cnt"),
     )
+    outdeg = e.groupBy("__src").agg(F.sum("__cnt").alias("__outdeg"))
+    ew = e.join(outdeg, "__src")
     if nodes is None:
         nodes = (
             e.select(F.col("__src").alias("node"))
@@ -93,9 +100,9 @@ def pagerank_fixed_point(
         )
     else:
         nodes = nodes.select(F.col(nodes.columns[0]).alias("node")).distinct()
-
-    outdeg = e.groupBy("__src").agg(F.sum("__cnt").alias("__outdeg"))
-    ew = e.join(outdeg, "__src")
+        # messages to a dst outside the census are dropped: one
+        # loop-invariant semi-join on the weighted edge list
+        ew = ew.join(nodes, ew["__dst"] == nodes["node"], "left_semi")
     n_row = nodes.agg(F.count(F.lit(1)).alias("__n"))
     teleport = F.expr(
         f"(CAST({scale} AS BIGINT) * {100 - damping_pct} DIV 100) DIV __n"
@@ -124,7 +131,11 @@ def pagerank_fixed_point(
     # state values (rank frame + dangling scalar) and both next values
     # need the previous frame — and both eager and lazy
     # materialization measured slower in rounds 12/13, see above.)
-    zeros = nodes.select("node", F.lit(0).cast("long").alias("__m"))
+    # seed in the dst type: the census may carry a different key type
+    zeros = nodes.select(
+        F.col("node").cast(e.schema["__dst"].dataType).alias("node"),
+        F.lit(0).cast("long").alias("__m"),
+    )
     for i in range(iterations):
         contrib = (
             ew.join(ranks, ew["__src"] == ranks["node"])

@@ -114,36 +114,15 @@ def _stage_stream_dir(sf_dir: str, table: str) -> str:
     return d
 
 
-# Session-conf handoff from the file stream sources to the replay
-# runner (streaming/runner.py): the staged parquet byte total of the
-# stream MOST RECENTLY built in this session. The runner CONSUMES the
-# key (read + unset) to derive a scale-adaptive shuffle-partition
-# count for the replay — streaming plans cannot use AQE partition
-# coalescing, so without this every stateful replay pays the session's
-# static partition count in state-store commits and task overhead no
-# matter how small the input is (guide §2: derive partitioning from
-# input size, not a constant tuned for one scale).
-#
-# Known limits of the conf channel (round-13 ADVICE, accepted as
-# perf-only): last-writer-wins, so (a) a stream built but never run
-# leaves a value the NEXT replay consumes, and (b) a multi-source plan
-# (stream-stream join) publishes only the last-built source's bytes.
-# Either case mis-sizes the clamp (more or fewer partitions than
-# ideal) but cannot affect results; the runner also never RAISES the
-# session partition count.
-STAGED_BYTES_CONF = "spark.flinkDemoSpark.stream.stagedInputBytes"
-
-
-def _record_staged_bytes(spark: SparkSession, staged_dir: str) -> None:
-    """Publish the staged dir's parquet byte total for the runner.
-    Same listing rule as :func:`_scan_guard`: the TOTAL across files,
-    one decision per replay."""
-    total = sum(
+def staged_parquet_bytes(staged_dir: str) -> int:
+    """Total bytes of the parquet files in a staged stream dir (symlinks
+    followed): the size the replay runner and :func:`_scan_guard` act
+    on, one total per replay."""
+    return sum(
         os.path.getsize(os.path.join(staged_dir, f))
         for f in os.listdir(staged_dir)
         if f.endswith(".parquet")
     )
-    spark.conf.set(STAGED_BYTES_CONF, str(total))
 
 
 def eof_pad_hours(gap_ms: int, watermark_ms: int = 600_000) -> int:
@@ -196,12 +175,7 @@ def _scan_guard(
     always-on pipeline writing through a transactional/2PC sink should
     repartition by a stable key column instead to keep exactly-once
     under partial retry."""
-    total = sum(
-        os.path.getsize(os.path.join(staged_dir, f))
-        for f in os.listdir(staged_dir)
-        if f.endswith(".parquet")
-    )
-    if total <= threshold_bytes:
+    if staged_parquet_bytes(staged_dir) <= threshold_bytes:
         return df
     return df.repartition(
         int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -222,7 +196,6 @@ def events_stream(
 
     apply_runtime_confs(spark)
     staged = _stage_stream_dir(sf_dir, "events")
-    _record_staged_bytes(spark, staged)
     reader = spark.readStream.schema(_events_raw_schema(staged))
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -232,6 +205,44 @@ def events_stream(
     if scan_guard:
         df = _scan_guard(df, staged, spark)
     return df
+
+
+def _write_eof_sentinel(
+    path: str,
+    schema: "pyarrow.Schema",
+    max_ts: "datetime.datetime",
+    pad_hours: int,
+    mtime: float | None = None,
+) -> None:
+    """Write the one-row EOF sentinel (user_id = -1, stamped
+    ``pad_hours`` past ``max_ts``) with the events file's physical
+    ``schema``, via a pid-suffixed tmp file and an atomic replace so
+    concurrent stagers race safely. ``mtime`` pins the file's mtime,
+    which orders it in a file-stream replay."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = {
+        "event_id": [-1],
+        "ts": [max_ts + datetime.timedelta(hours=pad_hours)],
+        "user_id": [-1],
+        "event_type": ["eof"],
+        "value": [0.0],
+        "props": ["{}"],
+    }
+    tmp = f"{path}.tmp{os.getpid()}"
+    pq.write_table(
+        pa.table(
+            {f.name: pa.array(cols[f.name], type=f.type) for f in schema},
+            schema=schema,
+        ),
+        tmp,
+    )
+    if mtime is not None:
+        os.utime(tmp, (mtime, mtime))
+    os.replace(tmp, path)
 
 
 def events_stream_with_eof(
@@ -274,29 +285,10 @@ def events_stream_with_eof(
     ):
         os.remove(sentinel)
     if not os.path.exists(sentinel):
-        schema = pq.read_schema(link)
         max_ts = pa.compute.max(
             pq.read_table(link, columns=["ts"]).column("ts")
         ).as_py()
-        import datetime
-
-        eof_ts = max_ts + datetime.timedelta(hours=pad_hours)
-        cols = {
-            "event_id": [-1],
-            "ts": [eof_ts],
-            "user_id": [-1],
-            "event_type": ["eof"],
-            "value": [0.0],
-            "props": ["{}"],
-        }
-        row = pa.table(
-            {f.name: pa.array(cols[f.name], type=f.type) for f in schema},
-            schema=schema,
-        )
-        tmp = sentinel + ".tmp"
-        pq.write_table(row, tmp)
-        os.replace(tmp, sentinel)  # atomic: concurrent stagers race safely
-    _record_staged_bytes(spark, d)
+        _write_eof_sentinel(sentinel, pq.read_schema(link), max_ts, pad_hours)
     reader = spark.readStream.schema(_events_raw_schema(d))
     df = normalize_events_ts(reader.parquet(d))
     if watermark:
@@ -366,35 +358,15 @@ def events_stream_with_eof_split(
             os.replace(p + tmp_sfx, p)
         # sentinel last (newest mtime): drags the final watermark past
         # every gap horizon, same construction as events_stream_with_eof
-        max_ts = pc.max(t.column("ts")).as_py()
-        import datetime
-
-        import pyarrow as pa
-
-        schema = t.schema
-        eof_ts = max_ts + datetime.timedelta(hours=pad_hours)
-        cols = {
-            "event_id": [-1],
-            "ts": [eof_ts],
-            "user_id": [-1],
-            "event_type": ["eof"],
-            "value": [0.0],
-            "props": ["{}"],
-        }
-        sentinel = os.path.join(d, "zz_eof.parquet")
-        pq.write_table(
-            pa.table(
-                {f.name: pa.array(cols[f.name], type=f.type) for f in schema},
-                schema=schema,
-            ),
-            sentinel + tmp_sfx,
+        _write_eof_sentinel(
+            os.path.join(d, "zz_eof.parquet"),
+            t.schema,
+            pc.max(t.column("ts")).as_py(),
+            pad_hours,
+            mtime=base + 10 * (n_chunks + 2),
         )
-        mt = base + 10 * (n_chunks + 2)
-        os.utime(sentinel + tmp_sfx, (mt, mt))
-        os.replace(sentinel + tmp_sfx, sentinel)
         with open(done, "w") as f:
             f.write("ok\n")
-    _record_staged_bytes(spark, d)
     reader = spark.readStream.schema(_events_raw_schema(d)).option(
         "maxFilesPerTrigger", 1
     )
@@ -424,7 +396,6 @@ def documents_stream(
     )
     apply_runtime_confs(spark)
     staged = _stage_stream_dir(sf_dir, "documents")
-    _record_staged_bytes(spark, staged)
     df = spark.readStream.schema(schema).parquet(staged)
     if scan_guard:
         # documents carry HEAVY per-row work (shingling, hashing,
@@ -462,7 +433,6 @@ def embeddings_stream(
     )
     apply_runtime_confs(spark)
     staged = _stage_stream_dir(sf_dir, "embeddings")
-    _record_staged_bytes(spark, staged)
     df = spark.readStream.schema(schema).parquet(staged)
     if scan_guard:
         df = _scan_guard(df, staged, spark, threshold_bytes=0)

@@ -5,13 +5,119 @@ Spark analogue of the reference's collecting ``TestSink``
 memory sink + ``availableNow`` trigger processes all currently
 available input and stops — the bounded-replay execution the
 reference gets from ``RuntimeExecutionMode.BATCH``.
+
+Replay sizing policy, decided here and nowhere else. The input size
+is the total parquet bytes under every file-stream leaf of the
+replay's own analyzed plan (:func:`replay_input_bytes`); batch leaves
+of stream-static joins do not count, and any other streaming leaf
+(rate, socket, kafka) makes the size unknown.
+
+- Partitions. A streaming aggregation's state-store partition count
+  is frozen from ``spark.sql.shuffle.partitions`` at the first
+  micro-batch and AQE cannot coalesce it, so a replay of a few MB
+  would otherwise pay the full session count in state-store commits
+  and task launches per micro-batch. The replay runs with
+  ``min(session, max(8, ceil(bytes / divisor)))`` partitions and the
+  session value is restored afterwards. The measured optima invert
+  with the stage kind, hence two divisors:
+
+  - JVM-only stateful plans are state-commit-bound: 8 partitions beat
+    32 at sf0.1 (1.553 → 1.023 s min, 5/5 interleaved pairs) and
+    still beat 12 and 32 at a 10x events replica of 11.6 MiB
+    (2.90 vs 3.46 / 4.73 s min, 4/4 pairs) → 8 MiB per partition.
+  - Plans with a Python stage (``*InPandas*``, ``*InArrow*``, Python
+    UDFs) are per-row-CPU-bound past the smallest inputs: 8 beat 32 at
+    sf0.1 (4.23 → 2.44 s min) but at the 10x replica 32 beat 12 beat 8
+    (3.83 / 4.88 / 6.52 s min) → 256 KiB per partition, which lands
+    on both optima.
+
+  The count never rises above the session value, so a session already
+  at 8 is untouched and a huge replay keeps the session count. A
+  non-integer session value (a vendor "auto") and an unknown size
+  skip the clamp.
+- Scratch. Replay checkpoints are throwaway (nothing restarts from
+  them), and Spark's default temp checkpoint under java.io.tmpdir pays
+  durable-store file I/O per micro-batch (memory-backed scratch
+  measured −7% on the stateful availableNow floor, 4/4 interleaved
+  pairs). So a replay of known size up to 1 GiB checkpoints under
+  ``/dev/shm`` when the host has it; tmpfs is RAM-backed and replay
+  state grows with the input, so larger or unknown-size replays keep
+  Spark's disk default. ``SPARK_GRAFT_STREAM_SCRATCH`` names a scratch
+  root that is used unconditionally; an explicit ``checkpoint_dir``
+  (a durable pipeline) bypasses scratch altogether.
+
+Replays mutate the session-global partition count for their duration,
+so run them one at a time per session.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sources.streams import staged_parquet_bytes
+
+_MIN_PARTITIONS = 8
+_JVM_BYTES_PER_PARTITION = 8 << 20
+_PYTHON_BYTES_PER_PARTITION = 256 << 10
+_PYTHON_STAGE_NODES = ("InPandas", "InArrow", "PythonUDF", "EvalPython")
+_SHM_MAX_BYTES = 1 << 30
+
+
+def replay_input_bytes(sdf: DataFrame) -> int | None:
+    """Parquet bytes under every file-stream leaf of ``sdf``'s analyzed
+    plan, summed per leaf (a dir read through two leaves counts
+    twice); ``None`` when a streaming leaf is not a parquet directory
+    source."""
+    leaves = sdf._jdf.queryExecution().analyzed().collectLeaves()
+    total = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if not leaf.isStreaming():
+            continue
+        if leaf.getClass().getSimpleName() != "StreamingRelation":
+            return None
+        source = leaf.dataSource()
+        path = source.options().get("path")
+        if (
+            source.className() != "parquet"
+            or path.isEmpty()
+            or not os.path.isdir(path.get())
+        ):
+            return None
+        total += staged_parquet_bytes(path.get())
+    return total
+
+
+def replay_partitions(
+    session: str, input_bytes: int | None, python_stage: bool
+) -> str:
+    """The replay's ``spark.sql.shuffle.partitions`` under the module
+    policy, given the session value."""
+    if input_bytes is None:
+        return session
+    try:
+        cur = int(session)
+    except ValueError:
+        return session
+    per = _PYTHON_BYTES_PER_PARTITION if python_stage else _JVM_BYTES_PER_PARTITION
+    return str(min(cur, max(_MIN_PARTITIONS, -(-input_bytes // per))))
+
+
+def replay_scratch_root(input_bytes: int | None) -> str | None:
+    """Root for the replay's throwaway checkpoint under the module
+    policy; ``None`` means Spark's disk default."""
+    root = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH")
+    if root is not None:
+        return root
+    if input_bytes is not None and input_bytes <= _SHM_MAX_BYTES:
+        if os.path.isdir("/dev/shm"):
+            return "/dev/shm"
+    return None
 
 
 def run_available_now(
@@ -23,166 +129,46 @@ def run_available_now(
 ) -> DataFrame:
     """Execute a streaming DF to a memory sink; return the result
     table. ``checkpoint_dir`` persists state/offsets — required when
-    the state will be read back via streaming/state_query.py."""
+    the state will be read back via streaming/state_query.py.
+    ``timeout_sec`` defaults to ``SPARK_GRAFT_STREAM_TIMEOUT_SEC``
+    (300 s, enough for every gate and bench scale)."""
     if timeout_sec is None:
-        # default 300s covers every gate/bench scale; off-gate scale
-        # probes (sf10 replay is ~10 min of honest work) raise it via
-        # the env knob instead of patching every call site
-        import os
-
         timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT_SEC", "300"))
     name = name or f"mem_{uuid.uuid4().hex[:12]}"
     spark: SparkSession = sdf.sparkSession
-    # Scale-adaptive state partitioning (guide §2: derive partitioning
-    # from input size, not a constant tuned for one scale). Streaming
-    # aggregations cannot use AQE partition coalescing — their
-    # state-store partition count is frozen from
-    # spark.sql.shuffle.partitions at the first micro-batch — so a
-    # bounded replay of a few-MB staged input otherwise pays the full
-    # session count (32 here) in state-store commits and task launches
-    # per micro-batch. The file stream sources publish their staged
-    # byte total under STAGED_BYTES_CONF; we CONSUME it (read + unset).
-    # The handoff is session-global last-writer-wins: a stream that was
-    # BUILT but never run leaves a value the next replay consumes, and
-    # a multi-source plan clamps by the last-built source only — both
-    # are perf-only mis-sizings (wrong partition count, same results),
-    # accepted for the simplicity of the conf channel (round-13
-    # ADVICE, documented). We clamp the partition count to
-    # min(session, max(8, ceil(bytes / divisor))), where the divisor
-    # depends on whether the replay has a Python stage — the measured
-    # optima INVERT with the stage kind:
-    #   - JVM-only stateful plans are state-commit-bound: 8 partitions
-    #     beat 32 at sf0.1 (1.553→1.023 s min, 8 wins 5/5 interleaved
-    #     pairs) AND still beat 12/32 at a 10x events replica
-    #     (2.90 vs 3.46/4.73 s min, 4/4 pairs at 11.6 MiB staged)
-    #     → divisor 8 MiB/partition: the count stays at the floor
-    #     until ~64 MiB and reaches the session ceiling at
-    #     session×8 MiB.
-    #   - Python-stage plans (applyInPandasWithState / mapInPandas,
-    #     detected via the analyzed plan) are per-row-CPU-bound past
-    #     the smallest inputs: 8 beat 32 at sf0.1 (4.23→2.44 s min),
-    #     but at the same 10x replica 32 beat 12 beat 8
-    #     (3.83/4.88/6.52 s min, monotone across all 4 reps)
-    #     → divisor 256 KiB/partition, which hits BOTH measured
-    #     optima (sf0.1 → 8, 10x → session 32) and restores full
-    #     parallelism quickly as input grows.
-    # The clamp never RAISES the session value, so a session already
-    # at the driver's 8 is byte-identical, and a 100 TB replay
-    # (input ≫ session×divisor) keeps the session count.
-    from ..sources.streams import STAGED_BYTES_CONF
-
-    # NOTE: the clamp/restore below mutates the session-global
-    # spark.sql.shuffle.partitions; replays are assumed to run one at a
-    # time per session (true for the bench, the driver, and the test
-    # suite). Concurrent run_available_now calls in one session could
-    # interleave clamp/restore and leave the wrong value behind
-    # (round-13 ADVICE) — callers that want concurrent replays should
-    # use separate sessions.
-    restore_parts: str | None = None
-    staged_bytes: int | None = None
-    staged_raw = spark.conf.get(STAGED_BYTES_CONF, None)
-    if staged_raw is not None:
-        spark.conf.unset(STAGED_BYTES_CONF)
-        try:
-            staged_bytes = int(staged_raw)
-        except ValueError:
-            staged_bytes = None  # malformed: skip the clamp, not the run
+    input_bytes = replay_input_bytes(sdf)
+    session_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    plan = sdf._jdf.queryExecution().analyzed().toString()
+    parts = replay_partitions(
+        session_parts, input_bytes, any(t in plan for t in _PYTHON_STAGE_NODES)
+    )
+    writer = (
+        sdf.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+    )
+    scratch = None
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    elif (root := replay_scratch_root(input_bytes)) is not None:
+        scratch = tempfile.mkdtemp(prefix="fds_ck_", dir=root)
+        writer = writer.option("checkpointLocation", scratch)
     q = None
+    if parts != session_parts:
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
     try:
-        if staged_bytes is not None:
-            try:
-                cur = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-            except ValueError:
-                cur = None  # non-integer (e.g. vendor "auto"): leave alone
-            if cur is not None:
-                plan = sdf._jdf.queryExecution().analyzed().toString()
-                # Node-name match (round-13 ADVICE tightening): "InPandas"
-                # covers FlatMapGroupsInPandasWithState / MapInPandas /
-                # FlatMapGroupsInPandas, "InArrow" the mapInArrow twins,
-                # "PythonUDF"/"EvalPython" scalar/pandas UDF expressions.
-                # The old bare-"Python" match could false-positive on a
-                # string literal in a filter. A false positive only ramps
-                # parallelism faster (perf-only).
-                divisor = (
-                    (256 << 10)
-                    if any(
-                        t in plan
-                        for t in ("InPandas", "InArrow", "PythonUDF", "EvalPython")
-                    )
-                    else (8 << 20)
-                )
-                target = min(cur, max(8, -(-staged_bytes // divisor)))
-                if target != cur:
-                    restore_parts = str(cur)
-                    spark.conf.set("spark.sql.shuffle.partitions", str(target))
-        writer = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-        )
-        # Ephemeral replay checkpoints are throwaway by construction (this
-        # runner's whole point is bounded replay; nothing ever restarts
-        # from them), so they go to memory-backed scratch when the host
-        # has one: Spark's default temp checkpoint lands under
-        # java.io.tmpdir, which is a DISK path here, charging every
-        # micro-batch the state/offset/commit file I/O of a durable store
-        # without any of the durability (measured: −7% on the stateful
-        # availableNow floor, 4/4 interleaved pairs). A durable pipeline
-        # passes ``checkpoint_dir`` explicitly and is unaffected;
-        # SPARK_GRAFT_STREAM_SCRATCH overrides the scratch root (set it
-        # to a disk path to restore the old behavior).
-        #
-        # SIZE GATE (round-13 verdict What's-wrong #1): tmpfs is
-        # RAM-backed and typically capped well below disk, and replay
-        # state is input-proportional for these bounded replays — so
-        # when the staged input published by the file sources exceeds
-        # SPARK_GRAFT_STREAM_SCRATCH_MAX_BYTES (default 1 GiB) the
-        # checkpoint falls back to Spark's disk default instead of
-        # filling /dev/shm. An explicit SPARK_GRAFT_STREAM_SCRATCH
-        # root is honored unconditionally (the operator chose it).
-        scratch_root = None
-        if checkpoint_dir is not None:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        else:
-            import os
-            import tempfile
-
-            root = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH")
-            if root is None and os.path.isdir("/dev/shm"):
-                try:
-                    shm_max = int(
-                        os.environ.get(
-                            "SPARK_GRAFT_STREAM_SCRATCH_MAX_BYTES",
-                            str(1 << 30),
-                        )
-                    )
-                except ValueError:
-                    shm_max = 1 << 30
-                if staged_bytes is None or staged_bytes <= shm_max:
-                    root = "/dev/shm"
-            if root:
-                scratch_root = tempfile.mkdtemp(prefix="fds_ck_", dir=root)
-                writer = writer.option("checkpointLocation", scratch_root)
-        try:
-            q = writer.start()
-            finished = q.awaitTermination(timeout_sec)
-            if not finished:
-                raise TimeoutError(
-                    f"streaming query {name!r} did not finish within "
-                    f"{timeout_sec}s; memory table would be truncated"
-                )
-        finally:
-            if q is not None and q.isActive:
-                q.stop()
-            if scratch_root is not None:
-                import shutil
-
-                shutil.rmtree(scratch_root, ignore_errors=True)
+        q = writer.start()
+        if not q.awaitTermination(timeout_sec):
+            raise TimeoutError(
+                f"streaming query {name!r} did not finish within "
+                f"{timeout_sec}s; memory table would be truncated"
+            )
     finally:
-        # restore OUTSIDE the start/await block: a start-time
-        # AnalysisException (e.g. bad output mode) must not leave the
-        # session permanently clamped (round-13 ADVICE, medium).
-        if restore_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", restore_parts)
+        if q is not None and q.isActive:
+            q.stop()
+        if scratch is not None:
+            shutil.rmtree(scratch, ignore_errors=True)
+        if parts != session_parts:
+            spark.conf.set("spark.sql.shuffle.partitions", session_parts)
     return spark.table(name)

@@ -100,121 +100,3 @@ def test_lateness_vectorized_matches_reference_fuzz():
             int(k): list(v) for k, v in new_wins.items()
         }, f"trial {trial}: final window state diverges"
         assert ref_max == new_max, f"trial {trial}: final watermark diverges"
-
-
-def test_runner_staged_bytes_clamp(spark, sf_dir):
-    """Scale-adaptive streaming state partitioning (round-13 change 15):
-    the file stream sources publish their staged parquet byte total
-    under STAGED_BYTES_CONF; run_available_now CONSUMES it (read +
-    unset), clamps spark.sql.shuffle.partitions for the replay to
-    min(session, max(8, MiB of input)), restores the session value
-    afterward, and the results are identical with and without the
-    clamp. The clamp must never RAISE the session value."""
-    from pyspark.sql import functions as F
-
-    from flink_demo_spark.sources import streams
-    from flink_demo_spark.streaming.runner import run_available_now
-
-    def hourly(ev):
-        return (
-            ev.groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.col("w.start").alias("window_start"), "n")
-        )
-
-    orig = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        # 1. the source publishes the staged byte total
-        ev = streams.events_stream(spark, sf_dir, watermark="10 minutes")
-        staged = spark.conf.get(streams.STAGED_BYTES_CONF, None)
-        assert staged is not None and int(staged) > 0
-        new_rows = run_available_now(hourly(ev), output_mode="complete").collect()
-        # 2. the runner consumed the conf and restored the session value
-        assert spark.conf.get(streams.STAGED_BYTES_CONF, None) is None
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
-        # 3. suppressing the handoff (pre-change behavior) yields the
-        #    same rows — partition count cannot affect results
-        real = streams._record_staged_bytes
-        streams._record_staged_bytes = lambda s, d: None
-        try:
-            ev_old = streams.events_stream(spark, sf_dir, watermark="10 minutes")
-            assert spark.conf.get(streams.STAGED_BYTES_CONF, None) is None
-            old_rows = run_available_now(
-                hourly(ev_old), output_mode="complete"
-            ).collect()
-        finally:
-            streams._record_staged_bytes = real
-        assert sorted(map(tuple, new_rows)) == sorted(map(tuple, old_rows))
-        assert len(new_rows) > 0
-        # 4. never raises: a session already below the floor keeps its
-        #    value even for a huge staged input (100 TB shape)
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        spark.conf.set(streams.STAGED_BYTES_CONF, str(100 << 20))
-        ev4 = streams.events_stream(spark, sf_dir, watermark="10 minutes")
-        run_available_now(hourly(ev4), output_mode="complete").collect()
-        assert spark.conf.get(streams.STAGED_BYTES_CONF, None) is None
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", orig)
-
-
-def test_runner_clamp_divisor_by_stage_kind(spark, sf_dir):
-    """The clamp's divisor depends on the replay's stage kind (measured
-    at a 10x replica, see runner.py): JVM-only stateful plans ramp at
-    8 MiB/partition; Python-stage plans at 256 KiB/partition. Pin both
-    paths by forcing the staged byte total to 100 MiB: the JVM agg must
-    clamp to ceil(100/8)=13, the pandas operator must keep the session
-    32 (ceil(100/0.25)=400 > 32 -> no clamp)."""
-    from pyspark.sql import functions as F
-
-    from flink_demo_spark.sources import streams
-    from flink_demo_spark.streaming.lateness import allowed_lateness_tumbling_count
-    from flink_demo_spark.streaming.runner import run_available_now
-
-    orig = spark.conf.get("spark.sql.shuffle.partitions")
-    seen: list[str] = []
-    real_set = spark.conf.set
-
-    def spy_set(k, v):
-        if k == "spark.sql.shuffle.partitions":
-            seen.append(str(v))
-        return real_set(k, v)
-
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        spark.conf.set = spy_set
-        seen.clear()
-        # JVM-only stateful plan
-        ev = streams.events_stream(spark, sf_dir, watermark="10 minutes")
-        agg = (
-            ev.groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        spark.conf.set(streams.STAGED_BYTES_CONF, str(100 << 20))
-        run_available_now(agg, output_mode="complete")
-        assert seen == ["13", "32"], seen  # clamped, then restored
-        seen.clear()
-        # Python-stage plan (applyInPandasWithState)
-        feed = streams.events_stream(spark, sf_dir, watermark=None).select(
-            F.col("user_id").alias("key"),
-            (F.unix_millis("ts") - (F.col("event_id") % 101) * 600_000).alias(
-                "ts_ms"
-            ),
-            F.col("event_id").alias("seq"),
-        )
-        out = allowed_lateness_tumbling_count(
-            feed, window_ms=86_400_000, delay_ms=3_600_000,
-            lateness_ms=7_200_000,
-            key_col="key", ts_col="ts_ms", seq_col="seq",
-        )
-        spark.conf.set(streams.STAGED_BYTES_CONF, str(100 << 20))
-        run_available_now(out, output_mode="append")
-        assert seen == [], seen  # no clamp: Python stage keeps session
-    finally:
-        spark.conf.set = real_set
-        spark.conf.set("spark.sql.shuffle.partitions", orig)
-        try:
-            spark.conf.unset(streams.STAGED_BYTES_CONF)
-        except Exception:
-            pass

@@ -165,29 +165,11 @@ def test_rrf_fusion_matches_python_model(spark):
     assert score[10] == score[11]
 
 
-def test_pagerank_fixed_point_matches_python_model(spark):
-    """pagerank_fixed_point vs a dependency-free big-int Python replay
-    on a randomized weighted digraph with dangling nodes and an
-    isolated node — every intermediate op is integer, so the match is
-    exact, not approximate."""
-    from flink_demo_spark.operators.graph import pagerank_fixed_point
-
-    rng = random.Random(8191)
-    n_nodes, scale, d, iters = 9, 10**12, 85, 4
-    edges = {}
-    for _ in range(30):
-        # sources drawn from 0..6 only, so node 7 provably has NO
-        # out-edges while RECEIVING rank mass (true dangling node) and
-        # node 8 is fully isolated — both no-out-edge branches covered
-        u, v = rng.randrange(n_nodes - 2), rng.randrange(n_nodes - 1)
-        if u != v:
-            edges[(u, v)] = edges.get((u, v), 0) + rng.randrange(1, 4)
-    edges[(0, 7)] = 2
-    nodes = list(range(n_nodes))
-    assert not any(u == 7 or u == 8 for u, _ in edges)
-    assert any(v == 7 for _, v in edges)
-
-    # pure-Python replay of the documented arithmetic contract
+def _pagerank_model(edges, nodes, scale, d, iters):
+    """Big-int Python replay of pagerank_fixed_point's documented
+    arithmetic over the vertex set ``nodes``: an edge out of a non-node
+    carries no rank, a contribution to a non-node is dropped, and every
+    edge counts in its src's out-degree."""
     outdeg = {}
     for (u, _v), c in edges.items():
         outdeg[u] = outdeg.get(u, 0) + c
@@ -196,27 +178,84 @@ def test_pagerank_fixed_point_matches_python_model(spark):
     for _ in range(iters):
         contrib = {}
         for (u, v), c in edges.items():
-            contrib[v] = contrib.get(v, 0) + c * (r[u] // outdeg[u])
+            if u in r:
+                contrib[v] = contrib.get(v, 0) + c * (r[u] // outdeg[u])
         dang = sum(rv for v, rv in r.items() if v not in outdeg)
         r = {
             v: (scale * (100 - d) // 100) // n
             + d * (contrib.get(v, 0) + dang // n) // 100
             for v in nodes
         }
+    return r
+
+
+def _random_edges(seed, n_nodes):
+    """Weighted digraph whose srcs are drawn from 0..n-3 only, so node
+    n-2 has NO out-edges while RECEIVING rank mass (true dangling node)
+    and node n-1 is fully isolated — both no-out-edge branches covered."""
+    rng = random.Random(seed)
+    edges = {}
+    for _ in range(30):
+        u, v = rng.randrange(n_nodes - 2), rng.randrange(n_nodes - 1)
+        if u != v:
+            edges[(u, v)] = edges.get((u, v), 0) + rng.randrange(1, 4)
+    edges[(0, n_nodes - 2)] = 2
+    assert not any(u >= n_nodes - 2 for u, _ in edges)
+    return edges
+
+
+def _pagerank_got(spark, edges, nodes, node_type, iters, d, scale):
+    from flink_demo_spark.operators.graph import pagerank_fixed_point
 
     edf = spark.createDataFrame(
         [(u, v, c) for (u, v), c in edges.items()], "src long, dst long, cnt long"
     )
-    ndf = spark.createDataFrame([(v,) for v in nodes], "node long")
-    got = {
-        row.node: row.rank_fp
-        for row in pagerank_fixed_point(
-            edf, nodes=ndf, iterations=iters, damping_pct=d, scale=scale
-        ).collect()
-    }
-    assert got == r
+    ndf = spark.createDataFrame([(v,) for v in nodes], f"node {node_type}")
+    out = pagerank_fixed_point(
+        edf, nodes=ndf, iterations=iters, damping_pct=d, scale=scale
+    )
+    assert out.schema["node"].dataType.simpleString() == "bigint"
+    return {row.node: row.rank_fp for row in out.collect()}
+
+
+def test_pagerank_fixed_point_matches_python_model(spark):
+    """pagerank_fixed_point vs a dependency-free big-int Python replay
+    on a randomized weighted digraph with dangling nodes and an
+    isolated node — every intermediate op is integer, so the match is
+    exact, not approximate."""
+    n_nodes, scale, d, iters = 9, 10**12, 85, 4
+    edges = _random_edges(8191, n_nodes)
+    nodes = list(range(n_nodes))
+    got = _pagerank_got(spark, edges, nodes, "long", iters, d, scale)
+    assert got == _pagerank_model(edges, nodes, scale, d, iters)
     # rank mass is conserved up to the DIV truncation loss
     assert 0 < sum(got.values()) <= scale
+
+
+def test_pagerank_fixed_point_subset_nodes_matches_python_model(spark):
+    """An explicit ``nodes`` frame narrower than the edge dsts is the
+    vertex set: ranks come back for exactly those nodes, contributions
+    to the dropped dsts vanish (they must not surface as extra rank
+    rows nor feed dangling mass back), and edges out of them carry no
+    rank. Same exact big-int model as the full-census test."""
+    n_nodes, scale, d, iters = 9, 10**12, 85, 4
+    edges = _random_edges(8191, n_nodes)
+    nodes = [0, 1, 2, 4, 5, 7]  # 3 and 6 (srcs and dsts) and 8 are outside
+    assert {v for _, v in edges} - set(nodes), "some dst must be foreign"
+    assert {u for u, _ in edges} - set(nodes), "some src must be foreign"
+    got = _pagerank_got(spark, edges, nodes, "long", iters, d, scale)
+    assert set(got) == set(nodes)
+    assert got == _pagerank_model(edges, nodes, scale, d, iters)
+
+
+def test_pagerank_fixed_point_int_nodes_long_edges(spark):
+    """An int-typed ``nodes`` frame over long-typed edges gives the
+    same ranks as a long census, keyed in the edges' dst type."""
+    n_nodes, scale, d, iters = 9, 10**12, 85, 3
+    edges = _random_edges(4099, n_nodes)
+    nodes = list(range(n_nodes))
+    got = _pagerank_got(spark, edges, nodes, "int", iters, d, scale)
+    assert got == _pagerank_model(edges, nodes, scale, d, iters)
 
 
 def test_sample_priority_matches_python_model(spark, sf_dir):

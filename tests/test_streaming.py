@@ -866,6 +866,162 @@ def test_progress_collector_captures_metrics(spark, sf_dir):
         spark.streams.removeListener(collector)
 
 
+_MIB = 1 << 20
+
+
+@pytest.mark.parametrize(
+    "session, input_bytes, python_stage, parts, shm",
+    [
+        ("32", 200_000, False, "8", True),  # small input: the floor
+        ("4", 100 * _MIB, False, "4", True),  # never above the session
+        ("32", 100 * _MIB, False, "13", True),  # JVM: 8 MiB per partition
+        ("32", 100 * _MIB, True, "32", True),  # Python: 256 KiB per partition
+        ("auto", 100 * _MIB, False, "auto", True),  # non-integer session
+        ("32", None, False, "32", False),  # unknown size
+        ("32", 2 << 30, False, "32", False),  # over the tmpfs gate
+    ],
+    ids=["floor", "session-4", "jvm", "python", "non-integer", "unknown", "over-shm"],
+)
+def test_replay_sizing_policy(
+    monkeypatch, session, input_bytes, python_stage, parts, shm
+):
+    """The runner's sizing policy as a table: partition count from the
+    session value, the input size and the stage kind; /dev/shm scratch
+    only for a known size up to 1 GiB; an explicit scratch root always
+    wins."""
+    import os
+
+    from flink_demo_spark.streaming.runner import (
+        replay_partitions,
+        replay_scratch_root,
+    )
+
+    assert replay_partitions(session, input_bytes, python_stage) == parts
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SCRATCH", raising=False)
+    expect = "/dev/shm" if shm and os.path.isdir("/dev/shm") else None
+    assert replay_scratch_root(input_bytes) == expect
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", "/srv/replay-scratch")
+    assert replay_scratch_root(input_bytes) == "/srv/replay-scratch"
+
+
+@pytest.fixture
+def replay_spy(spark, monkeypatch):
+    """Session at 32 partitions; records the partition count each
+    streaming query starts with and every replay scratch dir made."""
+    import tempfile
+
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    seen = {"parts": [], "scratch": []}
+    real_start, real_mkdtemp = DataStreamWriter.start, tempfile.mkdtemp
+
+    def start(self, *a, **kw):
+        seen["parts"].append(spark.conf.get("spark.sql.shuffle.partitions"))
+        return real_start(self, *a, **kw)
+
+    def mkdtemp(*a, **kw):
+        seen["scratch"].append(kw.get("dir"))
+        return real_mkdtemp(*a, **kw)
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    monkeypatch.setattr(tempfile, "mkdtemp", mkdtemp)
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SCRATCH", raising=False)
+    orig = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        yield seen
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", orig)
+
+
+def test_runner_sizes_replay_from_its_plan(
+    spark, sf_dir, tmp_path, monkeypatch, replay_spy
+):
+    """run_available_now applies the policy to the replay it is given:
+    the stage kind is read off the plan (at a forced 100 MiB a JVM
+    aggregation runs at 13 partitions, an applyInPandasWithState stage
+    keeps the session's 32), a non-parquet file source is of unknown
+    size (session count, no scratch dir), and the session value is
+    restored after each replay."""
+    from flink_demo_spark.streaming import runner
+    from flink_demo_spark.streaming.lateness import (
+        allowed_lateness_tumbling_count,
+    )
+
+    with monkeypatch.context() as m:
+        m.setattr(runner, "replay_input_bytes", lambda sdf: 100 * _MIB)
+        ev = events_stream(spark, sf_dir)
+        run_available_now(tumbling_agg(ev), output_mode="complete")
+        feed = events_stream(spark, sf_dir, watermark=None).select(
+            F.col("user_id").alias("key"),
+            F.unix_millis("ts").alias("ts_ms"),
+            F.col("event_id").alias("seq"),
+        )
+        out = allowed_lateness_tumbling_count(
+            feed, window_ms=86_400_000, delay_ms=3_600_000,
+            lateness_ms=7_200_000, key_col="key", ts_col="ts_ms",
+            seq_col="seq",
+        )
+        run_available_now(out, output_mode="append")
+    assert replay_spy["parts"] == ["13", "32"]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+
+    d = str(tmp_path / "json_stream")
+    spark.createDataFrame([(1, "a")], "k long, v string").write.json(d)
+    replay_spy["scratch"].clear()
+    js = spark.readStream.schema("k long, v string").json(d)
+    assert runner.replay_input_bytes(js) is None
+    rows = run_available_now(js.groupBy("v").count(), output_mode="complete")
+    assert rows.collect() == [("a", 1)]
+    assert replay_spy["parts"][-1] == "32"
+    assert replay_spy["scratch"] == []
+
+
+def test_two_source_replay_sized_by_both_dirs(spark, sf_dir, replay_spy):
+    """A stream-stream join is sized by the sum of BOTH staged dirs,
+    not by whichever source was built last, and replays to the same
+    rows as its batch twin."""
+    from flink_demo_spark.sources.streams import (
+        _stage_stream_dir,
+        documents_stream,
+        staged_parquet_bytes,
+    )
+    from flink_demo_spark.streaming.runner import (
+        replay_input_bytes,
+        replay_partitions,
+    )
+
+    def joined(ev, docs):
+        return ev.select("event_id", "user_id").join(
+            docs.select(F.col("doc_id").alias("user_id"), "lang"), "user_id"
+        )
+
+    sdf = joined(events_stream(spark, sf_dir), documents_stream(spark, sf_dir))
+    total = sum(
+        staged_parquet_bytes(_stage_stream_dir(sf_dir, t))
+        for t in ("events", "documents")
+    )
+    assert replay_input_bytes(sdf) == total
+    got = run_available_now(sdf, output_mode="append").collect()
+    assert replay_spy["parts"] == [replay_partitions("32", total, False)]
+    want = joined(
+        load_table(spark, sf_dir, "events"), load_table(spark, sf_dir, "documents")
+    ).collect()
+    assert len(want) > 0
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+def test_runner_restores_partitions_on_start_failure(spark, sf_dir, replay_spy):
+    """A start-time AnalysisException (complete mode without an
+    aggregation) must not leave the session clamped: the restore wraps
+    writer.start()."""
+    ev = events_stream(spark, sf_dir)
+    with pytest.raises(Exception):
+        run_available_now(ev.select("event_id"), output_mode="complete")
+    assert replay_spy["parts"] == ["8"]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+
+
 def test_buffered_cep_handles_out_of_order_batches(spark):
     """Flink CEP's watermark-sorted buffer: an earlier event arriving
     in a LATER micro-batch is re-ordered before the NFA consumes it.

@@ -4,8 +4,10 @@ PLANS.md — a reviewable record that each operator compiles to the plan
 we want at scale (broadcasts on small dims, pushed filters, pruned
 scans, partial aggregation, no cartesian products). Regenerate with:
     python tools/dump_plans.py
-The plan-shape assertions live in tests/test_plan_properties.py; this
-artifact is the human-readable companion.
+To compare plans before and after a change, run it on both commits and
+diff the two PLANS.md files. The plan-shape assertions live in
+tests/test_plan_properties.py; this artifact is the human-readable
+companion.
 """
 
 from __future__ import annotations
