@@ -140,13 +140,8 @@ def main() -> None:
         n_events = load_table(spark, SF_DIR, "events").count()
         for _ in range(3):
             t0 = time.perf_counter()
-            # scan_guard: size-conditional single-row-group exchange
-            # (round 12, SCALING.md) — no-op at sf0.1 (2.6 MB, where
-            # the exchange costs 18%), 142k -> 307k ev/s at sf1
             run_available_now(
-                tumbling_agg(
-                    events_stream(spark, SF_DIR, scan_guard=True)
-                ),
+                tumbling_agg(events_stream(spark, SF_DIR)),
                 output_mode="complete",
             )
             eps = round(n_events / (time.perf_counter() - t0))

@@ -12,7 +12,7 @@ Spark side: ``dsum`` / ``davg``. Oracle side: the matching SQL is
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
 
@@ -153,4 +153,14 @@ def oratio_r(
     return (
         f"(CAST((CASE WHEN {n} < 0 THEN -1 ELSE 1 END) * "
         f"((2 * ABS({n}) + {d}) // (2 * {d})) AS DOUBLE) / {float(10 ** out)})"
+    )
+
+
+def first_vectors(emb: DataFrame, k: int) -> list[tuple[int, list[float]]]:
+    """The embeddings with ``vec_id < k`` as sorted ``(vec_id, vector)``
+    pairs: the deterministic seed centroids (and query points) the IVF
+    and k-means plans share with their oracles."""
+    return sorted(
+        (int(r.vec_id), [float(x) for x in r.embedding])
+        for r in emb.where(F.col("vec_id") < k).collect()
     )

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators import dedup, similarity, text
+from ._util import first_vectors
 from .registry import query
 
 _SW = ", ".join(f"'{s}'" for s in text.STOPWORDS)
@@ -1695,10 +1696,7 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return (-F.array_max(F.array(*entries))["neg_i"]).cast("int")
 
-    seed_rows = sorted(
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.where(F.col("vec_id") < _PQ_K).collect()
-    )
+    seed_rows = first_vectors(emb, _PQ_K)
     seeds = [
         [(cid, vec[m * _PQ_D : (m + 1) * _PQ_D]) for cid, vec in seed_rows]
         for m in range(_PQ_M)
@@ -1743,10 +1741,7 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # precompute the ADC tables on the driver: dt[m][qslot][code-1] =
     # ||q_sub||^2 - 2<q_sub, c> + ||c||^2, identical op order to the
     # oracle's flat SQL, so the looked-up distance is bit-exact
-    q_rows = sorted(
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.where(F.col("vec_id") < 5).collect()
-    )
+    q_rows = first_vectors(emb, 5)
     qids = [qid for qid, _ in q_rows]
     dt = []
     for m in range(_PQ_M):
@@ -2071,10 +2066,7 @@ _IVF_TOPK_ORACLE = f"""
 )
 def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = sorted(
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.where(F.col("vec_id") < 8).collect()
-    )
+    cents = first_vectors(emb, 8)
     queries = emb.where(F.col("vec_id") < 5)
     return similarity.ivf_top_k(
         emb, queries, cents, id_col="vec_id", vec_col="embedding", k=5
@@ -2122,10 +2114,7 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def similarity_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = sorted(
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.where(F.col("vec_id") < 8).collect()
-    )
+    cents = first_vectors(emb, 8)
     queries = emb.where(F.col("vec_id") < 5)
     return similarity.ivf_top_k(
         emb, queries, cents, id_col="vec_id", vec_col="embedding", k=5,
@@ -2188,10 +2177,7 @@ def similarity_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    init = sorted(
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.where(F.col("vec_id") < 8).collect()
-    )
+    init = first_vectors(emb, 8)
     cents = similarity.kmeans_lloyd(emb, init, iterations=1)
     assigned = similarity.ivf_assign(emb, cents, sim_col="__sim")
     return assigned.select(
@@ -2242,10 +2228,7 @@ _SEM_COS = _IVF_COS.format(a="u.ev", b="a.ev")
 )
 def embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = sorted(
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.where(F.col("vec_id") < 8).collect()
-    )
+    cents = first_vectors(emb, 8)
     assigned = similarity.ivf_assign(emb, cents, cell_col="cluster")
     # explicit renames break the self-join lineage so the cluster
     # equality is a real hash key (shuffled-on-cluster at scale),
@@ -3114,10 +3097,7 @@ def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def similarity_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    init = sorted(
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.where(F.col("vec_id") < 8).collect()
-    )
+    init = first_vectors(emb, 8)
     cents = similarity.kmeans_lloyd(emb, init, iterations=1)
     queries = emb.where(F.col("vec_id") < 5)
     return similarity.ivf_top_k(
@@ -3488,10 +3468,7 @@ def similarity_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("query_id", "neighbor_id")
     # 8-row bounded collect: the same fixed-centroid seed
     # similarity_ivf_topk documents
-    cents = sorted(
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.where(F.col("vec_id") < 8).collect()
-    )
+    cents = first_vectors(emb, 8)
     ivf = similarity.ivf_top_k(
         emb, queries, cents, id_col="vec_id", vec_col="embedding", k=5
     ).select("query_id", "neighbor_id")

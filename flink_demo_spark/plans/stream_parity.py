@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from ..sources.streams import events_stream
 from ..streaming.runner import run_available_now
 from ..streaming.windows import interval_join_stream, tumbling_agg
+from ._util import first_vectors
 from .registry import query
 
 
@@ -1039,16 +1040,11 @@ def streaming_cep_order_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def streaming_timeout_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.streams import eof_pad_hours, events_stream_with_eof
+    from ..sources.streams import eof_pad_hours
     from ..streaming.stateful import timeout_detector
 
     horizon_ms = 2 * 3600 * 1000
-    ev = events_stream_with_eof(
-        spark,
-        sf_dir,
-        watermark="10 minutes",
-        pad_hours=eof_pad_hours(horizon_ms),
-    )
+    ev = events_stream(spark, sf_dir, pad_hours=eof_pad_hours(horizon_ms))
     tagged = ev.where(
         (F.col("user_id") >= 0)
         & (
@@ -1335,10 +1331,7 @@ def streaming_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.streams import embeddings_stream
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = sorted(
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.where(F.col("vec_id") < 8).collect()
-    )
+    cents = first_vectors(emb, 8)
     index = similarity.pack_cells(similarity.ivf_assign(emb, cents))
 
     feed = embeddings_stream(spark, sf_dir).where(F.col("vec_id") < 5)
@@ -1443,10 +1436,7 @@ def streaming_similarity_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.streams import embeddings_stream
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = sorted(
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.where(F.col("vec_id") < 8).collect()
-    )
+    cents = first_vectors(emb, 8)
     index = similarity.pack_cells(similarity.ivf_assign(emb, cents))
 
     feed = embeddings_stream(spark, sf_dir).where(F.col("vec_id") < 5)
@@ -1605,10 +1595,7 @@ def streaming_ivf_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.streams import embeddings_stream
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = sorted(
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.where(F.col("vec_id") < 8).collect()
-    )
+    cents = first_vectors(emb, 8)
     # scan_guard: per-row centroid dot products are the whole query
     # (round 12; 1.94 -> 0.9 s at sf1)
     feed = embeddings_stream(spark, sf_dir, scan_guard=True)
@@ -1652,10 +1639,7 @@ def streaming_similarity_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFra
     from ..sources.streams import embeddings_stream
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = sorted(
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.where(F.col("vec_id") < 8).collect()
-    )
+    cents = first_vectors(emb, 8)
     index = similarity.pack_cells(similarity.ivf_assign(emb, cents))
 
     feed = embeddings_stream(spark, sf_dir).where(F.col("vec_id") < 5)
@@ -3741,6 +3725,45 @@ def streaming_session_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _evicting_session_quantiles(
+    spark: SparkSession, sf_dir: str, chunks: int
+) -> DataFrame:
+    """Session-duration quantiles from the evicting operator over an
+    EOF-padded events replay cut into ``chunks`` micro-batches."""
+    from ..sources.streams import eof_pad_hours
+    from ..streaming.stateful import session_durations_evicting
+
+    gap_ms = 3_600_000  # pad derived from the SAME constant (r12 ADVICE)
+    ev = events_stream(
+        spark, sf_dir, chunks=chunks, pad_hours=eof_pad_hours(gap_ms)
+    )
+    per_session = run_available_now(
+        session_durations_evicting(ev, gap_ms=gap_ms), output_mode="append"
+    )
+    d = per_session.where(F.col("user_id") >= 0)  # drop the sentinel
+    c = d.groupBy("dur_s").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    r = c.select(
+        "dur_s",
+        F.sum("cnt")
+        .over(
+            Window.orderBy("dur_s").rowsBetween(
+                Window.unboundedPreceding, Window.currentRow
+            )
+        )
+        .alias("cum"),
+        F.sum("cnt").over(Window.partitionBy(F.lit(1))).alias("n"),
+    )
+    qcol = lambda q, nm: F.min(  # noqa: E731
+        F.when(F.expr(f"cum >= ({q} * n + 99) DIV 100"), F.col("dur_s"))
+    ).cast("long").alias(nm)
+    return r.agg(
+        F.max("n").cast("long").alias("n_sessions"),
+        qcol(50, "p50_s"),
+        qcol(90, "p90_s"),
+        qcol(99, "p99_s"),
+    )
+
+
 @query(
     "streaming_session_duration_v2",
     oracle=_session_dur_oracle_ref(),
@@ -3766,38 +3789,7 @@ def streaming_session_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_session_duration_v2(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..sources.streams import eof_pad_hours, events_stream_with_eof
-    from ..streaming.stateful import session_durations_evicting
-
-    gap_ms = 3_600_000  # pad derived from the SAME constant (r12 ADVICE)
-    ev = events_stream_with_eof(
-        spark, sf_dir, watermark="10 minutes", pad_hours=eof_pad_hours(gap_ms)
-    )
-    per_session = run_available_now(
-        session_durations_evicting(ev, gap_ms=gap_ms), output_mode="append"
-    )
-    d = per_session.where(F.col("user_id") >= 0)  # drop the sentinel
-    c = d.groupBy("dur_s").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    r = c.select(
-        "dur_s",
-        F.sum("cnt")
-        .over(
-            Window.orderBy("dur_s").rowsBetween(
-                Window.unboundedPreceding, Window.currentRow
-            )
-        )
-        .alias("cum"),
-        F.sum("cnt").over(Window.partitionBy(F.lit(1))).alias("n"),
-    )
-    qcol = lambda q, nm: F.min(  # noqa: E731
-        F.when(F.expr(f"cum >= ({q} * n + 99) DIV 100"), F.col("dur_s"))
-    ).cast("long").alias(nm)
-    return r.agg(
-        F.max("n").cast("long").alias("n_sessions"),
-        qcol(50, "p50_s"),
-        qcol(90, "p90_s"),
-        qcol(99, "p99_s"),
-    )
+    return _evicting_session_quantiles(spark, sf_dir, chunks=1)
 
 
 @query(
@@ -3823,38 +3815,7 @@ def streaming_session_duration_v2(
 def streaming_session_duration_v2_multi(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..sources.streams import eof_pad_hours, events_stream_with_eof_split
-    from ..streaming.stateful import session_durations_evicting
-
-    gap_ms = 3_600_000  # pad derived from the SAME constant (r12 ADVICE)
-    ev = events_stream_with_eof_split(
-        spark, sf_dir, n_chunks=3, pad_hours=eof_pad_hours(gap_ms)
-    )
-    per_session = run_available_now(
-        session_durations_evicting(ev, gap_ms=gap_ms), output_mode="append"
-    )
-    d = per_session.where(F.col("user_id") >= 0)  # drop the sentinel
-    c = d.groupBy("dur_s").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    r = c.select(
-        "dur_s",
-        F.sum("cnt")
-        .over(
-            Window.orderBy("dur_s").rowsBetween(
-                Window.unboundedPreceding, Window.currentRow
-            )
-        )
-        .alias("cum"),
-        F.sum("cnt").over(Window.partitionBy(F.lit(1))).alias("n"),
-    )
-    qcol = lambda q, nm: F.min(  # noqa: E731
-        F.when(F.expr(f"cum >= ({q} * n + 99) DIV 100"), F.col("dur_s"))
-    ).cast("long").alias(nm)
-    return r.agg(
-        F.max("n").cast("long").alias("n_sessions"),
-        qcol(50, "p50_s"),
-        qcol(90, "p90_s"),
-        qcol(99, "p99_s"),
-    )
+    return _evicting_session_quantiles(spark, sf_dir, chunks=3)
 
 
 @query(

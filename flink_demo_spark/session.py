@@ -78,6 +78,13 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Python workers import this package (pandas stages pickle its
+        # functions by reference); put its parent dir on their path so
+        # they do not depend on the driver's cwd or PYTHONPATH
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
         # local test data is a single small parquet per table: the 128m
         # default makes every scan a single task. 8m splits scans across
         # cores (measured ~25% on scan-bound queries at sf0.1). On a real

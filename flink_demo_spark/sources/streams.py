@@ -5,11 +5,36 @@
   (``official-tutorial/.../base/TestSource.java:122-147``), which
   replays elements with explicit event times. Event time comes from
   the data; watermark via ``withWatermark``.
+- ``documents_stream`` / ``embeddings_stream``: arrival-order replays
+  of the corpus and vector tables.
 - ``rate_stream``: synthetic generator (reference
   ``TaxiRideGenerator.java:37-64``, ``ClickEventGenerator.java:50-56``)
   mapped deterministically from the rate source's (timestamp, value).
 - ``socket_stream`` / ``kafka_stream``: thin wrappers over the
   built-in connectors (reference Source.scala:99-155).
+
+Staging. The file stream source reads a directory, so every replay
+reads a dir under ``$TMPDIR/flink_demo_spark_stream/<sf_dir key>/``.
+A table replayed whole (``chunks=1``, no EOF pad) reads a dir holding
+one symlink to ``<table>.parquet``. Every other events replay reads a
+dir keyed by ``(chunks, pad_hours, source mtime_ns)``, built once:
+
+- ``chunks=1`` symlinks the source file; ``chunks>1`` writes the
+  (ts, event_id)-sorted table as ``chunks`` equal slices whose mtimes
+  (source mtime + 10 s, + 20 s, ...) fix the replay order, so no event
+  is ever late across chunk boundaries.
+- ``pad_hours`` adds the EOF sentinel: one row (user_id = -1) stamped
+  ``pad_hours`` past the last event, with the newest mtime. It drags
+  the final watermark past every gap horizon, so evicting operators
+  flush their open state before the replay stops — the bounded-replay
+  analogue of Flink's end-of-input MAX_WATERMARK. Derive the pad with
+  :func:`eof_pad_hours`.
+- A ``_done`` marker is written last; a dir without it is rebuilt. A
+  regenerated source (new mtime) or another pad builds a new dir and
+  never touches one a concurrent replay may be reading.
+
+``maxFilesPerTrigger=1`` is set iff ``chunks > 1``, so a chunked
+replay runs one micro-batch per chunk (plus the sentinel's).
 """
 
 from __future__ import annotations
@@ -101,28 +126,21 @@ def _ensure_symlink(target: str, link: str) -> None:
             ) from None
 
 
+def _stage_root(sf_dir: str) -> str:
+    key = sf_dir.strip("/").replace("/", "_")
+    return os.path.join(tempfile.gettempdir(), "flink_demo_spark_stream", key)
+
+
 def _stage_stream_dir(sf_dir: str, table: str) -> str:
     """Spark's file stream source requires a directory; stage a /tmp
     dir holding a symlink to the single parquet file."""
-    key = sf_dir.strip("/").replace("/", "_")
-    d = os.path.join(tempfile.gettempdir(), "flink_demo_spark_stream", key, table)
+    d = os.path.join(_stage_root(sf_dir), table)
     os.makedirs(d, exist_ok=True)
     _ensure_symlink(
         os.path.join(sf_dir, f"{table}.parquet"),
         os.path.join(d, f"{table}.parquet"),
     )
     return d
-
-
-def staged_parquet_bytes(staged_dir: str) -> int:
-    """Total bytes of the parquet files in a staged stream dir (symlinks
-    followed): the size the replay runner and :func:`_scan_guard` act
-    on, one total per replay."""
-    return sum(
-        os.path.getsize(os.path.join(staged_dir, f))
-        for f in os.listdir(staged_dir)
-        if f.endswith(".parquet")
-    )
 
 
 def eof_pad_hours(gap_ms: int, watermark_ms: int = 600_000) -> int:
@@ -140,71 +158,18 @@ def eof_pad_hours(gap_ms: int, watermark_ms: int = 600_000) -> int:
     return int(math.ceil((gap_ms + watermark_ms) / 3_600_000.0)) + 1
 
 
-SCAN_GUARD_THRESHOLD_BYTES = 8 << 20  # 8 MiB, see _scan_guard
+def _write_parquet_atomic(table: "pyarrow.Table", path: str, mtime: float) -> None:
+    """Write ``table`` to ``path`` stamped ``mtime`` via a pid-suffixed
+    dot-file and ``os.replace``: racing stagers of one version write
+    byte-identical files, and the file stream source skips dot-files,
+    so a replay never lists a half-written one."""
+    import pyarrow.parquet as pq
 
-
-def _scan_guard(
-    df: DataFrame,
-    staged_dir: str,
-    spark: SparkSession,
-    threshold_bytes: int = SCAN_GUARD_THRESHOLD_BYTES,
-) -> DataFrame:
-    """Single-row-group scan guard (round 12): the staged replay is
-    ONE parquet file written as ONE row group, and Spark cannot split
-    a scan below a row group — so every per-row stage before the first
-    shuffle runs on a single core no matter the cluster size. When the
-    staged bytes exceed the threshold, repartition the raw feed to the
-    shuffle partition count (one projected-row exchange buys full-width
-    execution of the per-row compute). Below it the exchange's fixed
-    cost exceeds the win — measured crossover: −18% at a 2.6 MB events
-    file, +115% at 16.4 MB, +610% on a 158 MB sf10 document corpus
-    (SCALING.md round 12). Gate-scale files (sf0.01) stay under the
-    threshold, so oracle plans there are unchanged; both sides of a
-    scale decade sit above it, so exponent methodology stays uniform.
-
-    The threshold reads TOTAL staged parquet bytes at plan-build time
-    (re-listed per call): for multi-file stagings (eof_split chunks)
-    the decision is about the whole replay, not any single file — a
-    consumer staging mixed-size files gets one decision for the sum,
-    by design (round-12 verdict nit, pinned here).
-
-    REPLAY-ONLY assumption (round-12 ADVICE): the exchange is a
-    round-robin ``repartition(n)``, which is NOT deterministic across
-    task retries — fine for the bounded availableNow replays these
-    sources feed (any retry reruns the whole batch), but a generic
-    always-on pipeline writing through a transactional/2PC sink should
-    repartition by a stable key column instead to keep exactly-once
-    under partial retry."""
-    if staged_parquet_bytes(staged_dir) <= threshold_bytes:
-        return df
-    return df.repartition(
-        int(spark.conf.get("spark.sql.shuffle.partitions"))
-    )
-
-
-def events_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    watermark: str | None = "10 minutes",
-    max_files_per_trigger: int | None = None,
-    scan_guard: bool = False,
-) -> DataFrame:
-    """Replay the events table as a stream with its event-time column.
-    ``scan_guard=True`` applies :func:`_scan_guard` for consumers whose
-    pre-shuffle per-row work is the expensive stage."""
-    from ..catalog import normalize_events_ts
-
-    apply_runtime_confs(spark)
-    staged = _stage_stream_dir(sf_dir, "events")
-    reader = spark.readStream.schema(_events_raw_schema(staged))
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = normalize_events_ts(reader.parquet(staged))
-    if watermark:
-        df = df.withWatermark("ts", watermark)
-    if scan_guard:
-        df = _scan_guard(df, staged, spark)
-    return df
+    head, tail = os.path.split(path)
+    tmp = os.path.join(head, f".{tail}.tmp{os.getpid()}")
+    pq.write_table(table, tmp)
+    os.utime(tmp, (mtime, mtime))
+    os.replace(tmp, path)
 
 
 def _write_eof_sentinel(
@@ -212,17 +177,15 @@ def _write_eof_sentinel(
     schema: "pyarrow.Schema",
     max_ts: "datetime.datetime",
     pad_hours: int,
-    mtime: float | None = None,
+    mtime: float,
 ) -> None:
     """Write the one-row EOF sentinel (user_id = -1, stamped
     ``pad_hours`` past ``max_ts``) with the events file's physical
-    ``schema``, via a pid-suffixed tmp file and an atomic replace so
-    concurrent stagers race safely. ``mtime`` pins the file's mtime,
-    which orders it in a file-stream replay."""
+    ``schema`` (incl. the ns timestamp encoding), so the stream
+    reader's sniffed schema reads it with the data files."""
     import datetime
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     cols = {
         "event_id": [-1],
@@ -232,159 +195,131 @@ def _write_eof_sentinel(
         "value": [0.0],
         "props": ["{}"],
     }
-    tmp = f"{path}.tmp{os.getpid()}"
-    pq.write_table(
+    _write_parquet_atomic(
         pa.table(
             {f.name: pa.array(cols[f.name], type=f.type) for f in schema},
             schema=schema,
         ),
-        tmp,
+        path,
+        mtime,
     )
-    if mtime is not None:
-        os.utime(tmp, (mtime, mtime))
-    os.replace(tmp, path)
 
 
-def events_stream_with_eof(
+def _stage_events(sf_dir: str, chunks: int, pad_hours: int | None) -> str:
+    """Stage the events replay directory under the module's staging
+    rule and return it."""
+    if chunks == 1 and pad_hours is None:
+        return _stage_stream_dir(sf_dir, "events")
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    real = os.path.join(sf_dir, "events.parquet")
+    src_mtime = os.stat(real).st_mtime_ns
+    eof = "" if pad_hours is None else f"_eof{pad_hours}h"
+    d = os.path.join(_stage_root(sf_dir), f"events_c{chunks}{eof}_v{src_mtime}")
+    done = os.path.join(d, "_done")
+    if os.path.exists(done):
+        return d
+    os.makedirs(d, exist_ok=True)
+    # deterministic mtimes (replay order for the file stream source):
+    # derived from the source mtime, not wall clock, so concurrent
+    # builders of the same version agree exactly
+    base = src_mtime / 1e9
+    if chunks == 1:
+        _ensure_symlink(real, os.path.join(d, "events.parquet"))
+        t = pq.read_table(real, columns=["ts"])
+        schema = pq.read_schema(real)
+    else:
+        t = pq.read_table(real)
+        t = t.take(
+            pc.sort_indices(
+                t, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]
+            )
+        )
+        schema = t.schema
+        cuts = [t.num_rows * i // chunks for i in range(chunks + 1)]
+        for i in range(chunks):
+            _write_parquet_atomic(
+                t.slice(cuts[i], cuts[i + 1] - cuts[i]),
+                os.path.join(d, f"chunk{i:02d}.parquet"),
+                base + 10 * (i + 1),
+            )
+    if pad_hours is not None:
+        _write_eof_sentinel(
+            os.path.join(d, "zz_eof.parquet"),
+            schema,
+            pc.max(t.column("ts")).as_py(),
+            pad_hours,
+            base + 10 * (chunks + 2),
+        )
+    with open(done, "w") as f:
+        f.write("ok\n")
+    return d
+
+
+def events_stream(
     spark: SparkSession,
     sf_dir: str,
     watermark: str | None = "10 minutes",
-    pad_hours: int = 3,
+    chunks: int = 1,
+    pad_hours: int | None = None,
 ) -> DataFrame:
-    """events_stream plus ONE sentinel row (user_id = -1) stamped
-    ``pad_hours`` past the real max event time. The sentinel drags the
-    final watermark beyond every real session's gap horizon, so
-    evicting stateful operators (``session_durations_evicting``) can
-    flush their open state via event-time timeout before the
-    availableNow replay stops — the bounded-replay analogue of Flink's
-    end-of-input MAX_WATERMARK. Consumers filter ``user_id >= 0``.
-
-    The sentinel file is staged next to the events symlink with the
-    SAME physical parquet schema (incl. the ns timestamp encoding),
-    so the stream reader's sniffed schema reads both files.
-    """
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    """Replay the events table as a stream with its event-time column:
+    ``chunks`` time-ordered files, one per trigger when ``chunks > 1``,
+    plus an EOF sentinel row ``pad_hours`` past the last event when a
+    pad is given (consumers filter ``user_id >= 0``). Staging is
+    described in the module docstring."""
     from ..catalog import normalize_events_ts
 
+    if chunks < 1:
+        raise ValueError(f"chunks must be >= 1, got {chunks}")
     apply_runtime_confs(spark)
-    src = _stage_stream_dir(sf_dir, "events")
-    d = src.rstrip("/") + "_eof"
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "events.parquet")
-    real = os.path.join(sf_dir, "events.parquet")
-    _ensure_symlink(real, link)
-    sentinel = os.path.join(d, "zz_eof.parquet")
-    # the /tmp cache outlives the source file: if events.parquet was
-    # regenerated (later max ts) a stale sentinel would no longer drag
-    # the watermark past the gap horizon and open sessions would never
-    # flush - rebuild whenever the source is newer (round-11 ADVICE)
-    if os.path.exists(sentinel) and (
-        os.stat(real).st_mtime_ns >= os.stat(sentinel).st_mtime_ns
-    ):
-        os.remove(sentinel)
-    if not os.path.exists(sentinel):
-        max_ts = pa.compute.max(
-            pq.read_table(link, columns=["ts"]).column("ts")
-        ).as_py()
-        _write_eof_sentinel(sentinel, pq.read_schema(link), max_ts, pad_hours)
-    reader = spark.readStream.schema(_events_raw_schema(d))
-    df = normalize_events_ts(reader.parquet(d))
+    staged = _stage_events(sf_dir, chunks, pad_hours)
+    reader = spark.readStream.schema(_events_raw_schema(staged))
+    if chunks > 1:
+        reader = reader.option("maxFilesPerTrigger", 1)
+    df = normalize_events_ts(reader.parquet(staged))
     if watermark:
         df = df.withWatermark("ts", watermark)
     return df
 
 
-def events_stream_with_eof_split(
+def _file_stream(
     spark: SparkSession,
     sf_dir: str,
-    n_chunks: int = 3,
-    watermark: str | None = "10 minutes",
-    pad_hours: int = 3,
+    table: str,
+    schema: StructType,
+    scan_guard: bool,
 ) -> DataFrame:
-    """``events_stream_with_eof`` replayed as ``n_chunks`` TIME-ORDERED
-    files with ``maxFilesPerTrigger=1`` — a genuinely multi-micro-batch
-    replay (n_chunks data batches + the sentinel batch + the final
-    timeout batch) instead of the single-batch contract. Because the
-    chunks are globally (ts, event_id)-sorted, every key's history
-    arrives in event-time order ACROSS batches and no event is ever
-    late (each chunk's min ts exceeds the previous chunk's
-    watermark), so evicting stateful operators must carry open state
-    over trigger boundaries — the exact path the round-12 real-horizon
-    timeout fix guards, now exercised by a registered query on every
-    driver run rather than only by a golden test.
+    """Replay ``table`` as an arrival-order stream (no event-time
+    column). The staged replay is ONE parquet file written as ONE row
+    group, and Spark cannot split a scan below a row group, so every
+    per-row stage before the first shuffle runs on a single core.
+    ``scan_guard=True`` repartitions the raw feed to the session's
+    shuffle partition count — one projected-row exchange that buys
+    full-width execution of heavy per-row work (measured: documents
+    6.6 -> 3.3 s on the 1.6 MB sf0.1 file, embeddings 2.2x at a 3.6 MB
+    sf1 file; SCALING.md round 12).
 
-    Chunks are staged once per (sf_dir, n_chunks, source-mtime) under
-    /tmp: the source mtime is part of the DIRECTORY name, so a
-    regenerated source builds into a FRESH dir instead of deleting
-    files a concurrent session may be mid-replay on (round-12 ADVICE —
-    the old delete-then-rewrite path could expose a half-built dir).
-    Racing builders of the same version write byte-identical files
-    with deterministic mtimes via pid-suffixed tmp + atomic
-    ``os.replace``; a ``_done`` marker written last makes the staging
-    crash-safe. Stale version dirs linger in /tmp (cheap, bounded by
-    datagen runs)."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from ..catalog import normalize_events_ts
-
+    The exchange is a round-robin ``repartition(n)``, which is NOT
+    deterministic across task retries — fine for the bounded
+    availableNow replays these sources feed (a retry reruns the whole
+    batch), but an always-on pipeline writing through a
+    transactional/2PC sink should repartition by a stable key column
+    to keep exactly-once under partial retry."""
     apply_runtime_confs(spark)
-    src = _stage_stream_dir(sf_dir, "events")
-    real = os.path.join(sf_dir, "events.parquet")
-    src_mtime = os.stat(real).st_mtime_ns
-    d = src.rstrip("/") + f"_eof_split{n_chunks}_v{src_mtime}"
-    os.makedirs(d, exist_ok=True)
-    done = os.path.join(d, "_done")
-    if not os.path.exists(done):
-        t = pq.read_table(real)
-        order = pc.sort_indices(
-            t, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]
-        )
-        t = t.take(order)
-        n = t.num_rows
-        # deterministic mtimes (replay order for the file stream
-        # source): derived from the source mtime, not wall clock, so
-        # concurrent builders of the same version agree exactly
-        base = src_mtime / 1e9
-        tmp_sfx = f".tmp{os.getpid()}"
-        cuts = [n * i // n_chunks for i in range(n_chunks + 1)]
-        for i in range(n_chunks):
-            p = os.path.join(d, f"chunk{i:02d}.parquet")
-            pq.write_table(t.slice(cuts[i], cuts[i + 1] - cuts[i]), p + tmp_sfx)
-            mt = base + 10 * (i + 1)
-            os.utime(p + tmp_sfx, (mt, mt))
-            os.replace(p + tmp_sfx, p)
-        # sentinel last (newest mtime): drags the final watermark past
-        # every gap horizon, same construction as events_stream_with_eof
-        _write_eof_sentinel(
-            os.path.join(d, "zz_eof.parquet"),
-            t.schema,
-            pc.max(t.column("ts")).as_py(),
-            pad_hours,
-            mtime=base + 10 * (n_chunks + 2),
-        )
-        with open(done, "w") as f:
-            f.write("ok\n")
-    reader = spark.readStream.schema(_events_raw_schema(d)).option(
-        "maxFilesPerTrigger", 1
-    )
-    df = normalize_events_ts(reader.parquet(d))
-    if watermark:
-        df = df.withWatermark("ts", watermark)
+    df = spark.readStream.schema(schema).parquet(_stage_stream_dir(sf_dir, table))
+    if scan_guard:
+        df = df.repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
     return df
 
 
 def documents_stream(
     spark: SparkSession, sf_dir: str, scan_guard: bool = False
 ) -> DataFrame:
-    """Replay the documents table as a stream (no event-time column —
-    corpus pipelines consume document feeds in arrival order).
-    ``scan_guard=True`` applies :func:`_scan_guard` for consumers whose
-    pre-shuffle per-row work (signatures, chunking) dominates."""
-    from pyspark.sql.types import StructField, StructType
-
+    """Replay the documents table as a stream — corpus pipelines
+    consume document feeds in arrival order. See :func:`_file_stream`
+    for ``scan_guard``."""
     schema = StructType(
         [
             StructField("doc_id", LongType()),
@@ -394,35 +329,16 @@ def documents_stream(
             StructField("n_chars", LongType()),
         ]
     )
-    apply_runtime_confs(spark)
-    staged = _stage_stream_dir(sf_dir, "documents")
-    df = spark.readStream.schema(schema).parquet(staged)
-    if scan_guard:
-        # documents carry HEAVY per-row work (shingling, hashing,
-        # chunking) — the exchange pays at every measured size
-        # (6.6 -> 3.3 s even on the 1.6 MB sf0.1 file), so the guard
-        # is unconditional here; cheap-row sources (events) keep the
-        # byte threshold
-        df = _scan_guard(df, staged, spark, threshold_bytes=0)
-    return df
+    return _file_stream(spark, sf_dir, "documents", schema, scan_guard)
 
 
 def embeddings_stream(
     spark: SparkSession, sf_dir: str, scan_guard: bool = False
 ) -> DataFrame:
     """Replay the embeddings table as a stream — the query-vector feed
-    of an online vector-search service (no event-time column; ANN
-    serving is arrival-order). ``scan_guard=True`` applies
-    :func:`_scan_guard` unconditionally, like documents: per-row
-    vector math dominates bytes (2.2x measured at a 3.6 MB sf1 file
-    on the IVF assignment serve)."""
-    from pyspark.sql.types import (
-        ArrayType,
-        FloatType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
+    of an online vector-search service (ANN serving is arrival-order).
+    See :func:`_file_stream` for ``scan_guard``."""
+    from pyspark.sql.types import ArrayType, FloatType, IntegerType
 
     schema = StructType(
         [
@@ -431,12 +347,7 @@ def embeddings_stream(
             StructField("label", IntegerType()),
         ]
     )
-    apply_runtime_confs(spark)
-    staged = _stage_stream_dir(sf_dir, "embeddings")
-    df = spark.readStream.schema(schema).parquet(staged)
-    if scan_guard:
-        df = _scan_guard(df, staged, spark, threshold_bytes=0)
-    return df
+    return _file_stream(spark, sf_dir, "embeddings", schema, scan_guard)
 
 
 def rate_stream(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:

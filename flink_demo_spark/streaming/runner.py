@@ -59,13 +59,21 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.streams import staged_parquet_bytes
-
 _MIN_PARTITIONS = 8
 _JVM_BYTES_PER_PARTITION = 8 << 20
 _PYTHON_BYTES_PER_PARTITION = 256 << 10
 _PYTHON_STAGE_NODES = ("InPandas", "InArrow", "PythonUDF", "EvalPython")
 _SHM_MAX_BYTES = 1 << 30
+
+
+def staged_parquet_bytes(staged_dir: str) -> int:
+    """Total bytes of the parquet files in a staged stream dir (symlinks
+    followed)."""
+    return sum(
+        os.path.getsize(os.path.join(staged_dir, f))
+        for f in os.listdir(staged_dir)
+        if f.endswith(".parquet")
+    )
 
 
 def replay_input_bytes(sdf: DataFrame) -> int | None:

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import importlib.util
 import os
+import subprocess
+import sys
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -64,3 +66,36 @@ def test_sample_order_rotates_away_from_green_rows():
     never = [n for n in names if n not in green]
     if len(never) >= 50:
         assert not (set(names[:50]) & green), set(names[:50]) & green
+
+
+def test_pandas_stage_runs_outside_repo_root(tmp_path):
+    """A driver started in another directory, with the package on its
+    sys.path only (no PYTHONPATH), runs a pandas stage whose Python
+    workers import the package: get_spark puts the package's parent
+    dir on the workers' path."""
+    script = f"""
+import sys
+sys.path.insert(0, {HERE!r})
+from flink_demo_spark.session import get_spark
+
+def f(pdf):
+    import flink_demo_spark  # what a pickled package function needs
+    return pdf
+
+spark = get_spark("outside_root", master="local[1]", shuffle_partitions=1)
+df = spark.createDataFrame([(7,)], "k long")
+print("ROWS", df.groupBy("k").applyInPandas(f, "k long").collect())
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "ROWS [Row(k=7)]" in out.stdout

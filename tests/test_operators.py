@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from flink_demo_spark.catalog import load_table
 from flink_demo_spark.operators import cep, dedup, similarity
+from flink_demo_spark.plans._util import first_vectors
 from flink_demo_spark.plans.datapipe import LSH_PLANES
 
 
@@ -1432,10 +1433,7 @@ def test_ivf_full_probe_equals_brute_force(spark, sf_dir):
     from flink_demo_spark.operators import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = sorted(
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.where(F.col("vec_id") < 8).collect()
-    )
+    cents = first_vectors(emb, 8)
     queries = emb.where(F.col("vec_id") < 3)
     ivf = {
         (r.query_id, r.rk, r.neighbor_id)
@@ -1471,10 +1469,7 @@ def test_kmeans_update_exact_means_and_objective(spark, sf_dir):
     ]
 
     emb = load_table(spark, sf_dir, "embeddings")
-    init = sorted(
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.where(F.col("vec_id") < 8).collect()
-    )
+    init = first_vectors(emb, 8)
 
     def objective(cents):
         row = (
@@ -2142,10 +2137,7 @@ def test_packed_cell_topk_matches_ivf_topk(spark, sf_dir):
     from flink_demo_spark.operators import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = sorted(
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.where(F.col("vec_id") < 8).collect()
-    )
+    cents = first_vectors(emb, 8)
     queries = emb.where(F.col("vec_id") < 50)
     want = {
         (r.query_id, r.rk): (r.neighbor_id, r.cosine_sim)

@@ -18,6 +18,7 @@ import duckdb
 
 from pyspark.sql import functions as F
 
+from flink_demo_spark.plans._util import first_vectors
 from flink_demo_spark.plans.registry import REGISTRY, _load_all
 
 _load_all()
@@ -169,13 +170,13 @@ def test_evicting_sessions_match_batch_multiset(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from flink_demo_spark.plans.behavior import _events
-    from flink_demo_spark.sources.streams import events_stream_with_eof
+    from flink_demo_spark.sources.streams import eof_pad_hours, events_stream
     from flink_demo_spark.streaming.runner import run_available_now
     from flink_demo_spark.streaming.stateful import (
         session_durations_evicting,
     )
 
-    ev = events_stream_with_eof(spark, sf_dir, watermark="10 minutes")
+    ev = events_stream(spark, sf_dir, pad_hours=eof_pad_hours(3_600_000))
     got_df = run_available_now(
         session_durations_evicting(ev), output_mode="append"
     )
@@ -307,10 +308,7 @@ def test_ivf_assign_formulations_identical(spark, sf_dir, monkeypatch):
     from flink_demo_spark.operators import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = sorted(
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.where(F.col("vec_id") < 40).collect()
-    )
+    cents = first_vectors(emb, 40)
     assert len(cents) == 40 > similarity._CENTROID_EXPR_MAX
 
     def snap(df):

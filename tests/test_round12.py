@@ -7,9 +7,7 @@
    session windows, which never fire before gap expiry).
 2. ``attribution_evicting`` guards null click pages with ``pd.isna``
    (nullable LongType arrives in pandas as float64/NaN, not None).
-3. ``events_stream_with_eof`` rebuilds a stale EOF sentinel when the
-   source parquet was regenerated, and both stagers tolerate the
-   symlink-creation race.
+3. The stream stager tolerates the symlink-creation race.
 """
 
 from __future__ import annotations
@@ -18,7 +16,6 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import functions as F
 
 MIN_MS = 60_000
 BASE_US = 1_704_067_200_000_000  # 2024-01-01 00:00:00 UTC in µs
@@ -55,13 +52,13 @@ def _write_events(path: str, rows: list[tuple], mtime: float | None = None):
         os.utime(path, (mtime, mtime))
 
 
-def _stream_from_dir(spark, d: str, max_files_per_trigger: int | None):
+def _stream_from_dir(spark, d: str, one_file_per_trigger: bool):
     from flink_demo_spark.catalog import normalize_events_ts
     from flink_demo_spark.sources.streams import _events_raw_schema
 
     reader = spark.readStream.schema(_events_raw_schema(d))
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    if one_file_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", 1)
     return normalize_events_ts(reader.parquet(d)).withWatermark(
         "ts", "10 minutes"
     )
@@ -106,7 +103,7 @@ def test_evicting_session_survives_multi_trigger(spark, tmp_path):
         mtime=now - 10,
     )
 
-    ev = _stream_from_dir(spark, d, max_files_per_trigger=1)
+    ev = _stream_from_dir(spark, d, one_file_per_trigger=True)
     got = sorted(
         (r["user_id"], r["dur_s"])
         for r in run_available_now(
@@ -118,75 +115,6 @@ def test_evicting_session_survives_multi_trigger(spark, tmp_path):
     # 110min); user9: 0s session closed by its own 120min event (whose
     # open successor stays in state - horizon 180min, never reached).
     assert got == [(1, 2700), (2, 0), (9, 0)]
-
-
-def test_evicting_session_multi_trigger_matches_single_batch(
-    spark, sf_dir, tmp_path
-):
-    """Same operator, real sf0.001 events replayed file-at-a-time vs
-    the all-at-once replay: the per-session multiset must be identical
-    (the single-batch contract was the only thing masking the old
-    premature flush)."""
-    import shutil
-
-    from flink_demo_spark.sources.streams import events_stream_with_eof
-    from flink_demo_spark.streaming.runner import run_available_now
-    from flink_demo_spark.streaming.stateful import (
-        session_durations_evicting,
-    )
-
-    single = sorted(
-        (r["user_id"], r["dur_s"])
-        for r in run_available_now(
-            session_durations_evicting(
-                events_stream_with_eof(spark, sf_dir)
-            ),
-            output_mode="append",
-        )
-        .where(F.col("user_id") >= 0)
-        .collect()
-    )
-
-    # split the events table into 3 time-ordered files + the same EOF
-    # sentinel, replayed one file per trigger
-    d = str(tmp_path / "ev_split")
-    os.makedirs(d)
-    t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
-    t = t.sort_by([("ts", "ascending"), ("event_id", "ascending")])
-    n = t.num_rows
-    now = os.path.getmtime(d)
-    cuts = [0, n // 3, 2 * n // 3, n]
-    for i in range(3):
-        pq.write_table(
-            t.slice(cuts[i], cuts[i + 1] - cuts[i]),
-            os.path.join(d, f"part{i}.parquet"),
-        )
-        os.utime(
-            os.path.join(d, f"part{i}.parquet"),
-            (now - 50 + 10 * i, now - 50 + 10 * i),
-        )
-    # reuse the staged sentinel (same max ts -> same horizon drag)
-    from flink_demo_spark.sources.streams import _stage_stream_dir
-
-    staged_eof = _stage_stream_dir(sf_dir, "events").rstrip("/") + "_eof"
-    shutil.copy(
-        os.path.join(staged_eof, "zz_eof.parquet"),
-        os.path.join(d, "zz_eof.parquet"),
-    )
-    os.utime(
-        os.path.join(d, "zz_eof.parquet"), (now - 10, now - 10)
-    )
-
-    ev = _stream_from_dir(spark, d, max_files_per_trigger=1)
-    multi = sorted(
-        (r["user_id"], r["dur_s"])
-        for r in run_available_now(
-            session_durations_evicting(ev), output_mode="append"
-        )
-        .where(F.col("user_id") >= 0)
-        .collect()
-    )
-    assert multi == single
 
 
 def test_attribution_evicting_null_page_click(spark, tmp_path):
@@ -213,7 +141,7 @@ def test_attribution_evicting_null_page_click(spark, tmp_path):
             (5, m(2), 2, "purchase", 3.0, "{}"),
         ],
     )
-    ev = _stream_from_dir(spark, d, max_files_per_trigger=None)
+    ev = _stream_from_dir(spark, d, one_file_per_trigger=False)
     got = sorted(
         (r["user_id"], r["page"], r["cents"])
         for r in run_available_now(
@@ -221,45 +149,6 @@ def test_attribution_evicting_null_page_click(spark, tmp_path):
         ).collect()
     )
     assert got == [(2, 7, 300)]
-
-
-def test_eof_sentinel_rebuilt_when_source_regenerated(spark, tmp_path):
-    """The /tmp sentinel cache outlives the source file: after
-    events.parquet is regenerated with a later max ts, the sentinel
-    must be rebuilt past the NEW horizon (a stale one would silently
-    stop flushing open sessions)."""
-    import shutil
-    import time
-
-    from flink_demo_spark.sources.streams import events_stream_with_eof
-
-    d = str(tmp_path / "sfdir")
-    os.makedirs(d)
-    m = lambda i: BASE_US + i * MIN_MS * 1000  # noqa: E731
-    _write_events(
-        os.path.join(d, "events.parquet"), [(1, m(0), 1, "view", 0.0, "{}")]
-    )
-    events_stream_with_eof(spark, d)
-    import tempfile
-
-    key = d.strip("/").replace("/", "_")
-    staged = os.path.join(
-        tempfile.gettempdir(), "flink_demo_spark_stream", key, "events_eof"
-    )
-    sentinel = os.path.join(staged, "zz_eof.parquet")
-    ts1 = pq.read_table(sentinel, columns=["ts"]).column("ts")[0].as_py()
-
-    time.sleep(0.02)
-    # regenerate with max ts 10h later (atomic replace = fresh mtime)
-    tmp = os.path.join(d, "events.parquet.new")
-    _write_events(tmp, [(1, m(600), 1, "view", 0.0, "{}")])
-    os.replace(tmp, os.path.join(d, "events.parquet"))
-    events_stream_with_eof(spark, d)
-    ts2 = pq.read_table(sentinel, columns=["ts"]).column("ts")[0].as_py()
-    assert ts2 > ts1
-    # the rebuilt sentinel still pads past the new max event time
-    assert (ts2 - ts1).total_seconds() == 600 * 60
-    shutil.rmtree(os.path.dirname(staged), ignore_errors=True)
 
 
 def test_stage_symlink_race_tolerated(tmp_path):
@@ -403,12 +292,8 @@ def test_prequential_scan_twin_equals_walk(spark, sf_dir):
 
 def test_scan_guard_conditional(spark, sf_dir):
     """The single-row-group scan guard: documents (heavy per-row work)
-    always get the exchange; events below the byte threshold don't
-    (the exchange costs more than it buys on cheap rows)."""
-    from flink_demo_spark.sources.streams import (
-        documents_stream,
-        events_stream,
-    )
+    get the exchange when asked for, and only then."""
+    from flink_demo_spark.sources.streams import documents_stream
 
     def plan(df):
         return df._jdf.queryExecution().analyzed().toString()
@@ -418,8 +303,4 @@ def test_scan_guard_conditional(spark, sf_dir):
     )
     assert "Repartition" not in plan(
         documents_stream(spark, sf_dir)
-    )
-    # sf0.001 events are far below the 8 MiB threshold
-    assert "Repartition" not in plan(
-        events_stream(spark, sf_dir, scan_guard=True)
     )

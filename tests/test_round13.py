@@ -1,21 +1,15 @@
 """Round-13 regression suite: the round-12 VERDICT/ADVICE hardening.
 
-1. The single-row-group scan guard's 8 MiB events boundary is asserted
-   BOTH sides with synthetic files, and documents/embeddings guard
-   unconditionally (VERDICT #4 — the ceiling was invisible at gate
-   scale; this keeps it dead).
+1. documents/embeddings apply the single-row-group scan guard when
+   asked for it, whatever the file size.
 2. ``_stage_stream_dir`` replaces a DANGLING staged symlink instead of
    silently keeping it (ADVICE: os.path.exists follows links, so the
    old exists-check missed broken links and FileExistsError was
    swallowed).
-3. ``events_stream_with_eof_split`` stages into a SOURCE-MTIME-VERSIONED
-   dir — a regenerated source builds fresh instead of deleting files a
-   concurrent replay may hold open; racing builders agree bit-for-bit
-   (deterministic mtimes).
-4. ``eof_pad_hours`` derives the sentinel pad from the gap so raising
+3. ``eof_pad_hours`` derives the sentinel pad from the gap so raising
    the session gap can never silently starve the final flush
    (pad > gap + watermark, ADVICE on streaming_session_duration_v2_multi).
-5. The prequential packed-scan key has a LOUD page-domain guard on both
+4. The prequential packed-scan key has a LOUD page-domain guard on both
    engines: an out-of-[0, 2^20) page errors instead of corrupting the
    running-max packing (ADVICE on plans/behavior.py).
 """
@@ -34,27 +28,6 @@ from tests.test_round12 import BASE_US, MIN_MS, _write_events
 
 def _analyzed(df) -> str:
     return df._jdf.queryExecution().analyzed().toString()
-
-
-def _write_big_events(path: str, n_rows: int = 450_000) -> None:
-    """Incompressible events file (~10.8 MiB > the 8 MiB guard
-    threshold): random int64/double payloads defeat parquet encodings."""
-    import numpy as np
-
-    rng = np.random.default_rng(13)
-    t = pa.table(
-        {
-            "event_id": pa.array(rng.integers(0, 2**62, n_rows), pa.int64()),
-            "ts": pa.array(
-                BASE_US + rng.integers(0, 10**9, n_rows), pa.timestamp("us")
-            ),
-            "user_id": pa.array(rng.integers(0, 2**62, n_rows), pa.int64()),
-            "event_type": pa.array(["view"] * n_rows, pa.string()),
-            "value": pa.array(rng.random(n_rows), pa.float64()),
-            "props": pa.array(["{}"] * n_rows, pa.string()),
-        }
-    )
-    pq.write_table(t, path)
 
 
 def _write_docs(path: str) -> None:
@@ -84,43 +57,9 @@ def _write_embs(path: str) -> None:
 def _rm_staged(sf_dir: str) -> None:
     import shutil
 
-    key = sf_dir.strip("/").replace("/", "_")
-    shutil.rmtree(
-        os.path.join(tempfile.gettempdir(), "flink_demo_spark_stream", key),
-        ignore_errors=True,
-    )
+    from flink_demo_spark.sources.streams import _stage_root
 
-
-def test_scan_guard_events_boundary_both_sides(spark, tmp_path):
-    """events: no exchange below 8 MiB staged bytes, exchange above —
-    asserted with synthetic files on BOTH sides of the threshold
-    (round-12 VERDICT #4)."""
-    from flink_demo_spark.sources.streams import events_stream
-
-    small = str(tmp_path / "small_sf")
-    os.makedirs(small)
-    _write_events(
-        os.path.join(small, "events.parquet"),
-        [(1, BASE_US, 1, "view", 0.0, "{}")],
-    )
-    big = str(tmp_path / "big_sf")
-    os.makedirs(big)
-    _write_big_events(os.path.join(big, "events.parquet"))
-    assert (
-        os.path.getsize(os.path.join(big, "events.parquet")) > 8 << 20
-    ), "synthetic file must exceed the guard threshold"
-    try:
-        assert "Repartition" not in _analyzed(
-            events_stream(spark, small, scan_guard=True)
-        )
-        assert "Repartition" in _analyzed(
-            events_stream(spark, big, scan_guard=True)
-        )
-        # guard off -> never an exchange, regardless of size
-        assert "Repartition" not in _analyzed(events_stream(spark, big))
-    finally:
-        _rm_staged(small)
-        _rm_staged(big)
+    shutil.rmtree(_stage_root(sf_dir), ignore_errors=True)
 
 
 def test_scan_guard_docs_embeddings_unconditional(spark, tmp_path):
@@ -171,65 +110,6 @@ def test_dangling_stage_symlink_replaced(tmp_path):
         assert S._stage_stream_dir(d, "events") == staged
         assert os.path.exists(link), "dangling link must be rebuilt"
         assert os.path.realpath(link) == os.path.realpath(real)
-    finally:
-        _rm_staged(d)
-
-
-def test_eof_split_staging_versioned_no_delete(spark, tmp_path):
-    """Regenerating the source builds a FRESH version dir; the old
-    version's files survive untouched (a concurrent replay may hold
-    them), and chunk mtimes are deterministic (derived from the source
-    mtime, not wall clock) so racing builders agree."""
-    import glob
-    import time
-
-    from flink_demo_spark.sources.streams import events_stream_with_eof_split
-
-    d = str(tmp_path / "sfdir")
-    os.makedirs(d)
-    real = os.path.join(d, "events.parquet")
-    m = lambda i: BASE_US + i * MIN_MS * 1000  # noqa: E731
-    _write_events(
-        real,
-        [(i, m(i), 1, "view", 0.0, "{}") for i in range(6)],
-    )
-    key = d.strip("/").replace("/", "_")
-    base = os.path.join(
-        tempfile.gettempdir(), "flink_demo_spark_stream", key
-    )
-    try:
-        events_stream_with_eof_split(spark, d, n_chunks=3)
-        v1 = glob.glob(os.path.join(base, "events_eof_split3_v*"))
-        assert len(v1) == 1 and os.path.exists(os.path.join(v1[0], "_done"))
-        chunks = sorted(
-            f for f in os.listdir(v1[0]) if f.startswith("chunk")
-        )
-        assert chunks == ["chunk00.parquet", "chunk01.parquet", "chunk02.parquet"]
-        # deterministic mtimes: source mtime + 10*(i+1), sentinel last
-        src_mt = os.stat(real).st_mtime_ns / 1e9
-        mts = [os.path.getmtime(os.path.join(v1[0], c)) for c in chunks]
-        assert mts == pytest.approx([src_mt + 10, src_mt + 20, src_mt + 30])
-        sentinel_mt = os.path.getmtime(os.path.join(v1[0], "zz_eof.parquet"))
-        assert sentinel_mt == pytest.approx(src_mt + 50)
-        stamp1 = {
-            f: os.stat(os.path.join(v1[0], f)).st_mtime_ns
-            for f in os.listdir(v1[0])
-        }
-
-        time.sleep(0.02)
-        tmp = real + ".new"
-        _write_events(
-            tmp, [(i, m(i), 2, "view", 0.0, "{}") for i in range(6)]
-        )
-        os.replace(tmp, real)
-        events_stream_with_eof_split(spark, d, n_chunks=3)
-        v2 = glob.glob(os.path.join(base, "events_eof_split3_v*"))
-        assert len(v2) == 2, "regenerated source must build a NEW version"
-        # the old version dir was not touched by the rebuild
-        assert stamp1 == {
-            f: os.stat(os.path.join(v1[0], f)).st_mtime_ns
-            for f in os.listdir(v1[0])
-        }
     finally:
         _rm_staged(d)
 
@@ -582,26 +462,18 @@ def test_mmr_lambda_curve_monotone(spark, sf_dir):
 
 
 def test_session_multi_pad_derived_at_composition(spark, sf_dir):
-    """streaming_session_duration_v2_multi composes the split source
+    """streaming_session_duration_v2_multi composes the chunked source
     with the evicting operator through eof_pad_hours(gap): the staged
     sentinel sits MORE than gap+watermark past the real max ts."""
     import glob
 
     from flink_demo_spark.plans.registry import REGISTRY, _load_all
-    from flink_demo_spark.sources.streams import eof_pad_hours
+    from flink_demo_spark.sources.streams import _stage_root, eof_pad_hours
 
     _load_all()
     # building the stream stages the chunks + sentinel
     REGISTRY["streaming_session_duration_v2_multi"].fn(spark, sf_dir)
-    key = sf_dir.strip("/").replace("/", "_")
-    dirs = glob.glob(
-        os.path.join(
-            tempfile.gettempdir(),
-            "flink_demo_spark_stream",
-            key,
-            "events_eof_split3_v*",
-        )
-    )
+    dirs = glob.glob(os.path.join(_stage_root(sf_dir), "events_c3_eof*_v*"))
     assert dirs
     d = max(dirs, key=os.path.getmtime)
     import pyarrow.compute as pc

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from flink_demo_spark.catalog import load_table
 from flink_demo_spark.operators.skew import bucketed_table, salted_agg, salted_join
+from flink_demo_spark.plans._util import first_vectors
 
 
 def test_salted_join_equals_plain_join(spark, sf_dir):
@@ -84,10 +85,7 @@ def test_kmeans_update_partition_order_invariant(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     assigned = similarity.ivf_assign(
         emb,
-        sorted(
-            (int(r.vec_id), [float(x) for x in r.embedding])
-            for r in emb.where(F.col("vec_id") < 8).collect()
-        ),
+        first_vectors(emb, 8),
     )
     base = similarity.kmeans_update(assigned)
     for layout in (

@@ -516,7 +516,7 @@ def test_update_mode_final_state_equals_batch(spark, sf_dir):
     from flink_demo_spark.sources.streams import events_stream
 
     agg = (
-        events_stream(spark, sf_dir, watermark=None, max_files_per_trigger=1)
+        events_stream(spark, sf_dir, watermark=None, chunks=3)
         .groupBy("event_type")
         .count()
     )
@@ -529,6 +529,7 @@ def test_update_mode_final_state_equals_batch(spark, sf_dir):
         .start()
     )
     q.awaitTermination(120)
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 3
     # last emission per key (memory sink appends update rows in order)
     import pandas as pd
 
@@ -984,11 +985,11 @@ def test_two_source_replay_sized_by_both_dirs(spark, sf_dir, replay_spy):
     from flink_demo_spark.sources.streams import (
         _stage_stream_dir,
         documents_stream,
-        staged_parquet_bytes,
     )
     from flink_demo_spark.streaming.runner import (
         replay_input_bytes,
         replay_partitions,
+        staged_parquet_bytes,
     )
 
     def joined(ev, docs):
@@ -1020,6 +1021,148 @@ def test_runner_restores_partitions_on_start_failure(spark, sf_dir, replay_spy):
         run_available_now(ev.select("event_id"), output_mode="complete")
     assert replay_spy["parts"] == ["8"]
     assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+
+
+def _synthetic_events(path: str, minutes: range) -> None:
+    """An events-schema parquet file (µs TIMESTAMP_NTZ ts): one view by
+    user 1 per minute offset from 2024-01-01."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = len(minutes)
+    t0 = dt.datetime(2024, 1, 1)
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(n), pa.int64()),
+                "ts": pa.array(
+                    [t0 + dt.timedelta(minutes=m) for m in minutes],
+                    pa.timestamp("us"),
+                ),
+                "user_id": pa.array([1] * n, pa.int64()),
+                "event_type": pa.array(["view"] * n, pa.string()),
+                "value": pa.array([0.0] * n, pa.float64()),
+                "props": pa.array(["{}"] * n, pa.string()),
+            }
+        ),
+        path,
+    )
+
+
+@pytest.mark.parametrize("chunks", [1, 3])
+def test_events_stream_sentinel_at_requested_pad(spark, tmp_path, chunks):
+    """Two padded replays of one source, pad 3 h then 10 h: each
+    replays all six events plus ONE sentinel at its own pad. The
+    staging is keyed by the pad, so one query's cached sentinel never
+    stands in for another's (a short pad would silently void the
+    pad > gap + watermark rule of eof_pad_hours)."""
+    import os
+    import shutil
+
+    from flink_demo_spark.sources import streams as S
+
+    d = str(tmp_path / "sf")
+    os.makedirs(d)
+    _synthetic_events(os.path.join(d, "events.parquet"), range(6))
+    try:
+        for pad in (3, 10):
+            ev = S.events_stream(
+                spark, d, watermark=None, chunks=chunks, pad_hours=pad
+            )
+            rows = run_available_now(
+                ev.groupBy((F.col("user_id") < 0).alias("eof")).agg(
+                    F.count(F.lit(1)).alias("n"), F.max("ts").alias("ts")
+                ),
+                output_mode="complete",
+            ).collect()
+            got = {r.eof: (r.n, r.ts) for r in rows}
+            assert got[False][0] == 6 and got[True][0] == 1
+            assert got[True][1] - got[False][1] == dt.timedelta(hours=pad)
+    finally:
+        shutil.rmtree(S._stage_root(d), ignore_errors=True)
+
+
+@pytest.mark.parametrize("chunks", [1, 3])
+def test_events_staging_versioned(tmp_path, chunks):
+    """A padded staging is built once per (chunks, pad, source mtime):
+    chunks=1 symlinks the source, chunks>1 writes sorted slices, and
+    mtimes derive from the source mtime (racing builders agree) with
+    the sentinel newest. Regenerating the source builds a FRESH dir
+    whose sentinel pads past the NEW last event, and the old dir's
+    files are left untouched (a concurrent replay may hold them)."""
+    import os
+    import shutil
+    import time
+
+    import pyarrow.parquet as pq
+
+    from flink_demo_spark.sources import streams as S
+
+    d = str(tmp_path / "sf")
+    os.makedirs(d)
+    real = os.path.join(d, "events.parquet")
+    _synthetic_events(real, range(6))
+
+    def eof_ts(v):
+        t = pq.read_table(os.path.join(v, "zz_eof.parquet"))
+        return t.column("ts")[0].as_py()
+
+    def stamps(v):
+        return {
+            f: os.lstat(os.path.join(v, f)).st_mtime_ns for f in os.listdir(v)
+        }
+
+    try:
+        v1 = S._stage_events(d, chunks, 3)
+        if chunks == 1:
+            assert os.path.islink(os.path.join(v1, "events.parquet"))
+            want = {"events.parquet": 0}
+        else:
+            want = {f"chunk{i:02d}.parquet": 10 * (i + 1) for i in range(chunks)}
+        want["zz_eof.parquet"] = 10 * (chunks + 2)  # sentinel newest
+        assert sorted(os.listdir(v1)) == sorted([*want, "_done"])
+        src_mt = os.stat(real).st_mtime_ns / 1e9
+        got = {f: os.path.getmtime(os.path.join(v1, f)) - src_mt for f in want}
+        assert got == pytest.approx(want, abs=1e-3)
+        before = stamps(v1)
+        assert S._stage_events(d, chunks, 3) == v1
+
+        time.sleep(0.02)
+        _synthetic_events(real + ".new", range(600, 606))
+        os.replace(real + ".new", real)
+        v2 = S._stage_events(d, chunks, 3)
+        assert v2 != v1, "a regenerated source must build a new dir"
+        assert eof_ts(v2) - eof_ts(v1) == dt.timedelta(minutes=600)
+        assert stamps(v1) == before
+    finally:
+        shutil.rmtree(S._stage_root(d), ignore_errors=True)
+
+
+def test_evicting_session_multi_trigger_matches_single_batch(spark, sf_dir):
+    """The evicting session operator over the events replayed as three
+    time-ordered chunks (one per trigger, then the sentinel's) yields
+    the per-session multiset of the single-batch replay: open state
+    carries across trigger boundaries and no session closes before its
+    gap."""
+    from flink_demo_spark.sources.streams import eof_pad_hours
+    from flink_demo_spark.streaming.stateful import session_durations_evicting
+
+    gap_ms = 3_600_000
+
+    def sessions(chunks):
+        ev = events_stream(
+            spark, sf_dir, chunks=chunks, pad_hours=eof_pad_hours(gap_ms)
+        )
+        out = run_available_now(
+            session_durations_evicting(ev, gap_ms=gap_ms), output_mode="append"
+        )
+        return sorted(
+            (r["user_id"], r["dur_s"])
+            for r in out.where(F.col("user_id") >= 0).collect()
+        )
+
+    single = sessions(1)
+    assert single and sessions(3) == single
 
 
 def test_buffered_cep_handles_out_of_order_batches(spark):

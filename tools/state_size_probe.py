@@ -50,10 +50,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from flink_demo_spark.session import get_spark
-    from flink_demo_spark.sources.streams import (
-        events_stream,
-        events_stream_with_eof,
-    )
+    from flink_demo_spark.sources.streams import eof_pad_hours, events_stream
     from flink_demo_spark.streaming.runner import run_available_now
     from flink_demo_spark.streaming.state_query import read_keyed_state
     from flink_demo_spark.streaming.stateful import (
@@ -69,7 +66,7 @@ def main() -> None:
         ckpt2 = os.path.join(work, "ckpt_v2")
         res = run_available_now(
             session_durations_evicting(
-                events_stream_with_eof(spark, sf_dir)
+                events_stream(spark, sf_dir, pad_hours=eof_pad_hours(3_600_000))
             ),
             output_mode="append",
             checkpoint_dir=ckpt2,
