@@ -4,7 +4,7 @@
 
 SF001 ?= /root/testdata/sf0.01
 
-.PHONY: test parity parity-sf001 driver-sim driver-coverage plans bench
+.PHONY: test parity parity-sf001 driver-sim driver-coverage plans bench replay-sweep
 
 # full local suite (sf0.001 oracles + goldens + e2e), run exactly as
 # the Tier-1 gate runs it (ROADMAP.md "Tier-1 verify")
@@ -32,6 +32,11 @@ driver-coverage:
 
 plans:
 	python tools/dump_plans.py
+
+# every streaming* registry replay at sf0.01: partitions, micro-batches,
+# rows and normalized result hash; diff two checkouts' tables
+replay-sweep:
+	python tools/replay_sweep.py --sf $(SF001)
 
 bench:
 	python bench.py

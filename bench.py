@@ -15,6 +15,7 @@ import json
 import os
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -131,6 +132,7 @@ def main() -> None:
     # maxPartitionBytes/shuffle.partitions so reps differ only by load.
     stream_eps = None
     stream_eps_reps: list[int] = []
+    stream_error = None
     try:
         from flink_demo_spark.catalog import load_table
         from flink_demo_spark.sources.streams import events_stream
@@ -147,8 +149,10 @@ def main() -> None:
             eps = round(n_events / (time.perf_counter() - t0))
             stream_eps_reps.append(eps)
             stream_eps = eps if stream_eps is None or eps > stream_eps else stream_eps
-    except Exception:
-        pass
+    except Exception as e:  # reported, never a silent null
+        stream_error = str(e).split("\n")[0][:200]
+        print("stream throughput replay failed:", file=sys.stderr)
+        traceback.print_exc(file=sys.stderr)
 
     calib_end = _calibration_probe(spark)
     calib_sec = min(calib_start, calib_end)
@@ -216,6 +220,8 @@ def main() -> None:
     }
     if stream_eps_reps:
         detail["stream_events_per_sec_reps"] = stream_eps_reps
+    if stream_error is not None:
+        detail["stream_error"] = stream_error
     here = os.path.dirname(os.path.abspath(__file__))
     # per-round history: the driver writes BENCH_r{N}.json AFTER this
     # run, so the next round number is 1 + the highest committed round

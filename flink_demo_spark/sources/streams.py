@@ -19,10 +19,11 @@ A table replayed whole (``chunks=1``, no EOF pad) reads a dir holding
 one symlink to ``<table>.parquet``. Every other events replay reads a
 dir keyed by ``(chunks, pad_hours, source mtime_ns)``, built once:
 
-- ``chunks=1`` symlinks the source file; ``chunks>1`` writes the
-  (ts, event_id)-sorted table as ``chunks`` equal slices whose mtimes
-  (source mtime + 10 s, + 20 s, ...) fix the replay order, so no event
-  is ever late across chunk boundaries.
+- ``chunks=1`` copies the source file with its mtime, so the dir keeps
+  the bytes its mtime key names after the source is regenerated;
+  ``chunks>1`` writes the (ts, event_id)-sorted table as ``chunks``
+  equal slices whose mtimes (source mtime + 10 s, + 20 s, ...) fix the
+  replay order, so no event is ever late across chunk boundaries.
 - ``pad_hours`` adds the EOF sentinel: one row (user_id = -1) stamped
   ``pad_hours`` past the last event, with the newest mtime. It drags
   the final watermark past every gap horizon, so evicting operators
@@ -172,6 +173,19 @@ def _write_parquet_atomic(table: "pyarrow.Table", path: str, mtime: float) -> No
     os.replace(tmp, path)
 
 
+def _copy_file_atomic(src: str, path: str) -> None:
+    """Copy ``src`` to ``path`` with its mtime via a pid-suffixed
+    dot-file and ``os.replace``. A symlink or a hard link would show a
+    regenerated source's bytes: ``pyarrow.parquet.write_table`` rewrites
+    an existing file in place (same inode), which a hard link follows."""
+    import shutil
+
+    head, tail = os.path.split(path)
+    tmp = os.path.join(head, f".{tail}.tmp{os.getpid()}")
+    shutil.copy2(src, tmp)
+    os.replace(tmp, path)
+
+
 def _write_eof_sentinel(
     path: str,
     schema: "pyarrow.Schema",
@@ -226,9 +240,10 @@ def _stage_events(sf_dir: str, chunks: int, pad_hours: int | None) -> str:
     # builders of the same version agree exactly
     base = src_mtime / 1e9
     if chunks == 1:
-        _ensure_symlink(real, os.path.join(d, "events.parquet"))
-        t = pq.read_table(real, columns=["ts"])
-        schema = pq.read_schema(real)
+        staged = os.path.join(d, "events.parquet")
+        _copy_file_atomic(real, staged)
+        t = pq.read_table(staged, columns=["ts"])
+        schema = pq.read_schema(staged)
     else:
         t = pq.read_table(real)
         t = t.take(

@@ -17,7 +17,8 @@ of stream-static joins do not count, and any other streaming leaf
   micro-batch and AQE cannot coalesce it, so a replay of a few MB
   would otherwise pay the full session count in state-store commits
   and task launches per micro-batch. The replay runs with
-  ``min(session, max(8, ceil(bytes / divisor)))`` partitions and the
+  ``min(session, max(min(8, slots), ceil(bytes / divisor)))``
+  partitions, ``slots`` being Spark's ``defaultParallelism``, and the
   session value is restored afterwards. The measured optima invert
   with the stage kind, hence two divisors:
 
@@ -31,9 +32,40 @@ of stream-static joins do not count, and any other streaming leaf
     (3.83 / 4.88 / 6.52 s min) → 256 KiB per partition, which lands
     on both optima.
 
+  The floor is one wave of task slots. Each stateful partition pays a
+  fixed commit per micro-batch: the state store's delta file and its
+  checksum write. Sampled task-thread stacks of floor-8 replays
+  (``streaming_window_hourly`` and ``streaming_allowed_lateness``, 211
+  busy samples): 58 in state-store code, most often waiting in
+  ``ChecksumCheckpointFileManager.awaitResult``; 102 in a socket poll
+  (the Python worker); 51 elsewhere. The checksum
+  (``spark.sql.streaming.checkpoint.fileChecksum.enabled``) is an
+  integrity check and stays on. With fewer slots than partitions the
+  commit is paid in a second wave, so the floor is ``min(8, slots)``;
+  a host with 8 or more slots keeps the floor of 8 measured above.
+  At sf0.01 on 4 slots (``local[4]``), floor 8 → 4, 7 interleaved
+  pairs, medians (every pair won by 4; stateful stage tasks / stage
+  wall / summed task-run time / CPU):
+
+  - ``streaming_window_hourly``: 1.11 → 0.97 s; 8 / 383 / 1280 /
+    192 ms → 4 / 202 / 657 / 96 ms.
+  - ``streaming_hotitems_topn``: 1.23 → 1.06 s; 8 / 360 / 1262 /
+    156 ms → 4 / 182 / 613 / 79 ms.
+  - ``streaming_allowed_lateness`` (applyInPandasWithState): 1.99 →
+    1.50 s; 8 / 1297 / 4448 / 289 ms → 4 / 709 / 2403 / 159 ms.
+
+  Task-run time is several times CPU time, and halving the partitions
+  halves both: the stage waits on per-partition commits, not on work.
+  Floors 2 and 1 (6 interleaved rounds) were within noise of 4:
+  ``streaming_allowed_lateness`` 1.65 / 1.49 / 1.69 s and
+  ``streaming_window_hourly`` 0.99 / 0.98 / 0.92 s at 4 / 2 / 1.
+  End to end, perfbench ``stream_replay`` (the three replays above,
+  4 slots, two sets of 10 alternating pairs): pass median 6.06 → 4.72
+  s and 4.88 → 4.03 s, every pair won by floor 4.
+
   The count never rises above the session value, so a session already
-  at 8 is untouched and a huge replay keeps the session count. A
-  non-integer session value (a vendor "auto") and an unknown size
+  at the floor is untouched and a huge replay keeps the session count.
+  A non-integer session value (a vendor "auto") and an unknown size
   skip the clamp.
 - Scratch. Replay checkpoints are throwaway (nothing restarts from
   them), and Spark's default temp checkpoint under java.io.tmpdir pays
@@ -102,10 +134,10 @@ def replay_input_bytes(sdf: DataFrame) -> int | None:
 
 
 def replay_partitions(
-    session: str, input_bytes: int | None, python_stage: bool
+    session: str, input_bytes: int | None, python_stage: bool, slots: int
 ) -> str:
     """The replay's ``spark.sql.shuffle.partitions`` under the module
-    policy, given the session value."""
+    policy, given the session value and the cluster's task slots."""
     if input_bytes is None:
         return session
     try:
@@ -113,7 +145,8 @@ def replay_partitions(
     except ValueError:
         return session
     per = _PYTHON_BYTES_PER_PARTITION if python_stage else _JVM_BYTES_PER_PARTITION
-    return str(min(cur, max(_MIN_PARTITIONS, -(-input_bytes // per))))
+    floor = min(_MIN_PARTITIONS, slots)
+    return str(min(cur, max(floor, -(-input_bytes // per))))
 
 
 def replay_scratch_root(input_bytes: int | None) -> str | None:
@@ -131,7 +164,6 @@ def replay_scratch_root(input_bytes: int | None) -> str | None:
 def run_available_now(
     sdf: DataFrame,
     output_mode: str = "complete",
-    name: str | None = None,
     timeout_sec: int | None = None,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -139,16 +171,22 @@ def run_available_now(
     table. ``checkpoint_dir`` persists state/offsets — required when
     the state will be read back via streaming/state_query.py.
     ``timeout_sec`` defaults to ``SPARK_GRAFT_STREAM_TIMEOUT_SEC``
-    (300 s, enough for every gate and bench scale)."""
+    (300 s, enough for every gate and bench scale). The sink's temp
+    view is dropped on the way out, failed replays included: the
+    returned frame holds the sink's rows, which go with it instead of
+    living as long as the session."""
     if timeout_sec is None:
         timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT_SEC", "300"))
-    name = name or f"mem_{uuid.uuid4().hex[:12]}"
+    name = f"mem_{uuid.uuid4().hex[:12]}"
     spark: SparkSession = sdf.sparkSession
     input_bytes = replay_input_bytes(sdf)
     session_parts = spark.conf.get("spark.sql.shuffle.partitions")
     plan = sdf._jdf.queryExecution().analyzed().toString()
     parts = replay_partitions(
-        session_parts, input_bytes, any(t in plan for t in _PYTHON_STAGE_NODES)
+        session_parts,
+        input_bytes,
+        any(t in plan for t in _PYTHON_STAGE_NODES),
+        spark.sparkContext.defaultParallelism,
     )
     writer = (
         sdf.writeStream.format("memory")
@@ -172,11 +210,12 @@ def run_available_now(
                 f"streaming query {name!r} did not finish within "
                 f"{timeout_sec}s; memory table would be truncated"
             )
+        return spark.table(name)
     finally:
         if q is not None and q.isActive:
             q.stop()
+        spark.catalog.dropTempView(name)
         if scratch is not None:
             shutil.rmtree(scratch, ignore_errors=True)
         if parts != session_parts:
             spark.conf.set("spark.sql.shuffle.partitions", session_parts)
-    return spark.table(name)

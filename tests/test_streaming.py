@@ -871,25 +871,31 @@ _MIB = 1 << 20
 
 
 @pytest.mark.parametrize(
-    "session, input_bytes, python_stage, parts, shm",
+    "session, input_bytes, python_stage, slots, parts, shm",
     [
-        ("32", 200_000, False, "8", True),  # small input: the floor
-        ("4", 100 * _MIB, False, "4", True),  # never above the session
-        ("32", 100 * _MIB, False, "13", True),  # JVM: 8 MiB per partition
-        ("32", 100 * _MIB, True, "32", True),  # Python: 256 KiB per partition
-        ("auto", 100 * _MIB, False, "auto", True),  # non-integer session
-        ("32", None, False, "32", False),  # unknown size
-        ("32", 2 << 30, False, "32", False),  # over the tmpfs gate
+        ("32", 200_000, False, 32, "8", True),  # small input: the floor
+        ("32", 200_000, False, 4, "4", True),  # floor: one wave of 4 slots
+        ("32", 200_000, True, 1, "1", True),  # floor: one slot
+        ("4", 100 * _MIB, False, 32, "4", True),  # never above the session
+        ("32", 100 * _MIB, False, 32, "13", True),  # JVM: 8 MiB per partition
+        ("32", 100 * _MIB, False, 4, "13", True),  # the divisor beats the floor
+        ("32", 100 * _MIB, True, 32, "32", True),  # Python: 256 KiB per partition
+        ("auto", 100 * _MIB, False, 32, "auto", True),  # non-integer session
+        ("32", None, False, 32, "32", False),  # unknown size
+        ("32", 2 << 30, False, 32, "32", False),  # over the tmpfs gate
     ],
-    ids=["floor", "session-4", "jvm", "python", "non-integer", "unknown", "over-shm"],
+    ids=[
+        "floor", "floor-slots-4", "floor-slots-1", "session-4", "jvm",
+        "jvm-slots-4", "python", "non-integer", "unknown", "over-shm",
+    ],
 )
 def test_replay_sizing_policy(
-    monkeypatch, session, input_bytes, python_stage, parts, shm
+    monkeypatch, session, input_bytes, python_stage, slots, parts, shm
 ):
     """The runner's sizing policy as a table: partition count from the
-    session value, the input size and the stage kind; /dev/shm scratch
-    only for a known size up to 1 GiB; an explicit scratch root always
-    wins."""
+    session value, the input size, the stage kind and the task slots
+    (the floor is one wave: min(8, slots)); /dev/shm scratch only for
+    a known size up to 1 GiB; an explicit scratch root always wins."""
     import os
 
     from flink_demo_spark.streaming.runner import (
@@ -897,7 +903,7 @@ def test_replay_sizing_policy(
         replay_scratch_root,
     )
 
-    assert replay_partitions(session, input_bytes, python_stage) == parts
+    assert replay_partitions(session, input_bytes, python_stage, slots) == parts
     monkeypatch.delenv("SPARK_GRAFT_STREAM_SCRATCH", raising=False)
     expect = "/dev/shm" if shm and os.path.isdir("/dev/shm") else None
     assert replay_scratch_root(input_bytes) == expect
@@ -1004,7 +1010,8 @@ def test_two_source_replay_sized_by_both_dirs(spark, sf_dir, replay_spy):
     )
     assert replay_input_bytes(sdf) == total
     got = run_available_now(sdf, output_mode="append").collect()
-    assert replay_spy["parts"] == [replay_partitions("32", total, False)]
+    slots = spark.sparkContext.defaultParallelism
+    assert replay_spy["parts"] == [replay_partitions("32", total, False, slots)]
     want = joined(
         load_table(spark, sf_dir, "events"), load_table(spark, sf_dir, "documents")
     ).collect()
@@ -1019,8 +1026,36 @@ def test_runner_restores_partitions_on_start_failure(spark, sf_dir, replay_spy):
     ev = events_stream(spark, sf_dir)
     with pytest.raises(Exception):
         run_available_now(ev.select("event_id"), output_mode="complete")
-    assert replay_spy["parts"] == ["8"]
+    assert replay_spy["parts"] == [str(min(8, spark.sparkContext.defaultParallelism))]
     assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+
+
+def test_tiny_replay_runs_in_one_wave(spark, sf_dir, replay_spy):
+    """A replay far below the 8 MiB divisor starts with the one-wave
+    floor, min(8, defaultParallelism), not a fixed 8: on a host with
+    fewer than 8 task slots a second wave would pay the per-partition
+    state commit twice."""
+    run_available_now(tumbling_agg(events_stream(spark, sf_dir)))
+    assert replay_spy["parts"] == [str(min(8, spark.sparkContext.defaultParallelism))]
+
+
+def test_replays_leave_no_memory_sink_view(spark, sf_dir):
+    """run_available_now drops its memory sink's temp view: after
+    several replays no ``mem_`` view is left in the session, and every
+    returned frame still collects and sorts."""
+    before = {t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")}
+    outs = [
+        run_available_now(tumbling_agg(events_stream(spark, sf_dir)))
+        for _ in range(3)
+    ]
+    left = {t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")}
+    assert left - before == set()
+    want = sorted(map(tuple, outs[0].collect()))
+    assert len(want) > 0
+    for out in outs:
+        assert sorted(map(tuple, out.collect())) == want
+        cols = out.columns
+        assert [tuple(r) for r in out.orderBy(*cols).collect()] == want
 
 
 def _synthetic_events(path: str, minutes: range) -> None:
@@ -1085,7 +1120,7 @@ def test_events_stream_sentinel_at_requested_pad(spark, tmp_path, chunks):
 @pytest.mark.parametrize("chunks", [1, 3])
 def test_events_staging_versioned(tmp_path, chunks):
     """A padded staging is built once per (chunks, pad, source mtime):
-    chunks=1 symlinks the source, chunks>1 writes sorted slices, and
+    chunks=1 copies the source, chunks>1 writes sorted slices, and
     mtimes derive from the source mtime (racing builders agree) with
     the sentinel newest. Regenerating the source builds a FRESH dir
     whose sentinel pads past the NEW last event, and the old dir's
@@ -1109,13 +1144,13 @@ def test_events_staging_versioned(tmp_path, chunks):
 
     def stamps(v):
         return {
-            f: os.lstat(os.path.join(v, f)).st_mtime_ns for f in os.listdir(v)
+            f: os.stat(os.path.join(v, f)).st_mtime_ns for f in os.listdir(v)
         }
 
     try:
         v1 = S._stage_events(d, chunks, 3)
         if chunks == 1:
-            assert os.path.islink(os.path.join(v1, "events.parquet"))
+            assert not os.path.islink(os.path.join(v1, "events.parquet"))
             want = {"events.parquet": 0}
         else:
             want = {f"chunk{i:02d}.parquet": 10 * (i + 1) for i in range(chunks)}
@@ -1126,6 +1161,11 @@ def test_events_staging_versioned(tmp_path, chunks):
         assert got == pytest.approx(want, abs=1e-3)
         before = stamps(v1)
         assert S._stage_events(d, chunks, 3) == v1
+        # a dir without _done is rebuilt in place and left with no tmp file
+        os.remove(os.path.join(v1, "_done"))
+        assert S._stage_events(d, chunks, 3) == v1
+        assert sorted(os.listdir(v1)) == sorted([*want, "_done"])
+        before = stamps(v1)
 
         time.sleep(0.02)
         _synthetic_events(real + ".new", range(600, 606))
@@ -1134,6 +1174,45 @@ def test_events_staging_versioned(tmp_path, chunks):
         assert v2 != v1, "a regenerated source must build a new dir"
         assert eof_ts(v2) - eof_ts(v1) == dt.timedelta(minutes=600)
         assert stamps(v1) == before
+    finally:
+        shutil.rmtree(S._stage_root(d), ignore_errors=True)
+
+
+@pytest.mark.parametrize("in_place", [False, True], ids=["replaced", "in-place"])
+def test_events_staging_keeps_bytes_after_regeneration(tmp_path, in_place):
+    """A padded chunks=1 dir holds the bytes of the source version it
+    is keyed by: after events.parquet is regenerated, whether replaced
+    by a new file or rewritten in place (``pq.write_table`` keeps the
+    inode), the old dir's files are byte-for-byte what they were."""
+    import hashlib
+    import os
+    import shutil
+    import time
+
+    from flink_demo_spark.sources import streams as S
+
+    d = str(tmp_path / "sf")
+    os.makedirs(d)
+    real = os.path.join(d, "events.parquet")
+    _synthetic_events(real, range(6))
+
+    def digests(v):
+        return {
+            f: hashlib.sha1(open(os.path.join(v, f), "rb").read()).hexdigest()
+            for f in os.listdir(v)
+        }
+
+    try:
+        v1 = S._stage_events(d, 1, 3)
+        before = digests(v1)
+        time.sleep(0.02)
+        if in_place:
+            _synthetic_events(real, range(600, 606))
+        else:
+            _synthetic_events(real + ".new", range(600, 606))
+            os.replace(real + ".new", real)
+        assert S._stage_events(d, 1, 3) != v1
+        assert digests(v1) == before
     finally:
         shutil.rmtree(S._stage_root(d), ignore_errors=True)
 
