@@ -3,7 +3,8 @@
 
 Prints one JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>}
+   "value_normalized": <total sec / host_factor>,
+   "queries": {name: sec, ...}, "sf": <sf>, "host_factor": <x>}
 
 Each query is executed to a noop sink (full computation, no result
 materialization cost on the driver).
@@ -175,9 +176,12 @@ def main() -> None:
     # per-query mins — no per-rep arrays: those overflowed the capture in
     # round 7 and left BENCH_r07.json with parsed:null). Full per-rep
     # detail goes to a committed file instead.
+    value = round(sum(timings.values()), 3)
     summary = {
         "metric": "headline query wall time at sf (noop sink)",
-        "value": round(sum(timings.values()), 3),
+        "value": value,
+        # the headline in builder-host seconds: comparable across hosts
+        "value_normalized": round(value / host_factor, 3),
         "value_r4_comparable_subset": round(
             sum(v for n, v in timings.items() if n in r4_set), 3
         ),

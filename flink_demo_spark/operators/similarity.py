@@ -17,6 +17,8 @@ are deterministic and oracle-comparable.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
@@ -46,13 +48,38 @@ def _py_l2_norm(vec: list[float]) -> float:
     interpreted HOF folds per row (higher-order functions never reach
     codegen, and Catalyst does not constant-fold aggregate() over
     literal arrays)."""
-    import math
-
     acc = 0.0
     for x in vec:
         x = float(x)
         acc = acc + x * x
     return math.sqrt(acc)
+
+
+def sql_double(x: float) -> str:
+    """SQL spelling of a float64 literal that parses back bit-identical:
+    ``repr`` round-trips exactly and the parser reads it with Java's
+    correctly rounded ``toDouble``. NaN and ±inf have no numeric
+    spelling and become a (nullable) string cast."""
+    x = float(x)
+    if math.isfinite(x):
+        return f"{x!r}D"
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    return "CAST('-Infinity' AS DOUBLE)" if x < 0 else "CAST('Infinity' AS DOUBLE)"
+
+
+def double_array_lit(values) -> Column:
+    """``array<double>`` literal of ``values`` built from ONE expression:
+    the vector is spelled as SQL ``array(<x>D, ...)`` (:func:`sql_double`)
+    and parsed once, where ``F.array(*[F.lit(x) ...])`` costs several
+    Py4J round trips per element. The folded literal is bit-identical and of the
+    same type (``array<double>``, containsNull false). A vector holding
+    NaN or ±inf keeps the per-element form: their string-cast spelling
+    is nullable and would make containsNull true."""
+    xs = [float(x) for x in values]
+    if not all(math.isfinite(x) for x in xs):
+        return F.array(*[F.lit(x) for x in xs])
+    return F.expr("array(" + ", ".join(map(sql_double, xs)) + ")")
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -290,7 +317,7 @@ def random_hyperplane_buckets(
     deterministic across runs, no fitting step.
     """
     bits = [
-        F.when(dot(_as_double(F.col(vec_col)), F.array(*[F.lit(x) for x in p])) > 0, 1 << i)
+        F.when(dot(_as_double(F.col(vec_col)), double_array_lit(p)) > 0, 1 << i)
         .otherwise(0)
         for i, p in enumerate(planes)
     ]
@@ -375,13 +402,18 @@ def _sim_entries(
     centroid norms are always baked in as literals via
     :func:`_py_l2_norm` (bit-equal to the in-plan fold). Per (row,
     centroid) the kernel then runs 1 interpreted fold (the dot), not
-    3 — HOFs never reach codegen, so fold count is the cost driver."""
+    3 — HOFs never reach codegen, so fold count is the cost driver.
+
+    Each centroid enters the plan as one parsed literal
+    (:func:`double_array_lit`), not one ``F.lit`` per element: at K=8,
+    dim 64 that is 8 expression parses instead of 512 ``F.lit`` calls
+    of several Py4J round trips each."""
     if vn is None:
         vn = l2_norm(v)
     if len(centroids) <= _CENTROID_EXPR_MAX:
         entries = []
         for cid, cvec in centroids:
-            c = F.array(*[F.lit(float(x)) for x in cvec])
+            c = double_array_lit(cvec)
             sim = dot(v, c) / (vn * F.lit(_py_l2_norm(cvec)))
             entries.append(
                 F.struct(sim.alias("sim"), F.lit(-cid).alias("neg_cid"))
@@ -391,7 +423,7 @@ def _sim_entries(
         *[
             F.struct(
                 F.lit(int(cid)).alias("cid"),
-                F.array(*[F.lit(float(x)) for x in cv]).alias("cv"),
+                double_array_lit(cv).alias("cv"),
                 F.lit(_py_l2_norm(cv)).alias("cn"),
             )
             for cid, cv in centroids

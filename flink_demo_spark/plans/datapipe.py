@@ -1670,31 +1670,29 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     ev = similarity._as_double(F.col("embedding"))
 
-    def flat_dot_lit(off: int, cvec: list):
+    def flat_dot_sql(off: int, cvec: list) -> str:
         # sum_i embedding[off+i] * c_i — explicit flat arithmetic
         # (stays in whole-stage codegen; a nested fold of this size
         # falls back to interpreted evaluation, measured ~30x slower)
-        acc = None
-        for i, c in enumerate(cvec):
-            t = F.element_at("embedding", off + i + 1).cast("double") * F.lit(
-                float(c)
-            )
-            acc = t if acc is None else acc + t
-        return acc
+        return " + ".join(
+            f"CAST(element_at(embedding, {off + i + 1}) AS DOUBLE)"
+            f" * {similarity.sql_double(c)}"
+            for i, c in enumerate(cvec)
+        )
 
     def assign_idx(m: int, cents: list):
         # 1-based index of the argmin centroid: criterion drops the
         # candidate-independent ||x||^2 — argmin ||c||^2 - 2<x,c> —
-        # ties to the smaller centroid id (cents sorted by cid)
+        # ties to the smaller centroid id (cents sorted by cid).
+        # Spelled as ONE SQL expression: a Column call costs about 15
+        # Py4J round trips and this expression has ~2300 nodes
         off = m * _PQ_D
-        entries = []
-        for i, (_cid, cv) in enumerate(cents):
-            cc = _py_dot(cv, cv)
-            crit = F.lit(cc) - F.lit(2.0) * flat_dot_lit(off, cv)
-            entries.append(
-                F.struct((-crit).alias("nd"), F.lit(-(i + 1)).alias("neg_i"))
-            )
-        return (-F.array_max(F.array(*entries))["neg_i"]).cast("int")
+        entries = ", ".join(
+            f"struct(-({similarity.sql_double(_py_dot(cv, cv))}"
+            f" - 2.0D * ({flat_dot_sql(off, cv)})) AS nd, {-(i + 1)} AS neg_i)"
+            for i, (_cid, cv) in enumerate(cents)
+        )
+        return F.expr(f"CAST(-array_max(array({entries})).neg_i AS INT)")
 
     seed_rows = first_vectors(emb, _PQ_K)
     seeds = [
@@ -1766,12 +1764,7 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("int")
     score = None
     for m in range(_PQ_M):
-        dt_m = F.array(
-            *[
-                F.array(*[F.lit(float(v)) for v in per_q])
-                for per_q in dt[m]
-            ]
-        )
+        dt_m = F.array(*[similarity.double_array_lit(per_q) for per_q in dt[m]])
         term = F.element_at(F.element_at(dt_m, qslot), assign_idx(m, books[m]))
         score = term if score is None else score + term
     w = Window.partitionBy("query_id").orderBy(

@@ -37,6 +37,27 @@ def oracle_con():
 
 
 import contextlib
+import itertools
+
+_job_groups = itertools.count()
+
+
+@contextlib.contextmanager
+def spark_jobs(spark):
+    """Count the Spark jobs launched inside the block: they run under a
+    fresh job group on this thread, read from the status tracker once
+    the listener bus has drained. Yields a list that holds the count
+    after the block."""
+    sc = spark.sparkContext
+    group = f"spark-jobs-{next(_job_groups)}"
+    sc.setJobGroup(group, group)
+    counted: list[int] = []
+    try:
+        yield counted
+    finally:
+        sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        counted.append(len(sc.statusTracker().getJobIdsForGroup(group)))
 
 
 @contextlib.contextmanager

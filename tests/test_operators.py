@@ -2165,3 +2165,50 @@ def test_packed_cell_topk_matches_ivf_topk(spark, sf_dir):
         .collect()
     }
     assert got == want
+
+
+def test_double_array_lit_bit_identical_to_per_element_lits(spark):
+    """One parsed array literal equals F.array(*[F.lit(x)]) bit for bit,
+    with the same array<double> (containsNull false) type, at the
+    float64 edges: subnormal, max, signed zero and the non-finite
+    values (which keep the per-element form)."""
+    import math
+    import struct
+
+    from pyspark.sql.types import ArrayType, DoubleType
+
+    edges = [0.1, -0.0, 5e-324, 1.7976931348623157e308, math.nan, math.inf, -math.inf]
+    cases = [[x] for x in edges] + [edges[:4], edges]
+    cols = []
+    for i, xs in enumerate(cases):
+        cols.append(similarity.double_array_lit(xs).alias(f"a{i}"))
+        cols.append(F.array(*[F.lit(x) for x in xs]).alias(f"b{i}"))
+    df = spark.range(1).select(*cols)
+    row = df.collect()[0]
+    for i in range(len(cases)):
+        assert df.schema[f"a{i}"].dataType == ArrayType(DoubleType(), False)
+        assert df.schema[f"a{i}"].dataType == df.schema[f"b{i}"].dataType
+        bits = [[struct.pack(">d", x) for x in row[f"{s}{i}"]] for s in "ab"]
+        assert bits[0] == bits[1]
+
+
+@pytest.mark.parametrize("k", [8, 40])
+def test_ivf_assign_unchanged_by_parsed_centroid_literals(spark, sf_dir, monkeypatch, k):
+    """Both centroid formulations (per-centroid expressions at K=8, the
+    transform at K=40) give the same cells and __sim when the centroids
+    enter the plan as per-element F.lit arrays."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = first_vectors(emb, k)
+    assert (k > similarity._CENTROID_EXPR_MAX) == (k == 40)
+
+    def snap():
+        df = similarity.ivf_assign(emb, cents, sim_col="__sim")
+        return sorted((r["vec_id"], r["cell"], r["__sim"]) for r in df.collect())
+
+    parsed = snap()
+    monkeypatch.setattr(
+        similarity,
+        "double_array_lit",
+        lambda xs: F.array(*[F.lit(float(x)) for x in xs]),
+    )
+    assert parsed == snap()

@@ -10,6 +10,8 @@ import pytest
 
 from flink_demo_spark.plans.registry import REGISTRY, _load_all
 
+from .conftest import spark_jobs
+
 _load_all()
 
 
@@ -349,3 +351,29 @@ def test_compression_ratio_matches_zlib_golden(spark, sf_dir):
         b = r.text.encode("utf-8")
         z = len(zlib.compress(b, 6))
         assert got[r.doc_id] == (len(b), z, (z * 10000) // len(b)), r.doc_id
+
+
+# the benchmark's batch queries whose plans do not depend on the data
+_DATA_FREE_BUILDS = (
+    "q1_pricing_summary",
+    "q5_regional_revenue",
+    "events_dau_wau_mau_hll",
+    "window_tumbling_hourly",
+    "interval_join",
+    "lang_id_ngram",
+)
+
+
+def test_plan_builds_launch_only_data_dependent_jobs(spark, sf_dir):
+    """Once a table has been loaded, building a plan over it launches no
+    Spark job (the catalog reuses its parquet schema). embedding_kmeans
+    keeps its data-dependent collects: the seed vectors and the Lloyd
+    update, which adaptive execution runs as one job per query stage."""
+    for name in (*_DATA_FREE_BUILDS, "embedding_kmeans"):
+        REGISTRY[name].fn(spark, sf_dir)
+    counts = {}
+    for name in (*_DATA_FREE_BUILDS, "embedding_kmeans"):
+        with spark_jobs(spark) as jobs:
+            REGISTRY[name].fn(spark, sf_dir)
+        counts[name] = jobs[0]
+    assert counts == {**dict.fromkeys(_DATA_FREE_BUILDS, 0), "embedding_kmeans": 4}

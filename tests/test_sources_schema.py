@@ -13,10 +13,14 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
-from flink_demo_spark.catalog import normalize_events_ts
+from flink_demo_spark import catalog
+from flink_demo_spark.catalog import load_table, normalize_events_ts
 from flink_demo_spark.sources.streams import _events_raw_schema
+
+from .conftest import spark_jobs
 
 
 def _write_events_parquet(d: str, ts_type: pa.DataType, name="events.parquet"):
@@ -196,3 +200,89 @@ def test_wds_tar_shards_negative_keys_and_stale_cleanup(spark, tmp_path):
     # -5 -> 1, -1 -> 1, 0 -> 0, 7 -> 1; shard-00003.tar must be GONE
     assert sorted(os.listdir(out)) == ["shard-00000.tar", "shard-00001.tar"]
     assert wds.read_tar_shards(spark, os.path.join(out, "*.tar")).count() == 4
+
+
+# -- catalog schema memo: one inference per file version ---------------
+
+
+def _analyzed(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+def test_second_load_launches_no_job(spark, tmp_path):
+    _write_events_parquet(str(tmp_path), pa.timestamp("us"))
+    with spark_jobs(spark) as first:
+        load_table(spark, str(tmp_path), "events")
+    with spark_jobs(spark) as second:
+        df = load_table(spark, str(tmp_path), "events")
+    assert first[0] >= 1  # Spark's own inference job
+    assert second == [0]
+    assert df.count() == 3
+
+
+def test_rewrite_in_place_reinfers(spark, tmp_path):
+    """ns -> µs NTZ rewrite of the same inode: the next load re-infers
+    and normalize_events_ts takes the NTZ branch."""
+    d = str(tmp_path)
+    path = os.path.join(d, "events.parquet")
+    _write_events_parquet(d, pa.timestamp("ns"))
+    before = os.stat(path)
+    ns = load_table(spark, d, "events")
+    assert "timestamp_micros" in _analyzed(ns)
+    want = ns.select("ts").collect()
+    _write_events_parquet(d, pa.timestamp("us"))
+    after = os.stat(path)
+    assert after.st_ino == before.st_ino
+    us = load_table(spark, d, "events")
+    plan = _analyzed(us)
+    assert "timestamp_micros" not in plan and "cast(ts#" in plan
+    assert us.select("ts").collect() == want
+
+
+def test_overwritten_directory_table_reinfers(spark, tmp_path):
+    d = str(tmp_path)
+    spark.range(3).write.mode("overwrite").parquet(f"{d}/t.parquet")
+    assert load_table(spark, d, "t").columns == ["id"]
+    spark.range(3).withColumn("x", F.lit("a")).write.mode("overwrite").parquet(
+        f"{d}/t.parquet"
+    )
+    t = load_table(spark, d, "t")
+    assert t.columns == ["id", "x"]
+    assert t.where("x = 'a'").count() == 3
+
+
+def test_nanos_as_long_toggle_reinfers(spark, tmp_path):
+    _write_events_parquet(str(tmp_path), pa.timestamp("ns"))
+    path = str(tmp_path / "events.parquet")
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    assert isinstance(catalog._read_parquet(spark, path).schema["ts"].dataType, LongType)
+    spark.conf.set(key, "false")
+    try:
+        # a memo hit would hand back the LongType schema; inference
+        # under the new conf refuses the nanos column instead
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+            catalog._read_parquet(spark, path)
+    finally:
+        spark.conf.set(key, "true")
+
+
+def test_unstatable_path_infers_on_every_read(spark, tmp_path):
+    _write_events_parquet(str(tmp_path), pa.timestamp("us"))
+    uri = f"file://{tmp_path}"
+    assert catalog._file_identity(f"{uri}/events.parquet") is None
+    for _ in range(2):
+        with spark_jobs(spark) as jobs:
+            df = load_table(spark, uri, "events")
+        assert jobs[0] >= 1
+    assert df.count() == 3
+
+
+def test_schema_memo_is_bounded(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(catalog, "_SCHEMA_MEMO_MAX", 2)
+    for i in range(3):
+        spark.range(i + 1).write.parquet(f"{tmp_path}/t{i}.parquet")
+        load_table(spark, str(tmp_path), f"t{i}")
+    assert len(catalog._schemas) == 2
+    with spark_jobs(spark) as jobs:
+        load_table(spark, str(tmp_path), "t2")
+    assert jobs == [0]
