@@ -1100,7 +1100,9 @@ def hilbert_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DRIFT_S = 1_000_000  # chi-square reported in micro-units
 
 
-_DRIFT_ORACLE = f"""
+@query(
+    "drift_chi2_hourly",
+    oracle=f"""
     WITH ev AS (
       SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS w, event_type
       FROM events
@@ -1126,12 +1128,7 @@ _DRIFT_ORACLE = f"""
     SELECT w AS window_start, CAST(n AS BIGINT) AS n_events,
            CAST(sum(term) AS BIGINT) AS chi2_micro
     FROM terms GROUP BY 1, 2 ORDER BY 1
-    """
-
-
-@query(
-    "drift_chi2_hourly",
-    oracle=_DRIFT_ORACLE,
+    """,
     doc=(
         "Windowed distribution-drift monitor - the data-quality watch "
         "a production ingest runs continuously: each hourly window's "
@@ -2715,20 +2712,22 @@ def prequential_summary(clean: DataFrame) -> DataFrame:
     )
 
 
-# LINEAR prequential oracle (round-12 verdict #3; replaces the
-# quadratic strictly-prior self-join that was sf0.01-bounded). The
-# running argmax the walk maintains has a closed scan form: the count
-# of dst d among the prior transitions of src s equals the largest
-# within-(s,d) row_number among them, so the model's prediction at
-# each test point is the dst of the prior row maximizing
-# (within-(src,dst) row_number, then smaller dst) — ONE running max
-# over a packed key, O(n log n). Pack: rn * 2^20 + (2^20-1 - dst)
-# (pages are catalog-bounded ints in [0, 2^20); larger rn wins, ties
-# resolve to the SMALLER dst exactly like the walk's min((-c, k))).
-# This is a genuinely different formulation from the engine's
-# sequential test-then-train walk — their sf1 hash agreement is
-# independent evidence, not a shared derivation.
-_PREQUENTIAL_ORACLE = """
+@query(
+    "browse_prequential_accuracy",
+    # LINEAR prequential oracle (round-12 verdict #3; replaces the
+    # quadratic strictly-prior self-join that was sf0.01-bounded). The
+    # running argmax the walk maintains has a closed scan form: the count
+    # of dst d among the prior transitions of src s equals the largest
+    # within-(s,d) row_number among them, so the model's prediction at
+    # each test point is the dst of the prior row maximizing
+    # (within-(src,dst) row_number, then smaller dst) — ONE running max
+    # over a packed key, O(n log n). Pack: rn * 2^20 + (2^20-1 - dst)
+    # (pages are catalog-bounded ints in [0, 2^20); larger rn wins, ties
+    # resolve to the SMALLER dst exactly like the walk's min((-c, k))).
+    # This is a genuinely different formulation from the engine's
+    # sequential test-then-train walk — their sf1 hash agreement is
+    # independent evidence, not a shared derivation.
+    oracle="""
     WITH pages AS (
       SELECT user_id, event_id,
              CAST(epoch_ms(CAST(ts AS TIMESTAMP)) AS BIGINT) AS ts_ms,
@@ -2776,12 +2775,7 @@ _PREQUENTIAL_ORACLE = """
                 ELSE n_covered * 10000 // n_test END AS BIGINT)
              AS coverage_bp
     FROM agg
-    """
-
-
-@query(
-    "browse_prequential_accuracy",
-    oracle=_PREQUENTIAL_ORACLE,
+    """,
     doc=(
         "PREQUENTIAL (test-then-train) next-page accuracy - the "
         "online-learning evaluation browse_prediction_accuracy's "
@@ -2828,7 +2822,7 @@ def browse_prequential_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "browse_prequential_accuracy_scan",
-    oracle=_PREQUENTIAL_ORACLE,
+    twin="browse_prequential_accuracy",
     doc=(
         "the prequential accuracy computed WITHOUT the sequential "
         "walk - a pure JVM window-scan twin of "
@@ -2991,7 +2985,7 @@ def prequential_by_day(clean: DataFrame) -> DataFrame:
              page AS dst, ts_ms, event_id AS eid
       FROM pages
     ), clean AS (
-      -- same loud page-domain guard as _PREQUENTIAL_ORACLE (r12 ADVICE)
+      -- same loud page-domain guard as browse_prequential_accuracy (r12 ADVICE)
       SELECT src, dst, ts_ms, eid, ts_ms // 86400000 AS epoch_day
       FROM hops WHERE src IS NOT NULL AND src <> dst
         AND CASE WHEN dst BETWEEN 0 AND 1048575 THEN TRUE
@@ -3000,7 +2994,7 @@ def prequential_by_day(clean: DataFrame) -> DataFrame:
             END
     ), rn AS (
       -- linear packed-scan form (round-12 verdict #3): see the
-      -- _PREQUENTIAL_ORACLE comment for the equivalence argument
+      -- browse_prequential_accuracy oracle for the equivalence argument
       SELECT src, dst, ts_ms, eid, epoch_day,
              CAST(row_number() OVER (PARTITION BY src, dst
                     ORDER BY ts_ms, eid) AS BIGINT) AS rn

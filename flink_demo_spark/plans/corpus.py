@@ -584,7 +584,9 @@ def _dsir_ctes(src: str = "documents", p: str = "") -> str:
     )"""
 
 
-_DSIR_ORACLE = f"""
+@query(
+    "sample_dsir",
+    oracle=f"""
     WITH {_dsir_ctes()}
     SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
            CAST(s // n_tokens AS BIGINT) AS dsir_score
@@ -592,12 +594,7 @@ _DSIR_ORACLE = f"""
     WHERE ((doc_id % 1000003) * 2654435761 + 12345) % 1000000007 % {_DSIR_S}
           * 4 < s // n_tokens
     ORDER BY doc_id
-    """
-
-
-@query(
-    "sample_dsir",
-    oracle=_DSIR_ORACLE,
+    """,
     doc=(
         "DSIR-style importance resampling (Xie et al. 2023, 'Data "
         "Selection for Language Models via Importance Resampling'): "
@@ -1126,12 +1123,9 @@ def _pct_oracle() -> str:
     return sql
 
 
-_PCT_ORACLE = _pct_oracle()
-
-
 @query(
     "quality_perceptron",
-    oracle=_PCT_ORACLE,
+    oracle=_pct_oracle(),
     bench=True,
     doc=(
         "Trained quality-classifier filtering - the GPT-3/CCNet "

@@ -2017,7 +2017,9 @@ _IVF_COS = (
 )
 
 
-_IVF_TOPK_ORACLE = f"""
+@query(
+    "similarity_ivf_topk",
+    oracle=f"""
     WITH cent AS (
       SELECT vec_id AS cid, embedding::DOUBLE[] AS cv
       FROM embeddings WHERE vec_id < 8
@@ -2044,12 +2046,7 @@ _IVF_TOPK_ORACLE = f"""
       FROM scored
     ) WHERE rk <= 5
     ORDER BY query_id, rk
-    """
-
-
-@query(
-    "similarity_ivf_topk",
-    oracle=_IVF_TOPK_ORACLE,
+    """,
     doc=(
         "IVF(nprobe=1) ANN: 8 fixed centroids (vec_id<8), nearest-"
         "centroid cell assignment, exact cosine top-5 within the query's "
@@ -2594,7 +2591,9 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.wav_features(clips, "doc_id", "audio")
 
 
-_VAD_ORACLE = """
+@query(
+    "multimodal_vad_segments",
+    oracle="""
     WITH d AS (
       SELECT doc_id, 800 + 16 * (doc_id % 17) AS n FROM documents
     ), s AS (
@@ -2616,12 +2615,7 @@ _VAD_ORACLE = """
            CAST(sum(e) AS BIGINT) AS seg_energy
     FROM a GROUP BY doc_id, island
     ORDER BY doc_id, seg_start
-    """
-
-
-@query(
-    "multimodal_vad_segments",
-    oracle=_VAD_ORACLE,
+    """,
     doc=(
         "voice-activity segmentation - the utterance-splitting pass "
         "every speech-corpus pipeline runs before ASR/training: REAL "
@@ -2704,7 +2698,9 @@ def multimodal_y4m_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.y4m_frame_stats(clips, "doc_id", "video", every=2)
 
 
-_SHOT_ORACLE = """
+@query(
+    "multimodal_shot_boundaries",
+    oracle="""
     WITH d AS (
       SELECT doc_id, 3 + doc_id % 4 AS n FROM documents
     ), f AS (
@@ -2725,12 +2721,7 @@ _SHOT_ORACLE = """
     SELECT doc_id, frame_no, n_frames, sad
     FROM sads WHERE sad > 1500
     ORDER BY doc_id, frame_no
-    """
-
-
-@query(
-    "multimodal_shot_boundaries",
-    oracle=_SHOT_ORACLE,
+    """,
     doc=(
         "shot-boundary detection - the scene-splitting pass video "
         "curation runs before frame sampling (cut detection by "

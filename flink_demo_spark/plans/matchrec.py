@@ -278,47 +278,7 @@ def match_recognize_sum_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_match_recognize",
-    oracle=_BASE
-    + """
-    , nx AS (
-      SELECT b.*,
-             min(CASE WHEN dir <> 1 THEN rn END) OVER (
-               PARTITION BY user_id ORDER BY rn
-               ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)
-               AS next_nonup,
-             max(rn) OVER (PARTITION BY user_id) AS last_rn
-      FROM base b
-    ), match_at AS (
-      SELECT p.user_id, p.rn AS pos,
-             p.value AS start_price, e.value AS top_price,
-             f.value AS end_price, f.rn AS b_rn
-      FROM nx p
-      JOIN base e  ON e.user_id  = p.user_id
-                  AND e.rn  = coalesce(p.next_nonup, p.last_rn + 1) - 1
-      JOIN base d1 ON d1.user_id = p.user_id
-                  AND d1.rn = coalesce(p.next_nonup, p.last_rn + 1) - 2
-      JOIN base f  ON f.user_id  = p.user_id
-                  AND f.rn  = coalesce(p.next_nonup, p.last_rn + 1)
-      WHERE coalesce(p.next_nonup, p.last_rn + 1) - p.rn >= 2
-        AND f.value < d1.value
-    ), walk AS (
-      SELECT user_id, CAST(1 AS BIGINT) AS cur
-      FROM (SELECT DISTINCT user_id FROM pur)
-      UNION ALL
-      SELECT w.user_id, m.b_rn + 1
-      FROM walk w JOIN match_at m
-        ON m.user_id = w.user_id
-       AND m.pos = (SELECT min(pos) FROM match_at x
-                    WHERE x.user_id = w.user_id AND x.pos >= w.cur)
-    )
-    SELECT w.user_id AS symbol,
-           m.start_price, m.top_price, m.end_price
-    FROM walk w JOIN match_at m
-      ON m.user_id = w.user_id
-     AND m.pos = (SELECT min(pos) FROM match_at x
-                  WHERE x.user_id = w.user_id AND x.pos >= w.cur)
-    ORDER BY symbol, m.pos
-    """,
+    twin="match_recognize_rise_fall",
     doc=(
         "streaming MATCH_RECOGNIZE: the rise-fall row-pattern over the "
         "replayed purchase stream via applyInPandasWithState (pending "

@@ -6,6 +6,16 @@ Every operator/query claimed from SURVEY.md §2 registers here with
 parquet tables. The driver's correctness gate compares the two
 (row-count + schema + order-insensitive value hash).
 
+A query that must return the same rows as another registered query
+declares it as ``twin=<name>`` instead of carrying an oracle: a
+streaming replay names its batch twin (the reference's one-query,
+two-runtime-modes contract, ``ExecuteMode.scala:41-72``). The twin
+must be oracle-backed and must not declare a twin itself. Twins are
+resolved once, at the end of ``_load_all()`` when every plan module
+has registered: each twin's spec is replaced in ``REGISTRY`` by one
+whose ``oracle`` is the twin's, so every reader of ``.oracle`` after
+``_load_all()`` sees the inherited SQL.
+
 Determinism contract for every registered query:
 - alias every computed column identically in Spark and oracle SQL;
 - round derived doubles (``round(x, 2..6)``) on BOTH sides;
@@ -16,6 +26,7 @@ Determinism contract for every registered query:
 
 from __future__ import annotations
 
+import dataclasses
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -31,6 +42,7 @@ class QuerySpec:
     oracle: str | None  # DuckDB SQL; None -> driver does rows-only check
     doc: str = ""
     bench: bool = False  # part of the bench.py headline set
+    twin: str | None = None  # same rows as this query; checked by its oracle
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -41,16 +53,39 @@ def query(
     oracle: str | None = None,
     doc: str = "",
     bench: bool = False,
+    twin: str | None = None,
 ) -> Callable[[QueryFn], QueryFn]:
-    """Decorator registering a query implementation + its oracle."""
+    """Decorator registering a query implementation + its oracle (or
+    the twin whose oracle it inherits)."""
+    if oracle is not None and twin is not None:
+        raise ValueError(f"{name}: declares both an oracle and twin={twin!r}")
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = QuerySpec(name, fn, oracle, doc or (fn.__doc__ or ""), bench)
+        REGISTRY[name] = QuerySpec(
+            name, fn, oracle, doc or (fn.__doc__ or ""), bench, twin
+        )
         return fn
 
     return deco
+
+
+def _resolve_twins(registry: dict[str, QuerySpec]) -> None:
+    """Give every twin-declaring spec its twin's oracle, in place."""
+    for name, spec in registry.items():
+        if spec.twin is None:
+            continue
+        root = registry.get(spec.twin)
+        if root is None:
+            raise ValueError(f"{name}: unknown twin {spec.twin!r}")
+        if root.twin is not None:
+            raise ValueError(
+                f"{name}: twin {spec.twin!r} declares twin {root.twin!r} itself"
+            )
+        if root.oracle is None:
+            raise ValueError(f"{name}: twin {spec.twin!r} has no oracle")
+        registry[name] = dataclasses.replace(spec, oracle=root.oracle)
 
 
 # The verification driver samples the FIRST 50 entries of queries(),
@@ -287,7 +322,8 @@ _LOADED = False
 
 
 def _load_all() -> None:
-    """Import all plan modules so their @query decorators run."""
+    """Import all plan modules so their @query decorators run, then
+    resolve the declared twins."""
     global _LOADED
     if _LOADED:
         return
@@ -305,4 +341,5 @@ def _load_all() -> None:
         tpch,
     )
 
+    _resolve_twins(REGISTRY)
     _LOADED = True

@@ -2,10 +2,13 @@
 
 Each runs a real streaming pipeline (file-replay source -> watermark
 -> windowed agg / stream-stream join -> memory sink, availableNow
-trigger) and returns the bounded result; the DuckDB oracle is the
-same SQL as the batch twin — asserting the reference's
+trigger) and returns the bounded result. A query with a batch twin
+declares it (``@query(..., twin="<batch name>")``) and is checked
+against that twin's DuckDB oracle, which the registry hands it once
+every plan module has loaded — asserting the reference's
 batch/stream-unification property (``ExecuteMode.scala:41-72``: same
-query, two runtime modes, same result).
+query, two runtime modes, same result). Only queries with no batch
+twin carry an oracle of their own.
 """
 
 from __future__ import annotations
@@ -22,15 +25,7 @@ from .registry import query
 
 @query(
     "streaming_window_hourly",
-    oracle="""
-    SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS window_start,
-           event_type,
-           count(*)             AS n_events,
-           CAST(round(sum(CAST(value AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_value
-    FROM events
-    GROUP BY 1, 2
-    ORDER BY window_start, event_type
-    """,
+    twin="window_tumbling_hourly",
     doc=(
         "streaming TUMBLE agg (readStream -> withWatermark -> window -> "
         "memory sink, availableNow): must equal the batch/oracle result."
@@ -44,17 +39,7 @@ def streaming_window_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_interval_join",
-    oracle="""
-    SELECT p.event_id AS purchase_id, c.event_id AS click_id, p.user_id
-    FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-          FROM events WHERE event_type = 'purchase') p
-    JOIN (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-          FROM events WHERE event_type = 'click') c
-      ON p.user_id = c.user_id
-     AND c.ts >= p.ts - INTERVAL 10 MINUTES
-     AND c.ts <= p.ts
-    ORDER BY purchase_id, click_id
-    """,
+    twin="interval_join",
     doc=(
         "stream-stream interval join with watermarks on both sides "
         "(reference TxMatch.scala:51-76): equals the batch interval join."
@@ -74,17 +59,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_sliding_window",
-    oracle="""
-    SELECT window_start, count(*) AS n_events, CAST(round(sum(CAST(value AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_value
-    FROM (
-      SELECT time_bucket(INTERVAL 30 MINUTES, CAST(e.ts AS TIMESTAMP))
-               - (o.off * INTERVAL 30 MINUTES) AS window_start,
-             e.value
-      FROM events e CROSS JOIN (VALUES (0), (1)) AS o(off)
-    )
-    GROUP BY window_start
-    ORDER BY window_start
-    """,
+    twin="window_sliding",
     doc="streaming HOP window (1h/30m) — equals the batch sliding window.",
 )
 def streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -147,21 +122,7 @@ def streaming_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_pattern_burst",
-    oracle="""
-    WITH seq AS (
-      SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS ts,
-             lag(event_type) OVER w AS prev_type,
-             lag(event_id)   OVER w AS prev_id,
-             lag(CAST(ts AS TIMESTAMP)) OVER w AS prev_ts
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id)
-    )
-    SELECT user_id, prev_id AS first_error_id, event_id AS second_error_id
-    FROM seq
-    WHERE event_type = 'error' AND prev_type = 'error'
-      AND ts <= prev_ts + INTERVAL 30 MINUTES
-    ORDER BY user_id, first_error_id
-    """,
+    twin="pattern_error_burst",
     doc=(
         "streaming CEP via applyInPandasWithState (reference "
         "LoginFail.scala:78-86 'fail next fail within t'): keyed state "
@@ -180,31 +141,7 @@ def streaming_pattern_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_session_window",
-    oracle="""
-    WITH marked AS (
-      -- (event_id tiebreak in BOTH window passes: tied timestamps must
-      -- see one shared total order or the marking and numbering passes
-      -- can disagree — the instability class the sf1 sweep exposed in
-      -- the sensor-keyed session oracle)
-      SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value, event_id,
-             CASE WHEN lag(CAST(ts AS TIMESTAMP)) OVER w IS NULL THEN 1
-                  WHEN CAST(ts AS TIMESTAMP) >= lag(CAST(ts AS TIMESTAMP)) OVER w
-                       + INTERVAL 30 MINUTES THEN 1
-                  ELSE 0 END AS is_new
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id)
-    ), sess AS (
-      SELECT user_id, ts, value,
-             sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                               ROWS UNBOUNDED PRECEDING) AS session_id
-      FROM marked
-    )
-    SELECT user_id, min(ts) AS session_start,
-           count(*) AS n_events,
-           CAST(round(sum(CAST(value AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_value
-    FROM sess GROUP BY user_id, session_id
-    ORDER BY user_id, session_start
-    """,
+    twin="window_session",
     doc=(
         "streaming session windows with watermark (reference "
         "EventTimeSessionWindows Window.scala:124): state-merged "
@@ -272,26 +209,7 @@ def streaming_window_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_hotitems_topn",
-    oracle="""
-    WITH per_window AS (
-      SELECT window_start, user_id, count(*) AS n_views
-      FROM (
-        SELECT time_bucket(INTERVAL 30 MINUTES, CAST(e.ts AS TIMESTAMP))
-                 - (o.off * INTERVAL 30 MINUTES) AS window_start,
-               e.user_id
-        FROM events e CROSS JOIN (VALUES (0), (1)) AS o(off)
-        WHERE e.event_type = 'view'
-      )
-      GROUP BY window_start, user_id
-    )
-    SELECT window_start, rk, user_id, n_views FROM (
-      SELECT window_start, user_id, n_views,
-             CAST(row_number() OVER (PARTITION BY window_start
-                                     ORDER BY n_views DESC, user_id) AS INT) AS rk
-      FROM per_window
-    ) WHERE rk <= 3
-    ORDER BY window_start, rk
-    """,
+    twin="hotitems_topn",
     bench=True,
     doc=(
         "streaming HotItems (reference HotItems.scala:25-122, the "
@@ -708,15 +626,7 @@ def streaming_allowed_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_kafka_window",
-    oracle="""
-    SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS window_start,
-           event_type,
-           count(*)             AS n_events,
-           CAST(round(sum(CAST(value AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_value
-    FROM events
-    GROUP BY 1, 2
-    ORDER BY window_start, event_type
-    """,
+    twin="window_tumbling_hourly",
     doc=(
         "the reference's flagship pipeline shape END TO END: Kafka "
         "consumer -> event time -> TUMBLE agg (Source.scala:116-155 + "
@@ -771,17 +681,7 @@ def streaming_kafka_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # drops nothing and the in-order replay decides every pair — a
     # times(2) match cannot extend, so the final pair emits without a
     # sentinel
-    oracle="""
-    WITH pur AS (
-      SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-             row_number() OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) AS rn
-      FROM events WHERE event_type = 'purchase'
-    )
-    SELECT a.user_id, a.event_id AS first_id, b.event_id AS second_id
-    FROM pur a JOIN pur b ON b.user_id = a.user_id AND b.rn = a.rn + 1
-    ORDER BY a.user_id, first_id
-    """,
+    twin="cep_skip_to_last_pairs",
     doc=(
         "streaming AFTER MATCH SKIP TO LAST (round-5 skip-strategy "
         "closure, CEPDemo.scala skipToLast:949): the sliding "
@@ -1161,32 +1061,7 @@ _MIX_LANGS = ["de", "en", "es", "fr", "zh"]
 
 @query(
     "streaming_mix_temperature",
-    oracle=f"""
-    WITH stats AS (
-      SELECT CAST(count(*) AS DOUBLE) AS total,
-             {", ".join(
-                 f"CAST(sum(CASE WHEN lang = '{l}' THEN 1 ELSE 0 END) AS DOUBLE)"
-                 f" AS c_{l}" for l in _MIX_LANGS)}
-      FROM documents
-    ), r AS (
-      SELECT d.doc_id, d.lang,
-             (((d.doc_id % 1000003) * 2654435761 + 12345) % 1000000007)
-               % 1000000 AS bucket,
-             least(1.0,
-                   0.6 * s.total
-                     * (CASE d.lang {" ".join(
-                           f"WHEN '{l}' THEN sqrt(s.c_{l})" for l in _MIX_LANGS)} END)
-                     / ({" + ".join(f"sqrt(s.c_{l})" for l in _MIX_LANGS)})
-                     / (CASE d.lang {" ".join(
-                           f"WHEN '{l}' THEN s.c_{l}" for l in _MIX_LANGS)} END)
-             ) AS rate
-      FROM documents d CROSS JOIN stats s
-    )
-    SELECT doc_id, lang, round(rate, 6) AS keep_rate
-    FROM r
-    WHERE bucket < floor(rate * 1000000)
-    ORDER BY doc_id
-    """,
+    twin="mix_temperature_langs",
     doc=(
         "temperature-based language mixing on a live document FEED: "
         "the per-language keep rates come from the STATIC corpus "
@@ -1240,15 +1115,9 @@ def streaming_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(kept, output_mode="append")
 
 
-def _dsir_oracle():
-    from .corpus import _DSIR_ORACLE
-
-    return _DSIR_ORACLE
-
-
 @query(
     "streaming_sample_dsir",
-    oracle=_dsir_oracle(),
+    twin="sample_dsir",
     doc=(
         "DSIR importance resampling on a live document FEED - the "
         "online-filtering production shape: the 256-bucket importance "
@@ -1298,15 +1167,9 @@ def streaming_sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(kept, output_mode="append")
 
 
-def _ivf_topk_oracle_ref():
-    from .datapipe import _IVF_TOPK_ORACLE
-
-    return _IVF_TOPK_ORACLE
-
-
 @query(
     "streaming_similarity_ivf",
-    oracle=_ivf_topk_oracle_ref(),
+    twin="similarity_ivf_topk",
     doc=(
         "Online vector search: a stream of query vectors served "
         "against a static IVF index - how ANN actually runs as a "
@@ -1359,7 +1222,7 @@ def streaming_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(served, output_mode="append")
 
 
-def _mmr_ivf_oracle_ref():
+def _mmr_ivf_oracle():
     """MMR over IVF(nprobe=1) candidates: the production serving
     composition — re-rank what the index returns, not the exact top-k.
     Reuses datapipe's parameterized greedy unroll with a MATERIALIZED
@@ -1368,7 +1231,7 @@ def _mmr_ivf_oracle_ref():
     DuckDB at sf1 — the round-12/13 lesson again). Cell assignment
     uses the UNROUNDED cosine with the cid tie-break, bit-matching the
     engine's ivf_assign (sim, -cid) argmax; round-6 applies only to
-    the candidate similarities, like _IVF_TOPK_ORACLE."""
+    the candidate similarities, like similarity_ivf_topk's oracle."""
     from .datapipe import _IVF_COS, _MMR_COS, _mmr_oracle
 
     cos = _MMR_COS
@@ -1411,7 +1274,7 @@ def _mmr_ivf_oracle_ref():
 
 @query(
     "streaming_similarity_mmr",
-    oracle=_mmr_ivf_oracle_ref(),
+    oracle=_mmr_ivf_oracle(),
     doc=(
         "Online diversity-aware vector search - the full serving "
         "composition of a retrieval endpoint: arriving query vectors "
@@ -1478,15 +1341,9 @@ def streaming_similarity_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _drift_oracle_ref():
-    from .behavior import _DRIFT_ORACLE
-
-    return _DRIFT_ORACLE
-
-
 @query(
     "streaming_drift_chi2",
-    oracle=_drift_oracle_ref(),
+    twin="drift_chi2_hourly",
     doc=(
         "Distribution-drift monitoring on the LIVE event stream: the "
         "per-(hourly window, event_type) counts run as the single "
@@ -1608,16 +1465,9 @@ def streaming_ivf_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(out, output_mode="append")
 
 
-def _ivf_nprobe_oracle_ref():
-    from . import datapipe  # noqa: F401 — ensures registration ran
-    from .registry import REGISTRY
-
-    return REGISTRY["similarity_ivf_nprobe"].oracle
-
-
 @query(
     "streaming_similarity_ivf_nprobe",
-    oracle=_ivf_nprobe_oracle_ref(),
+    twin="similarity_ivf_nprobe",
     doc=(
         "Multi-probe streaming ANN serve (nprobe=2, the standard IVF "
         "recall knob): each arriving query vector computes its TWO "
@@ -1786,15 +1636,9 @@ def streaming_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(verified, output_mode="append")
 
 
-def _pct_oracle_ref():
-    from .corpus import _PCT_ORACLE
-
-    return _PCT_ORACLE
-
-
 @query(
     "streaming_quality_perceptron",
-    oracle=_pct_oracle_ref(),
+    twin="quality_perceptron",
     doc=(
         "Trained quality classifier SERVING on a live document feed - "
         "the deploy half of the GPT-3/CCNet filtering stage: the "
@@ -2022,36 +1866,7 @@ group by id,SESSION(t,INTERVAL '3' SECOND)
 
 @query(
     "streaming_session_dynamic",
-    oracle="""
-    WITH g AS (
-      SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value, event_id,
-             CASE WHEN event_type = 'click' THEN INTERVAL 10 MINUTES
-                  ELSE INTERVAL 45 MINUTES END AS gap
-      FROM events
-    ), marked AS (
-      -- shared (ts, event_id) order in both passes: see window_session
-      SELECT user_id, ts, value, event_id,
-             CASE WHEN max(ts + gap) OVER (
-                    PARTITION BY user_id ORDER BY ts, event_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                  ) IS NULL THEN 1
-                  WHEN ts >= max(ts + gap) OVER (
-                    PARTITION BY user_id ORDER BY ts, event_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                  ) THEN 1 ELSE 0 END AS is_new
-      FROM g
-    ), sess AS (
-      SELECT user_id, ts, value,
-             sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                               ROWS UNBOUNDED PRECEDING) AS session_id
-      FROM marked
-    )
-    SELECT user_id, min(ts) AS session_start,
-           count(*) AS n_events,
-           CAST(round(sum(CAST(value AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_value
-    FROM sess GROUP BY user_id, session_id
-    ORDER BY user_id, session_start
-    """,
+    twin="window_session_dynamic",
     doc=(
         "STREAMING dynamic-gap session window (reference Window.scala:157 "
         "SessionWindowTimeGapExtractor runs on an unbounded stream): "
@@ -2140,21 +1955,9 @@ def streaming_quality_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(kept, output_mode="append")
 
 
-def _vad_oracle_ref():
-    from .datapipe import _VAD_ORACLE
-
-    return _VAD_ORACLE
-
-
-def _shot_oracle_ref():
-    from .datapipe import _SHOT_ORACLE
-
-    return _SHOT_ORACLE
-
-
 @query(
     "streaming_vad_segments",
-    oracle=_vad_oracle_ref(),
+    twin="multimodal_vad_segments",
     doc=(
         "voice-activity segmentation on a LIVE clip feed - the "
         "streaming form of multimodal_vad_segments: each arriving "
@@ -2181,7 +1984,7 @@ def streaming_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_shot_boundaries",
-    oracle=_shot_oracle_ref(),
+    twin="multimodal_shot_boundaries",
     doc=(
         "shot-boundary detection on a LIVE clip feed - the streaming "
         "form of multimodal_shot_boundaries, and already streaming-"
@@ -2257,16 +2060,9 @@ def streaming_mix_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rate_spikes_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["events_rate_spikes"].oracle
-
-
 @query(
     "streaming_rate_spikes",
-    oracle=_rate_spikes_oracle_ref(),
+    twin="events_rate_spikes",
     doc=(
         "ingest rate-spike detection on the LIVE feed - the streaming "
         "twin of events_rate_spikes, built like streaming_drift_chi2: "
@@ -2306,16 +2102,9 @@ def streaming_rate_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _funnel_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["funnel_conversion"].oracle
-
-
 @query(
     "streaming_funnel_conversion",
-    oracle=_funnel_oracle_ref(),
+    twin="funnel_conversion",
     doc=(
         "funnel conversion (view -> click -> purchase) on the LIVE "
         "event stream - the streaming twin of funnel_conversion "
@@ -2379,16 +2168,9 @@ def streaming_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _transition_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["browse_transition_topk"].oracle
-
-
 @query(
     "streaming_browse_transitions",
-    oracle=_transition_oracle_ref(),
+    twin="browse_transition_topk",
     doc=(
         "browse-graph Markov transitions (top-3 next pages) on the "
         "LIVE stream - streaming twin of browse_transition_topk. The "
@@ -2446,16 +2228,9 @@ def streaming_browse_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _diversity_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["user_event_diversity"].oracle
-
-
 @query(
     "streaming_user_event_diversity",
-    oracle=_diversity_oracle_ref(),
+    twin="user_event_diversity",
     doc=(
         "per-user Gini-Simpson behavioral diversity on the LIVE "
         "stream - streaming twin of user_event_diversity. The "
@@ -2488,16 +2263,9 @@ def streaming_user_event_diversity(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-def _gopher_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["quality_gopher_rules"].oracle
-
-
 @query(
     "streaming_gopher_rules",
-    oracle=_gopher_oracle_ref(),
+    twin="quality_gopher_rules",
     doc=(
         "Gopher quality rules on the LIVE document feed - the "
         "streaming twin of quality_gopher_rules and the shape of a "
@@ -2516,16 +2284,9 @@ def streaming_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(gopher_rules_frame(docs), output_mode="append")
 
 
-def _triangle_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["browse_triangle_count"].oracle
-
-
 @query(
     "streaming_browse_triangles",
-    oracle=_triangle_oracle_ref(),
+    twin="browse_triangle_count",
     doc=(
         "browse-graph triangle census on the LIVE stream - streaming "
         "twin of browse_triangle_count: per-user journeys accumulate "
@@ -2589,16 +2350,9 @@ def streaming_browse_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nodes.crossJoin(F.broadcast(ecnt)).crossJoin(F.broadcast(tri))
 
 
-def _mad_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["events_hourly_mad_outliers"].oracle
-
-
 @query(
     "streaming_mad_outliers",
-    oracle=_mad_oracle_ref(),
+    twin="events_hourly_mad_outliers",
     doc=(
         "hourly MAD anomaly flags on the LIVE stream - streaming twin "
         "of events_hourly_mad_outliers, built like "
@@ -2651,16 +2405,9 @@ def streaming_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oov_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["text_oov_rate"].oracle
-
-
 @query(
     "streaming_oov_rate",
-    oracle=_oov_oracle_ref(),
+    twin="text_oov_rate",
     doc=(
         "OOV-rate serve on the LIVE document feed with a FROZEN "
         "vocabulary - the deploy shape of text_oov_rate (train the "
@@ -2715,16 +2462,9 @@ def streaming_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(scored, output_mode="append")
 
 
-def _session_pairs_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["session_page_pairs_topk"].oracle
-
-
 @query(
     "streaming_session_pairs",
-    oracle=_session_pairs_oracle_ref(),
+    twin="session_page_pairs_topk",
     doc=(
         "in-session page co-occurrence on the LIVE stream - streaming "
         "twin of session_page_pairs_topk: per-user journeys accumulate "
@@ -2791,16 +2531,9 @@ def streaming_session_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _gini_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["corpus_source_gini"].oracle
-
-
 @query(
     "streaming_source_gini",
-    oracle=_gini_oracle_ref(),
+    twin="corpus_source_gini",
     doc=(
         "corpus balance (Gini) on the LIVE document feed - streaming "
         "twin of corpus_source_gini, the ingest-side mixing monitor: "
@@ -2840,16 +2573,9 @@ def streaming_source_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _label_drift_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["embedding_label_drift"].oracle
-
-
 @query(
     "streaming_label_drift",
-    oracle=_label_drift_oracle_ref(),
+    twin="embedding_label_drift",
     doc=(
         "per-label embedding centroid drift on the LIVE vector feed - "
         "streaming twin of embedding_label_drift (the online "
@@ -2922,16 +2648,9 @@ def streaming_label_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.select("label", "n_vecs", F.round(cos, 6).alias("cos_to_global"))
 
 
-def _retention_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["retention_weekly_cohort"].oracle
-
-
 @query(
     "streaming_retention_cohort",
-    oracle=_retention_oracle_ref(),
+    twin="retention_weekly_cohort",
     doc=(
         "weekly cohort retention on the LIVE stream - streaming twin "
         "of retention_weekly_cohort: per user, the first-activity "
@@ -2972,16 +2691,9 @@ def streaming_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dau_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["events_dau_wau_mau"].oracle
-
-
 @query(
     "streaming_dau_wau_mau",
-    oracle=_dau_oracle_ref(),
+    twin="events_dau_wau_mau",
     doc=(
         "DAU/WAU/MAU on the LIVE stream - streaming twin of "
         "events_dau_wau_mau: the (day, user) distinct census runs as "
@@ -3023,16 +2735,9 @@ def streaming_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cumulate_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["window_cumulate"].oracle
-
-
 @query(
     "streaming_window_cumulate",
-    oracle=_cumulate_oracle_ref(),
+    twin="window_cumulate",
     doc=(
         "CUMULATE windows on the LIVE stream - the construct's native "
         "habitat (Flink ships cumulate precisely for early-firing "
@@ -3071,16 +2776,9 @@ def streaming_window_cumulate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _quantiles_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["events_value_quantiles_by_type"].oracle
-
-
 @query(
     "streaming_value_quantiles",
-    oracle=_quantiles_oracle_ref(),
+    twin="events_value_quantiles_by_type",
     doc=(
         "exact per-type value quantiles on the LIVE stream - "
         "streaming twin of events_value_quantiles_by_type: the "
@@ -3217,16 +2915,9 @@ def streaming_dau_wau_mau_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _repetition_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["quality_repetition_rules"].oracle
-
-
 @query(
     "streaming_repetition_rules",
-    oracle=_repetition_oracle_ref(),
+    twin="quality_repetition_rules",
     doc=(
         "Gopher repetition rules on the LIVE document feed - "
         "streaming twin of quality_repetition_rules, and the shape a "
@@ -3252,16 +2943,9 @@ def streaming_repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _decayed_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["events_decayed_popularity"].oracle
-
-
 @query(
     "streaming_decayed_popularity",
-    oracle=_decayed_oracle_ref(),
+    twin="events_decayed_popularity",
     doc=(
         "exponential-decay trending pages on the LIVE stream - "
         "streaming twin of events_decayed_popularity (the dashboard "
@@ -3315,16 +2999,9 @@ def streaming_decayed_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _chunk_cdc_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["chunk_cdc"].oracle
-
-
 @query(
     "streaming_chunk_cdc",
-    oracle=_chunk_cdc_oracle_ref(),
+    twin="chunk_cdc",
     doc=(
         "content-defined chunking on the LIVE document feed - how CDC "
         "actually runs in an incremental-crawl ingest (each arriving "
@@ -3370,16 +3047,9 @@ def streaming_chunk_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _vocab_coverage_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["text_vocab_coverage"].oracle
-
-
 @query(
     "streaming_vocab_coverage",
-    oracle=_vocab_coverage_oracle_ref(),
+    twin="text_vocab_coverage",
     doc=(
         "vocabulary coverage curve on the LIVE document feed - the "
         "tokenizer-design dashboard updated as the crawl ingests: "
@@ -3434,16 +3104,9 @@ def streaming_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _interarrival_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["user_interarrival_bots"].oracle
-
-
 @query(
     "streaming_interarrival_bots",
-    oracle=_interarrival_oracle_ref(),
+    twin="user_interarrival_bots",
     doc=(
         "burstiness bot screen on the LIVE stream - the signal is "
         "only useful while the traffic is arriving: per-user event "
@@ -3501,16 +3164,9 @@ def streaming_interarrival_bots(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _chunk_level_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["dedup_chunk_level"].oracle
-
-
 @query(
     "streaming_chunk_savings",
-    oracle=_chunk_level_oracle_ref(),
+    twin="dedup_chunk_level",
     doc=(
         "chunk-level dedup savings on the LIVE crawl - the "
         "content-addressed-store dashboard number updated as "
@@ -3551,16 +3207,9 @@ def streaming_chunk_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _attribution_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["attribution_last_touch"].oracle
-
-
 @query(
     "streaming_attribution",
-    oracle=_attribution_oracle_ref(),
+    twin="attribution_last_touch",
     doc=(
         "last-touch attribution on the LIVE stream - the growth "
         "dashboard this query feeds is watched in real time: "
@@ -3643,16 +3292,9 @@ def streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _session_dur_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["session_duration_quantiles"].oracle
-
-
 @query(
     "streaming_session_duration",
-    oracle=_session_dur_oracle_ref(),
+    twin="session_duration_quantiles",
     doc=(
         "session-duration quantiles on the LIVE stream - the "
         "engagement dashboard's continuous form: per-user journeys "
@@ -3766,7 +3408,7 @@ def _evicting_session_quantiles(
 
 @query(
     "streaming_session_duration_v2",
-    oracle=_session_dur_oracle_ref(),
+    twin="session_duration_quantiles",
     doc=(
         "session-duration quantiles with EVICTING state - the "
         "production form of streaming_session_duration (round-10 "
@@ -3794,7 +3436,7 @@ def streaming_session_duration_v2(
 
 @query(
     "streaming_session_duration_v2_multi",
-    oracle=_session_dur_oracle_ref(),
+    twin="session_duration_quantiles",
     doc=(
         "streaming_session_duration_v2 replayed across MULTIPLE "
         "micro-batches (3 time-ordered chunks at maxFilesPerTrigger=1 "
@@ -3820,7 +3462,7 @@ def streaming_session_duration_v2_multi(
 
 @query(
     "streaming_attribution_v2",
-    oracle=_attribution_oracle_ref(),
+    twin="attribution_last_touch",
     doc=(
         "last-touch attribution with EVICTING state - the production "
         "form of streaming_attribution (same upgrade as "
@@ -3852,16 +3494,9 @@ def streaming_attribution_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _prequential_oracle_ref():
-    from .registry import REGISTRY, _load_all
-
-    _load_all()
-    return REGISTRY["browse_prequential_accuracy"].oracle
-
-
 @query(
     "streaming_prequential_accuracy",
-    oracle=_prequential_oracle_ref(),
+    twin="browse_prequential_accuracy",
     doc=(
         "prequential next-page accuracy on the LIVE stream - the "
         "deployment shape of browse_prequential_accuracy: transitions "
