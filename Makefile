@@ -4,7 +4,7 @@
 
 SF001 ?= /root/testdata/sf0.01
 
-.PHONY: test parity parity-sf001 driver-sim driver-coverage plans bench replay-sweep
+.PHONY: test parity parity-sf001 driver-sim driver-coverage plans bench replay-sweep plan-sweep
 
 # full local suite (sf0.001 oracles + goldens + e2e), run exactly as
 # the Tier-1 gate runs it (ROADMAP.md "Tier-1 verify")
@@ -37,6 +37,11 @@ plans:
 # rows and normalized result hash; diff two checkouts' tables
 replay-sweep:
 	python tools/replay_sweep.py --sf $(SF001)
+
+# every non-streaming registry query at sf0.01: analyzed and optimized
+# logical plan hashes; diff two checkouts' tables
+plan-sweep:
+	python tools/plan_sweep.py --sf $(SF001)
 
 bench:
 	python bench.py

@@ -10,6 +10,6 @@ semantics demand:
 - ``sessionize``  gap-based sessionization (session windows, batch)
 - ``dedup``       exact + MinHash-LSH + SimHash near-duplicate detection
 - ``similarity``  embedding cosine top-k (brute force + LSH-bucketed)
-- ``text``        token stats, quality score, lang-id, fingerprinting
+- ``text``        tokens, shingles, fingerprinting, scan fan-out
 - ``cep``         NFA pattern matching (CEP / MATCH_RECOGNIZE subset)
 """

@@ -895,6 +895,15 @@ def match_pattern_all(
     return _grouped_map(df, key_cols, run, output_schema)
 
 
+def first_two_ids(rows: pd.DataFrame, bindings: dict[str, list[int]]) -> dict:
+    """Measures of a two-event ``p`` match: both event ids (the SKIP TO
+    LAST pair chain, batch and streaming)."""
+    return {
+        "first_id": int(rows.iloc[bindings["p"][0]]["event_id"]),
+        "second_id": int(rows.iloc[bindings["p"][1]]["event_id"]),
+    }
+
+
 def _partial_bindings(
     rows: pd.DataFrame,
     start: int,

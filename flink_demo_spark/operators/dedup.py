@@ -293,16 +293,6 @@ def minhash_table(
     )
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, num_hashes: int = 16, k: int = 3
-) -> DataFrame:
-    """Per-doc MinHash signature as one array column."""
-    mh = minhash_table(df, text_col, id_col, num_hashes, k)
-    return mh.select(
-        "doc_id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("signature")
-    )
-
-
 def lsh_band_table(sigs: DataFrame, num_hashes: int = 16, bands: int = 4) -> DataFrame:
     """(doc_id, band, bucket) LSH index rows from a minhash_table
     frame: each band's minhashes fold into one bucket key via a

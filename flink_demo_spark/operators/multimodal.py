@@ -1,9 +1,9 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Multimodal column plumbing: opaque binary payloads and their decoders.
 
 Beyond-reference surface (BASELINE.json north star): treat
-image/audio/video as `binary` columns with a typed metadata struct;
-decode / feature-extract / resize / frame-sample run as Arrow-batched
-pandas functions over ``mapInPandas``.
+image/audio/video as `binary` columns; decode / feature-extract /
+resize / frame-sample run as Arrow-batched pandas functions over
+``mapInPandas``.
 
 This container has no image/audio codec LIBRARIES, so decode splits
 in two: uncompressed binary PPM (P6) is decoded FOR REAL below
@@ -13,9 +13,7 @@ compressed formats (JPEG/PNG/video) stay behind the clearly-marked
 deterministic stub. Everything around decode — schema, batch
 iteration, partition behavior, column pruning — is real and what
 matters at 100 TB: payloads stream through executors in Arrow
-batches, metadata extraction never touches the driver, and
-downstream filters on the metadata struct prune before any decode
-work.
+batches and metadata extraction never touches the driver.
 """
 
 from __future__ import annotations
@@ -26,26 +24,6 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-# metadata struct attached to every binary payload column
-MEDIA_META_SCHEMA = (
-    "n_bytes int, sha256 string, media_type string"
-)
-
-
-def attach_metadata(
-    df: DataFrame, binary_col: str, media_type: str = "application/octet-stream"
-) -> DataFrame:
-    """Typed metadata struct from the payload — pure JVM expressions."""
-    return df.withColumn(
-        "media_meta",
-        F.struct(
-            F.length(F.col(binary_col)).alias("n_bytes"),
-            F.sha2(F.col(binary_col), 256).alias("sha256"),
-            F.lit(media_type).alias("media_type"),
-        ),
-    )
 
 
 def _fake_decode_dims(payload: bytes) -> tuple[int, int]:

@@ -1,10 +1,9 @@
 """Text analysis operators for large-scale training-data pipelines.
 
-Beyond-reference surface (SURVEY.md §7 phase 6): token counting,
-quality scoring, language-ID heuristics, and document fingerprinting
-over the ``documents`` table — all pure column expressions (JVM-side,
-whole-stage-codegen) so they stream through a 100 TB scan without
-Python in the hot path.
+Beyond-reference surface (SURVEY.md §7 phase 6): tokenizing,
+shingling and document fingerprinting over the ``documents`` table —
+all pure column expressions (JVM-side, whole-stage-codegen) so they
+stream through a 100 TB scan without Python in the hot path.
 """
 
 from __future__ import annotations
@@ -62,38 +61,6 @@ def tokens(text: str | Column) -> Column:
 
 def token_count(text: str | Column) -> Column:
     return F.size(tokens(text))
-
-
-def distinct_token_count(text: str | Column) -> Column:
-    return F.size(F.array_distinct(tokens(text)))
-
-
-def stopword_count(text: str | Column) -> Column:
-    toks = tokens(text)
-    sw = F.array(*[F.lit(s) for s in STOPWORDS])
-    return F.size(F.filter(toks, lambda t: F.array_contains(sw, F.lower(t))))
-
-
-def quality_score(text: str | Column) -> Column:
-    """Deterministic [0,1] quality heuristic.
-
-    0.5 * min(1, n_tokens/50)          (length credit)
-    + 0.3 * distinct_tokens/n_tokens   (lexical diversity)
-    + 0.2 * min(1, 10*stopwords/n_tokens)  (function-word presence)
-    """
-    n = token_count(text).cast("double")
-    d = distinct_token_count(text).cast("double")
-    s = stopword_count(text).cast("double")
-    return (
-        F.lit(0.5) * F.least(F.lit(1.0), n / F.lit(50.0))
-        + F.lit(0.3) * (d / n)
-        + F.lit(0.2) * F.least(F.lit(1.0), F.lit(10.0) * s / n)
-    )
-
-
-def langid_en_score(text: str | Column) -> Column:
-    """Share of tokens that are common-English function words."""
-    return stopword_count(text).cast("double") / token_count(text).cast("double")
 
 
 def fingerprint(text: str | Column) -> Column:
@@ -159,13 +126,6 @@ def shingles(text: str | Column, k: int = 3) -> Column:
 # single non-space symbols. Deliberately lookahead-free so the Java
 # (Spark) and RE2 (DuckDB oracle) regex engines agree.
 BPE_PATTERN = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
-
-
-def bpe_token_count(text: str | Column) -> Column:
-    """Subword-ish token count from the BPE-style pre-tokenizer regex
-    (a cheap proxy for LLM token budgeting at corpus scale)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.size(F.regexp_extract_all(c, F.lit(BPE_PATTERN), F.lit(0)))
 
 
 def winnow_fingerprints(

@@ -13,7 +13,7 @@ re-expressed on the events table (SURVEY.md §2.6/2.7 applied rows).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -56,18 +56,28 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def hotitems_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir).where(F.col("event_type") == "view")
-    per_window = (
-        ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "user_id")
+    return hotitems_top3(hotitems_window_views(_events(spark, sf_dir)))
+
+
+def hotitems_window_views(ev: DataFrame) -> DataFrame:
+    """Views per (1h/30m sliding window, user): the aggregation that
+    the streaming twin keeps in state."""
+    return (
+        ev.where(F.col("event_type") == "view")
+        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_views"))
         .select(F.col("w.start").alias("window_start"), "user_id", "n_views")
     )
+
+
+def hotitems_top3(per_window: DataFrame) -> DataFrame:
+    """The 3 users with the most views in each window (user_id breaks
+    ties)."""
     rk = Window.partitionBy("window_start").orderBy(F.desc("n_views"), "user_id")
     return (
         per_window.withColumn("rk", F.row_number().over(rk))
         .where(F.col("rk") <= 3)
         .select("window_start", "rk", "user_id", "n_views")
-        
     )
 
 
@@ -698,15 +708,8 @@ def cep_skip_to_last_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .relaxed()
         .skip_to_last("p")
     )
-
-    def measures(rows, b):
-        return {
-            "first_id": int(rows.iloc[b["p"][0]]["event_id"]),
-            "second_id": int(rows.iloc[b["p"][1]]["event_id"]),
-        }
-
     out = cep.match_pattern(
-        ev, pat, ["user_id"], "ts", measures,
+        ev, pat, ["user_id"], "ts", cep.first_two_ids,
         "user_id long, first_id long, second_id long",
         order_cols=["ts", "event_id"],
     )
@@ -1150,9 +1153,15 @@ def drift_chi2_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir)
     w = F.window("ts", "1 hour").alias("w")
     census = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("g"))
-    census = census.withColumn("gt", F.sum("g").over(Window.partitionBy()))
     wins = ev.groupBy(w).agg(F.count(F.lit(1)).alias("n"))
     o = ev.groupBy(w, F.col("event_type")).agg(F.count(F.lit(1)).alias("o"))
+    return drift_chi2_frame(census, wins, o)
+
+
+def drift_chi2_frame(census: DataFrame, wins: DataFrame, o: DataFrame) -> DataFrame:
+    """Per-window chi-square of the (window, event_type) counts ``o``
+    against the global type census, from the window sizes ``wins``."""
+    census = census.withColumn("gt", F.sum("g").over(Window.partitionBy()))
     grid = wins.crossJoin(F.broadcast(census))
     j = grid.join(o, ["w", "event_type"], "left").withColumn(
         "o0", F.coalesce(F.col("o"), F.lit(0).cast("long"))
@@ -1239,28 +1248,35 @@ def _funnel_oracle() -> str:
 )
 def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir)
+    e = F.struct(F.col("ts"), F.col("event_id").alias("eid"), funnel_step().alias("si"))
+    per_user = (
+        ev.select("user_id", e.alias("e"))
+        .groupBy("user_id")
+        .agg(F.array_sort(F.collect_list("e")).alias("evts"))
+    )
+    return funnel_reach(per_user)
+
+
+def funnel_step() -> Column:
+    """An event's 1-based funnel step, 0 off the funnel."""
     si = F.lit(0).cast("long")
     for i, s in enumerate(_FUNNEL_STEPS):
         si = F.when(F.col("event_type") == s, i + 1).otherwise(si)
-    per_user = (
-        ev.select(
-            "user_id",
-            F.struct(F.col("ts"), F.col("event_id").alias("eid"), si.alias("si")).alias(
-                "e"
-            ),
-        )
-        .groupBy("user_id")
-        .agg(F.array_sort(F.collect_list("e")).alias("evts"))
-        .select(
-            "user_id",
-            F.aggregate(
-                F.transform("evts", lambda s: s["si"]),
-                F.lit(0).cast("long"),
-                lambda a, b: F.when(b == a + 1, b).otherwise(a),
-            ).alias("stage"),
-        )
+    return si
+
+
+def funnel_reach(per_user: DataFrame) -> DataFrame:
+    """Users reaching each funnel step, from each user's time-sorted
+    (ts, eid, si = ``funnel_step``) structs ``evts``."""
+    stage = per_user.select(
+        "user_id",
+        F.aggregate(
+            F.transform("evts", lambda s: s["si"]),
+            F.lit(0).cast("long"),
+            lambda a, b: F.when(b == a + 1, b).otherwise(a),
+        ).alias("stage"),
     )
-    agg = per_user.agg(
+    agg = stage.agg(
         *[
             F.sum(F.when(F.col("stage") >= i + 1, 1).otherwise(0))
             .cast("long")
@@ -1417,6 +1433,12 @@ def events_rate_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = ev.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("window_start")
     ).agg(F.count(F.lit(1)).alias("cnt"))
+    return rate_spikes_frame(c)
+
+
+def rate_spikes_frame(c: DataFrame) -> DataFrame:
+    """The (event_type, window_start) hours whose count ``cnt`` is over
+    1.5x the mean of the type's previous 24 hours (at least 6 seen)."""
     w = (
         Window.partitionBy("event_type")
         .orderBy("window_start")
@@ -1479,6 +1501,11 @@ def browse_transition_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     hops = pages.select(
         F.lag("page").over(w).alias("src"), F.col("page").alias("dst")
     )
+    return transition_topk_frame(hops)
+
+
+def transition_topk_frame(hops: DataFrame) -> DataFrame:
+    """The top-3 next pages of each page, from (src, dst) page hops."""
     edges = (
         hops.where(F.col("src").isNotNull() & (F.col("src") != F.col("dst")))
         .groupBy("src", "dst")
@@ -1530,8 +1557,16 @@ def browse_transition_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def user_event_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    c = ev.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("cnt"))
+    return event_diversity_frame(event_type_counts(_events(spark, sf_dir)))
+
+
+def event_type_counts(ev: DataFrame) -> DataFrame:
+    """Events per (user, event type)."""
+    return ev.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("cnt"))
+
+
+def event_diversity_frame(c: DataFrame) -> DataFrame:
+    """Each user's Gini-Simpson event-type diversity, in basis points."""
     u = c.groupBy("user_id").agg(
         F.sum("cnt").cast("long").alias("n_events"),
         F.sum(F.col("cnt") * F.col("cnt")).cast("long").alias("sum_sq"),
@@ -1592,6 +1627,12 @@ def browse_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     hops = ev.select(
         "user_id", "ts", "event_id", page.alias("page")
     ).select(F.lag("page").over(w).alias("src"), F.col("page").alias("dst"))
+    return triangle_census_frame(hops)
+
+
+def triangle_census_frame(hops: DataFrame) -> DataFrame:
+    """Nodes, edges and triangles of the undirected page graph whose
+    edges are the (src, dst) page hops."""
     edges = (
         hops.where(F.col("src").isNotNull() & (F.col("src") != F.col("dst")))
         .select(
@@ -1619,9 +1660,7 @@ def browse_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
     )
     ecnt = edges.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
-    return (
-        nodes.crossJoin(F.broadcast(ecnt)).crossJoin(F.broadcast(tri))
-    )
+    return nodes.crossJoin(F.broadcast(ecnt)).crossJoin(F.broadcast(tri))
 
 
 @query(
@@ -1741,7 +1780,12 @@ def events_hourly_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = ev.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("window_start")
     ).agg(F.count(F.lit(1)).cast("long").alias("cnt")).persist()
+    return mad_outliers_frame(hourly)
 
+
+def mad_outliers_frame(hourly: DataFrame) -> DataFrame:
+    """Flag the (window_start, cnt) rows whose count is more than 3
+    MADs from the median count."""
     # exact integer order-statistic medians: rk = (h+1) DIV 2 and
     # rk = h DIV 2 + 1 (equal when h is odd -> the sum doubles the
     # middle element, keeping med2 = 2 * median integer-exact)
@@ -1944,11 +1988,16 @@ def session_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def session_page_pairs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
     page = F.get_json_object("props", "$.k").cast("int")
+    return page_pairs_topk_frame(_events(spark, sf_dir), page)
+
+
+def page_pairs_topk_frame(rows: DataFrame, page: Column) -> DataFrame:
+    """The 15 page pairs seen together in most sessions (1h gap), from
+    (user_id, ts, event_id) rows and their ``page``."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
-    sess = ev.select(
+    sess = rows.select(
         "user_id", "ts", "event_id", page.alias("page"),
         F.when(gap.isNull() | (gap >= 3600), 1).otherwise(0).alias("is_new"),
     ).withColumn(
@@ -2032,6 +2081,12 @@ def events_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .persist()
     )
+    return dau_wau_mau_frame(du)
+
+
+def dau_wau_mau_frame(du: DataFrame) -> DataFrame:
+    """Daily, trailing-7-day and trailing-30-day active users, from
+    distinct (day ``d``, user_id) rows."""
     dau = du.groupBy("d").agg(F.count(F.lit(1)).cast("long").alias("dau"))
 
     def trailing(n: int, alias: str):
@@ -2046,12 +2101,11 @@ def events_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.countDistinct("user_id").cast("long").alias(alias))
         )
 
-    out = (
+    return (
         dau.join(trailing(7, "wau"), "d")
         .join(trailing(30, "mau"), "d")
         .select(F.col("d").cast("timestamp").alias("day"), "dau", "wau", "mau")
     )
-    return out
 
 
 @query(
@@ -2094,11 +2148,19 @@ def events_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def events_value_quantiles_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    return value_quantiles_frame(value_cent_counts(_events(spark, sf_dir)))
+
+
+def value_cent_counts(ev: DataFrame) -> DataFrame:
+    """Events per (event_type, value rounded to cents)."""
     cents = F.round(F.col("value") * 100).cast("long")
-    c = ev.groupBy("event_type", cents.alias("cents")).agg(
+    return ev.groupBy("event_type", cents.alias("cents")).agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
     )
+
+
+def value_quantiles_frame(c: DataFrame) -> DataFrame:
+    """Exact p50/p95/p99 cents per event type from the cent counts."""
     w = Window.partitionBy("event_type").orderBy("cents")
     r = c.select(
         "event_type", "cents",
@@ -2228,17 +2290,23 @@ def events_dau_wau_mau_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def events_decayed_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    page = F.get_json_object("props", "$.k").cast("int")
     # persisted: 2 consumers (max-day anchor, weighted fold)
-    census = (
-        ev.groupBy(
-            F.date_trunc("day", F.col("ts")).cast("date").alias("d"),
-            page.alias("page"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .persist()
-    )
+    census = day_page_counts(_events(spark, sf_dir)).persist()
+    return decayed_popularity_frame(census)
+
+
+def day_page_counts(ev: DataFrame) -> DataFrame:
+    """Events per (day ``d``, page)."""
+    page = F.get_json_object("props", "$.k").cast("int")
+    return ev.groupBy(
+        F.date_trunc("day", F.col("ts")).cast("date").alias("d"),
+        page.alias("page"),
+    ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+
+
+def decayed_popularity_frame(census: DataFrame) -> DataFrame:
+    """The 10 pages with the highest daily-halving decayed event count
+    over the 30 days up to the last day, from the (d, page) counts."""
     mx = census.agg(F.max("d").alias("max_d"))
     # 30-day horizon filter BEFORE the shift: days older than the
     # horizon would make the shift amount negative — DuckDB errors on a
@@ -2321,6 +2389,13 @@ def user_interarrival_bots(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("burst_gaps"),
     )
+    return interarrival_bots_frame(s)
+
+
+def interarrival_bots_frame(s: DataFrame) -> DataFrame:
+    """Users with at least 20 inter-event gaps, their sub-minute gap
+    share and the bot flag (half or more), from per-user (n_gaps,
+    burst_gaps)."""
     return s.where(F.col("n_gaps") >= 20).select(
         "user_id",
         "n_gaps",
@@ -2479,6 +2554,12 @@ def session_duration_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = ev.select(
         "user_id", "event_id", F.unix_millis("ts").alias("ts_ms")
     )
+    return session_duration_frame(e)
+
+
+def session_duration_frame(e: DataFrame) -> DataFrame:
+    """Session count and exact p50/p90/p99 session durations (1h gap)
+    from (user_id, event_id, ts_ms) rows."""
     wl = Window.partitionBy("user_id").orderBy("ts_ms", "event_id")
     g = e.withColumn(
         "brk",
@@ -2501,6 +2582,11 @@ def session_duration_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = s.groupBy("user_id", "sid").agg(
         F.expr("(max(ts_ms) - min(ts_ms)) DIV 1000").alias("dur_s")
     )
+    return duration_quantiles(d)
+
+
+def duration_quantiles(d: DataFrame) -> DataFrame:
+    """Session count and exact p50/p90/p99 of the sessions' ``dur_s``."""
     c = d.groupBy("dur_s").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     r = c.select(
         "dur_s",
@@ -2693,11 +2779,19 @@ def prequential_summary(clean: DataFrame) -> DataFrame:
             "n_test long, n_covered long, n_correct long",
         )
     )
-    return per_src.agg(
-        F.sum("n_test").cast("long").alias("n_test"),
-        F.sum("n_covered").cast("long").alias("n_covered"),
-        F.sum("n_correct").cast("long").alias("n_correct"),
-    ).select(
+    return prequential_rates(
+        per_src.agg(
+            F.sum("n_test").cast("long").alias("n_test"),
+            F.sum("n_covered").cast("long").alias("n_covered"),
+            F.sum("n_correct").cast("long").alias("n_correct"),
+        )
+    )
+
+
+def prequential_rates(counts: DataFrame) -> DataFrame:
+    """The (n_test, n_covered, n_correct) summary row with its accuracy
+    and coverage in basis points."""
+    return counts.select(
         "n_test",
         "n_covered",
         "n_correct",
@@ -2799,7 +2893,16 @@ def prequential_summary(clean: DataFrame) -> DataFrame:
     ),
 )
 def browse_prequential_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    hops = prequential_hops(_events(spark, sf_dir))
+    clean = hops.where(
+        F.col("src").isNotNull() & (F.col("src") != F.col("dst"))
+    )
+    return prequential_summary(clean)
+
+
+def prequential_hops(ev: DataFrame) -> DataFrame:
+    """Each user's page hops (src, dst) in (ts_ms, eid) order, with the
+    hop's ts_ms and eid."""
     page = F.get_json_object("props", "$.k").cast("int")
     pages = ev.select(
         "user_id",
@@ -2808,16 +2911,12 @@ def browse_prequential_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         page.alias("page"),
     )
     w = Window.partitionBy("user_id").orderBy("ts_ms", "eid")
-    hops = pages.select(
+    return pages.select(
         F.lag("page").over(w).alias("src"),
         F.col("page").alias("dst"),
         "ts_ms",
         "eid",
     )
-    clean = hops.where(
-        F.col("src").isNotNull() & (F.col("src") != F.col("dst"))
-    )
-    return prequential_summary(clean)
 
 
 @query(
@@ -2845,21 +2944,7 @@ def browse_prequential_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def browse_prequential_accuracy_scan(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    page = F.get_json_object("props", "$.k").cast("int")
-    pages = ev.select(
-        "user_id",
-        F.col("event_id").alias("eid"),
-        F.unix_millis("ts").alias("ts_ms"),
-        page.alias("page"),
-    )
-    w = Window.partitionBy("user_id").orderBy("ts_ms", "eid")
-    hops = pages.select(
-        F.lag("page").over(w).alias("src"),
-        F.col("page").alias("dst"),
-        "ts_ms",
-        "eid",
-    )
+    hops = prequential_hops(_events(spark, sf_dir))
     R = 1 << 20  # pages are catalog-bounded ints in [0, 2^20)
     # loud domain guard (round-12 ADVICE): the packed key is only
     # injective for pages in [0, 2^20); a datagen change past that
@@ -2892,24 +2977,14 @@ def browse_prequential_accuracy_scan(
         .alias("best"),
     )
     pred = F.lit(R - 1) - (F.col("best") % F.lit(R))
-    return scan.agg(
-        F.count(F.lit(1)).cast("long").alias("n_test"),
-        F.count("best").cast("long").alias("n_covered"),
-        F.count(F.when(pred == F.col("dst"), 1)).cast("long").alias(
-            "n_correct"
-        ),
-    ).select(
-        "n_test",
-        "n_covered",
-        "n_correct",
-        F.expr(
-            "CAST(CASE WHEN n_covered = 0 THEN 0"
-            " ELSE n_correct * 10000 DIV n_covered END AS BIGINT)"
-        ).alias("accuracy_bp"),
-        F.expr(
-            "CAST(CASE WHEN n_test = 0 THEN 0"
-            " ELSE n_covered * 10000 DIV n_test END AS BIGINT)"
-        ).alias("coverage_bp"),
+    return prequential_rates(
+        scan.agg(
+            F.count(F.lit(1)).cast("long").alias("n_test"),
+            F.count("best").cast("long").alias("n_covered"),
+            F.count(F.when(pred == F.col("dst"), 1)).cast("long").alias(
+                "n_correct"
+            ),
+        )
     )
 
 
@@ -3037,21 +3112,7 @@ def prequential_by_day(clean: DataFrame) -> DataFrame:
     ),
 )
 def browse_prequential_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    page = F.get_json_object("props", "$.k").cast("int")
-    pages = ev.select(
-        "user_id",
-        F.col("event_id").alias("eid"),
-        F.unix_millis("ts").alias("ts_ms"),
-        page.alias("page"),
-    )
-    w = Window.partitionBy("user_id").orderBy("ts_ms", "eid")
-    hops = pages.select(
-        F.lag("page").over(w).alias("src"),
-        F.col("page").alias("dst"),
-        "ts_ms",
-        "eid",
-    )
+    hops = prequential_hops(_events(spark, sf_dir))
     clean = hops.where(
         F.col("src").isNotNull() & (F.col("src") != F.col("dst"))
     )

@@ -1328,7 +1328,12 @@ _LANGS = ["de", "en", "es", "fr", "zh"]
 )
 def mix_temperature_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    stats = docs.agg(
+    return temperature_sample(docs, lang_counts(docs))
+
+
+def lang_counts(docs: DataFrame) -> DataFrame:
+    """One row: the document total and the count of each mix language."""
+    return docs.agg(
         F.count(F.lit(1)).cast("double").alias("total"),
         *[
             F.sum((F.col("lang") == l).cast("int"))
@@ -1337,6 +1342,11 @@ def mix_temperature_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
             for l in _LANGS
         ],
     )
+
+
+def temperature_sample(docs: DataFrame, stats: DataFrame) -> DataFrame:
+    """The documents kept by the T=2 temperature mix over ``stats``'
+    language counts, each with its keep rate."""
     joined = docs.crossJoin(F.broadcast(stats))
     # fixed literal order keeps the float fold identical to the oracle
     ssum = None
@@ -2505,9 +2515,19 @@ def text_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def corpus_source_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = text.fan_out(load_table(spark, sf_dir, "documents"))
-    census = docs.groupBy("source").agg(
+    return source_gini_frame(source_token_counts(docs))
+
+
+def source_token_counts(docs: DataFrame) -> DataFrame:
+    """Tokens per source."""
+    return docs.groupBy("source").agg(
         F.sum(F.size(text.tokens("text"))).cast("long").alias("toks")
     )
+
+
+def source_gini_frame(census: DataFrame) -> DataFrame:
+    """The Gini coefficient (basis points) of the per-source token
+    counts."""
     w = Window.orderBy("toks", "source")
     ranked = census.select(
         "toks",
@@ -3011,7 +3031,11 @@ _CDC_CHUNK_CTES = """toks AS (
 def chunk_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = text.fan_out(load_table(spark, sf_dir, "documents"))
     # persisted: 2 consumers (hash census, census join back)
-    per_chunk = cdc_chunk_frame(docs).persist()
+    return chunk_freq_frame(cdc_chunk_frame(docs).persist())
+
+
+def chunk_freq_frame(per_chunk: DataFrame) -> DataFrame:
+    """Each chunk with its hash's corpus frequency."""
     freq = per_chunk.groupBy("chunk_hash").agg(
         F.count(F.lit(1)).cast("long").alias("corpus_freq")
     )
@@ -3238,7 +3262,12 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_chunk_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = text.fan_out(load_table(spark, sf_dir, "documents"))
-    census = (
+    return chunk_savings_frame(chunk_census(docs))
+
+
+def chunk_census(docs: DataFrame) -> DataFrame:
+    """Per CDC chunk hash: its frequency and token length."""
+    return (
         cdc_chunk_frame(docs)
         .groupBy("chunk_hash")
         .agg(
@@ -3246,6 +3275,10 @@ def dedup_chunk_level(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n_chunk_tokens").cast("long").alias("n_tok"),
         )
     )
+
+
+def chunk_savings_frame(census: DataFrame) -> DataFrame:
+    """Chunk totals and the tokens exact chunk dedup would save."""
     return census.agg(
         F.sum("freq").cast("long").alias("n_chunks"),
         F.count(F.lit(1)).cast("long").alias("n_unique_chunks"),

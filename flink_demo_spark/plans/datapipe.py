@@ -3234,20 +3234,27 @@ def embedding_label_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     lc = x.groupBy("label", "pos").agg(
         (dec / F.count(F.lit(1))).alias("mv")
     )
+    gc = x.groupBy("pos").agg((dec / F.count(F.lit(1))).alias("mv"))
+    n = emb.groupBy("label").agg(F.count(F.lit(1)).cast("long").alias("n_vecs"))
+    return label_drift_frame(lc, gc, n)
+
+
+def label_drift_frame(lc: DataFrame, gc: DataFrame, n: DataFrame) -> DataFrame:
+    """Each label's vector count and the cosine between its mean vector
+    and the global one, from the per-(label, pos) means ``lc``, the
+    per-pos global means ``gc`` and the per-label counts ``n``."""
     la = lc.groupBy("label").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("pos", "mv"))),
             lambda s: s["mv"],
         ).alias("lv")
     )
-    gc = x.groupBy("pos").agg((dec / F.count(F.lit(1))).alias("mv"))
     ga = gc.agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("pos", "mv"))),
             lambda s: s["mv"],
         ).alias("gv")
     )
-    n = emb.groupBy("label").agg(F.count(F.lit(1)).cast("long").alias("n_vecs"))
     dot = lambda a, b: F.aggregate(  # noqa: E731 — the list_dot_product fold
         F.zip_with(a, b, lambda p, q: p * q),
         F.lit(0.0),
@@ -4310,11 +4317,14 @@ def similarity_recall_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = text.fan_out(load_table(spark, sf_dir, "documents"))
     # persisted: the rank pass and the 1-row total both read it
-    census = (
+    return vocab_coverage_frame(word_counts(docs).persist())
+
+
+def word_counts(docs: DataFrame) -> DataFrame:
+    """Occurrences per whitespace-split lower-cased word."""
+    return (
         docs.select(
             F.explode_outer(F.split(F.trim(F.lower("text")), r"\s+")).alias(
                 "word"
@@ -4323,8 +4333,12 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("word").isNotNull())
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .persist()
     )
+
+
+def vocab_coverage_frame(census: DataFrame) -> DataFrame:
+    """The share of all tokens that the top 8..128 words cover, from
+    the word counts."""
     ranked = census.select(
         "cnt",
         F.row_number()

@@ -46,14 +46,13 @@ _BASE = """
 """
 
 
-def _ticker(spark: SparkSession, sf_dir: str, cents: bool = False) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").where(
-        F.col("event_type") == "purchase"
-    )
+def _ticker(ev: DataFrame, cents: bool = False) -> DataFrame:
+    """The purchases in ``ev`` (the events table or its stream) as a
+    per-user ticker: symbol, rowtime, price, rid."""
     price = (
         F.round(F.col("value") * 100).cast("long") if cents else F.col("value")
     )
-    return ev.select(
+    return ev.where(F.col("event_type") == "purchase").select(
         F.col("user_id").alias("symbol"),
         F.col("ts").alias("rowtime"),
         price.alias("price"),
@@ -113,7 +112,7 @@ def _ticker(spark: SparkSession, sf_dir: str, cents: bool = False) -> DataFrame:
 )
 def match_recognize_v_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = match_recognize(
-        _ticker(spark, sf_dir),
+        _ticker(load_table(spark, sf_dir, "events")),
         """
         SELECT * FROM Ticker
           MATCH_RECOGNIZE (
@@ -136,6 +135,27 @@ def match_recognize_v_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
         """,
     )
     return out
+
+
+# the rise-fall pattern, run by match_recognize_rise_fall and its
+# streaming twin
+_RISE_FALL = """
+        SELECT * FROM Ticker
+        MATCH_RECOGNIZE (
+         PARTITION BY symbol
+         ORDER BY rowtime, rid
+         MEASURES
+           FIRST(A.price) AS start_price,
+           LAST(A.price) AS top_price,
+           B.price AS end_price
+         ONE ROW PER MATCH
+         AFTER MATCH SKIP PAST LAST ROW
+         PATTERN (A+ B)
+           DEFINE
+             A AS LAST(A.price,1) IS NULL OR A.price > LAST(A.price,1),
+             B AS B.price < LAST(A.price,1)
+         ) MR
+        """
 
 
 @query(
@@ -190,27 +210,7 @@ def match_recognize_v_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def match_recognize_rise_fall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = match_recognize(
-        _ticker(spark, sf_dir),
-        """
-        SELECT * FROM Ticker
-        MATCH_RECOGNIZE (
-         PARTITION BY symbol
-         ORDER BY rowtime, rid
-         MEASURES
-           FIRST(A.price) AS start_price,
-           LAST(A.price) AS top_price,
-           B.price AS end_price
-         ONE ROW PER MATCH
-         AFTER MATCH SKIP PAST LAST ROW
-         PATTERN (A+ B)
-           DEFINE
-             A AS LAST(A.price,1) IS NULL OR A.price > LAST(A.price,1),
-             B AS B.price < LAST(A.price,1)
-         ) MR
-        """,
-    )
-    return out
+    return match_recognize(_ticker(load_table(spark, sf_dir, "events")), _RISE_FALL)
 
 
 @query(
@@ -255,7 +255,7 @@ def match_recognize_rise_fall(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def match_recognize_sum_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = match_recognize(
-        _ticker(spark, sf_dir, cents=True),
+        _ticker(load_table(spark, sf_dir, "events"), cents=True),
         """
         SELECT * FROM Ticker
         MATCH_RECOGNIZE (
@@ -293,36 +293,8 @@ def streaming_match_recognize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.streams import events_stream
     from ..streaming.runner import run_available_now
 
-    ticker = (
-        events_stream(spark, sf_dir, watermark=None)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("symbol"),
-            F.col("ts").alias("rowtime"),
-            F.col("value").alias("price"),
-            F.col("event_id").alias("rid"),
-        )
-    )
-    out = streaming_match_recognize(
-        ticker,
-        """
-        SELECT * FROM Ticker
-        MATCH_RECOGNIZE (
-         PARTITION BY symbol
-         ORDER BY rowtime, rid
-         MEASURES
-           FIRST(A.price) AS start_price,
-           LAST(A.price) AS top_price,
-           B.price AS end_price
-         ONE ROW PER MATCH
-         AFTER MATCH SKIP PAST LAST ROW
-         PATTERN (A+ B)
-           DEFINE
-             A AS LAST(A.price,1) IS NULL OR A.price > LAST(A.price,1),
-             B AS B.price < LAST(A.price,1)
-         ) MR
-        """,
-    )
+    ticker = _ticker(events_stream(spark, sf_dir, watermark=None))
+    out = streaming_match_recognize(ticker, _RISE_FALL)
     return run_available_now(out, output_mode="append").orderBy(
         "symbol", "start_price", "top_price", "end_price"
     )

@@ -9,18 +9,78 @@ every plan module has loaded — asserting the reference's
 batch/stream-unification property (``ExecuteMode.scala:41-72``: same
 query, two runtime modes, same result). Only queries with no batch
 twin carry an oracle of their own.
+
+A twin pair writes its rows once. The twin's transformation is a
+plain ``DataFrame -> DataFrame`` function beside the batch query
+(window helpers live in ``streaming/windows.py``): the batch query is
+``finish(prefix(load_table(...)))`` and the streaming one
+``finish(run_available_now(prefix(<stream>)))``. Where a stream cannot
+run the batch prefix (a per-user window function, an
+``applyInPandasWithState`` stage), it keeps its own prefix and shares
+only ``finish``. Plan-module helpers are imported inside the query
+bodies: a top-level import would register that module's queries
+before these and reorder ``REGISTRY``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.streams import events_stream
 from ..streaming.runner import run_available_now
-from ..streaming.windows import interval_join_stream, tumbling_agg
+from ..streaming.windows import (
+    cumulate_counts,
+    interval_join_stream,
+    session_agg,
+    sliding_agg,
+    tumbling_agg,
+)
 from ._util import first_vectors
 from .registry import query
+
+
+def _per_user_events(ev: DataFrame, *fields: Column) -> DataFrame:
+    """Replay ``ev`` into one list ``evts`` of ``fields`` structs per
+    user. A stream cannot order rows within a key, so the twins of
+    per-user window queries stage each user's events and order them
+    after the replay."""
+    return run_available_now(
+        ev.select("user_id", F.struct(*fields).alias("e"))
+        .groupBy("user_id")
+        .agg(F.collect_list("e").alias("evts")),
+        output_mode="complete",
+    )
+
+
+def _fresh_ids(df: DataFrame) -> DataFrame:
+    """``df`` with every column re-aliased. A sink table joined with a
+    frame derived from itself needs this: Spark cannot give its
+    MemoryPlan leaf fresh attribute ids, but it can re-alias a
+    projection."""
+    return df.select(*[F.col(c).alias(c) for c in df.columns])
+
+
+def _page_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each user's consecutive (src, dst) page hops in (ts, event_id)
+    order: the batch twins' ``lag("page")`` over a replayed stream."""
+    ev = events_stream(spark, sf_dir, watermark="10 minutes")
+    page = F.get_json_object("props", "$.k").cast("int")
+    per_user = _per_user_events(
+        ev, F.col("ts"), F.col("event_id").alias("eid"), page.alias("page")
+    )
+    seq = per_user.select(
+        F.transform(F.array_sort("evts"), lambda s: s["page"]).alias("pages")
+    )
+    hop = F.arrays_zip(
+        F.slice("pages", 1, F.size("pages") - 1).alias("src"),
+        F.slice(F.col("pages"), 2, F.size("pages") - 1).alias("dst"),
+    )
+    return (
+        seq.where(F.size("pages") > 1)
+        .select(F.explode(hop).alias("h"))
+        .select("h.src", "h.dst")
+    )
 
 
 @query(
@@ -63,8 +123,6 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="streaming HOP window (1h/30m) — equals the batch sliding window.",
 )
 def streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.windows import sliding_agg
-
     ev = events_stream(spark, sf_dir, watermark="10 minutes")
     result = run_available_now(sliding_agg(ev), output_mode="complete")
     return result.orderBy("window_start")
@@ -150,22 +208,7 @@ def streaming_pattern_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_stream(spark, sf_dir, watermark="10 minutes")
-    agg = (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,4)")), 2
-                ).cast("double").alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            "n_events",
-            "sum_value",
-        )
-    )
-    result = run_available_now(agg, output_mode="complete")
+    result = run_available_now(session_agg(ev, "30 minutes"), output_mode="complete")
     return result.orderBy("user_id", "session_start")
 
 
@@ -220,24 +263,11 @@ def streaming_window_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def streaming_hotitems_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
+    from .behavior import hotitems_top3, hotitems_window_views
 
-    ev = events_stream(spark, sf_dir, watermark="10 minutes").where(
-        F.col("event_type") == "view"
-    )
-    per_window = (
-        ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_views"))
-        .select(F.col("w.start").alias("window_start"), "user_id", "n_views")
-    )
-    emitted = run_available_now(per_window, output_mode="complete")
-    rk = Window.partitionBy("window_start").orderBy(F.desc("n_views"), "user_id")
-    return (
-        emitted.withColumn("rk", F.row_number().over(rk))
-        .where(F.col("rk") <= 3)
-        .select("window_start", "rk", "user_id", "n_views")
-        .orderBy("window_start", "rk")
-    )
+    ev = events_stream(spark, sf_dir, watermark="10 minutes")
+    emitted = run_available_now(hotitems_window_views(ev), output_mode="complete")
+    return hotitems_top3(emitted).orderBy("window_start", "rk")
 
 
 @query(
@@ -654,22 +684,7 @@ def streaming_kafka_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
     )
     ev = decode_events_from_kafka(stream).withWatermark("ts", "10 minutes")
-    agg = (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,4)")), 2
-                ).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    result = run_available_now(agg, output_mode="complete")
+    result = run_available_now(tumbling_agg(ev), output_mode="complete")
     return result.orderBy("window_start", "event_type")
 
 
@@ -704,19 +719,12 @@ def streaming_cep_skip_to_last(spark: SparkSession, sf_dir: str) -> DataFrame:
         .skip_to_last("p")
         .within_time("30D")
     )
-
-    def measures(rows, b):
-        return {
-            "first_id": int(rows.iloc[b["p"][0]]["event_id"]),
-            "second_id": int(rows.iloc[b["p"][1]]["event_id"]),
-        }
-
     out = streaming_match_pattern(
         ev,
         pat,
         key_cols=["user_id"],
         ts_col="ts",
-        measures=measures,
+        measures=cep.first_two_ids,
         output_schema="user_id long, first_id long, second_id long",
         order_cols=["ts", "event_id"],
     )
@@ -1056,9 +1064,6 @@ def streaming_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     return row.select(F.explode(F.array(*entries)).alias("p")).select("p.*")
 
 
-_MIX_LANGS = ["de", "en", "es", "fr", "zh"]
-
-
 @query(
     "streaming_mix_temperature",
     twin="mix_temperature_langs",
@@ -1076,42 +1081,10 @@ _MIX_LANGS = ["de", "en", "es", "fr", "zh"]
 def streaming_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load_table
     from ..sources.streams import documents_stream
+    from .corpus import lang_counts, temperature_sample
 
-    stats = load_table(spark, sf_dir, "documents").agg(
-        F.count(F.lit(1)).cast("double").alias("total"),
-        *[
-            F.sum((F.col("lang") == l).cast("int"))
-            .cast("double")
-            .alias(f"c_{l}")
-            for l in _MIX_LANGS
-        ],
-    )
-    feed = documents_stream(spark, sf_dir).crossJoin(F.broadcast(stats))
-    ssum = None
-    for l in _MIX_LANGS:
-        term = F.sqrt(F.col(f"c_{l}"))
-        ssum = term if ssum is None else ssum + term
-    sq_expr = None
-    cnt_expr = None
-    for l in _MIX_LANGS:
-        cond = F.col("lang") == l
-        if sq_expr is None:
-            sq_expr = F.when(cond, F.sqrt(F.col(f"c_{l}")))
-            cnt_expr = F.when(cond, F.col(f"c_{l}"))
-        else:
-            sq_expr = sq_expr.when(cond, F.sqrt(F.col(f"c_{l}")))
-            cnt_expr = cnt_expr.when(cond, F.col(f"c_{l}"))
-    rate = F.least(
-        F.lit(1.0), F.lit(0.6) * F.col("total") * sq_expr / ssum / cnt_expr
-    )
-    bucket = (
-        ((F.col("doc_id") % 1000003) * 2654435761 + 12345) % 1000000007
-    ) % 1000000
-    kept = (
-        feed.withColumn("rate", rate)
-        .where(bucket < F.floor(F.col("rate") * 1000000))
-        .select("doc_id", "lang", F.round("rate", 6).alias("keep_rate"))
-    )
+    stats = lang_counts(load_table(spark, sf_dir, "documents"))
+    kept = temperature_sample(documents_stream(spark, sf_dir), stats)
     return run_available_now(kept, output_mode="append")
 
 
@@ -1363,8 +1336,7 @@ def streaming_similarity_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load_table
-    from ..sources.streams import events_stream
-    from .behavior import _DRIFT_S
+    from .behavior import drift_chi2_frame
 
     ev = events_stream(spark, sf_dir, watermark="10 minutes")
     w = F.window("ts", "1 hour").alias("w")
@@ -1372,40 +1344,10 @@ def streaming_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(w, F.col("event_type")).agg(F.count(F.lit(1)).alias("o")),
         output_mode="complete",
     )
-
     static = load_table(spark, sf_dir, "events")
     census = static.groupBy("event_type").agg(F.count(F.lit(1)).alias("g"))
-    from pyspark.sql import Window as W
-
-    census = census.withColumn("gt", F.sum("g").over(W.partitionBy()))
-    # wins derives from counts, so the grid-to-counts join below is a
-    # self-join on the sink output — give the probe side fresh
-    # attribute ids via aliases so the equi-join keys can't collide
     wins = counts.groupBy("w").agg(F.sum("o").alias("n"))
-    grid = wins.crossJoin(F.broadcast(census))
-    o_side = counts.select(
-        F.col("w").alias("wo"), F.col("event_type").alias("eto"), "o"
-    )
-    j = grid.join(
-        o_side,
-        (grid["w"] == o_side["wo"]) & (grid["event_type"] == o_side["eto"]),
-        "left",
-    ).withColumn("o0", F.coalesce(F.col("o"), F.lit(0).cast("long")))
-    term = F.expr(
-        f"CAST(({_DRIFT_S} * CAST(o0 * gt - n * g AS DECIMAL(38,0))"
-        f" * CAST(o0 * gt - n * g AS DECIMAL(38,0)))"
-        f" DIV (CAST(n AS DECIMAL(38,0)) * g * gt) AS BIGINT)"
-    )
-    return (
-        j.select("w", "n", term.alias("term"))
-        .groupBy("w", "n")
-        .agg(F.sum("term").alias("chi2_micro"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("n").alias("n_events"),
-            "chi2_micro",
-        )
-    )
+    return drift_chi2_frame(census, wins, _fresh_ids(counts))
 
 
 @query(
@@ -1876,25 +1818,10 @@ group by id,SESSION(t,INTERVAL '3' SECOND)
     ),
 )
 def streaming_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .temporal import dynamic_session_gap
+
     ev = events_stream(spark, sf_dir, watermark="10 minutes")
-    gap = F.when(F.col("event_type") == "click", F.lit("10 minutes")).otherwise(
-        F.lit("45 minutes")
-    )
-    agg = (
-        ev.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,4)")), 2
-            ).cast("double").alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            "n_events",
-            "sum_value",
-        )
-    )
+    agg = session_agg(ev, dynamic_session_gap())
     result = run_available_now(agg, output_mode="complete")
     return result.orderBy("user_id", "session_start")
 
@@ -2075,30 +2002,16 @@ def streaming_mix_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def streaming_rate_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .behavior import rate_spikes_frame
+
     ev = events_stream(spark, sf_dir, watermark="10 minutes")
     w = F.window("ts", "1 hour").alias("w")
     counts = run_available_now(
         ev.groupBy("event_type", w).agg(F.count(F.lit(1)).alias("cnt")),
         output_mode="complete",
     )
-    ws = (
-        Window.partitionBy("event_type")
-        .orderBy(F.col("w.start"))
-        .rowsBetween(-24, -1)
-    )
-    t = counts.withColumn(
-        "trail_events",
-        F.coalesce(F.sum("cnt").over(ws), F.lit(0)).cast("long"),
-    ).withColumn("trail_hours", F.count("cnt").over(ws).cast("long"))
-    return t.where(
-        (F.col("trail_hours") >= 6)
-        & (F.col("cnt") * F.col("trail_hours") * 100 > 150 * F.col("trail_events"))
-    ).select(
-        "event_type",
-        F.col("w.start").alias("window_start"),
-        "cnt",
-        "trail_hours",
-        "trail_events",
+    return rate_spikes_frame(
+        counts.select("event_type", F.col("w.start").alias("window_start"), "cnt")
     )
 
 
@@ -2123,48 +2036,14 @@ def streaming_rate_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def streaming_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .behavior import _FUNNEL_STEPS
+    from .behavior import funnel_reach, funnel_step
 
     ev = events_stream(spark, sf_dir, watermark="10 minutes")
-    si = F.lit(0).cast("long")
-    for i, s in enumerate(_FUNNEL_STEPS):
-        si = F.when(F.col("event_type") == s, i + 1).otherwise(si)
-    per_user = run_available_now(
-        ev.select(
-            "user_id",
-            F.struct(
-                F.col("ts"), F.col("event_id").alias("eid"), si.alias("si")
-            ).alias("e"),
-        )
-        .groupBy("user_id")
-        .agg(F.collect_list("e").alias("evts")),
-        output_mode="complete",
+    per_user = _per_user_events(
+        ev, F.col("ts"), F.col("event_id").alias("eid"), funnel_step().alias("si")
     )
-    stage = per_user.select(
-        F.aggregate(
-            F.transform(F.array_sort("evts"), lambda s: s["si"]),
-            F.lit(0).cast("long"),
-            lambda a, b: F.when(b == a + 1, b).otherwise(a),
-        ).alias("stage")
-    )
-    agg = stage.agg(
-        *[
-            F.sum(F.when(F.col("stage") >= i + 1, 1).otherwise(0))
-            .cast("long")
-            .alias(f"r{i + 1}")
-            for i in range(len(_FUNNEL_STEPS))
-        ]
-    )
-    stack = ", ".join(
-        f"{i + 1}, '{s}', r{i + 1}" for i, s in enumerate(_FUNNEL_STEPS)
-    )
-    return agg.select(
-        F.expr(
-            f"stack({len(_FUNNEL_STEPS)}, {stack})"
-            " AS (step, step_name, n_users_reached)"
-        )
-    ).select(
-        F.col("step").cast("int"), "step_name", F.col("n_users_reached").cast("long")
+    return funnel_reach(
+        per_user.select("user_id", F.array_sort("evts").alias("evts"))
     )
 
 
@@ -2186,46 +2065,9 @@ def streaming_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def streaming_browse_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = events_stream(spark, sf_dir, watermark="10 minutes")
-    page = F.get_json_object("props", "$.k").cast("int")
-    per_user = run_available_now(
-        ev.select(
-            "user_id",
-            F.struct(
-                F.col("ts"), F.col("event_id").alias("eid"), page.alias("page")
-            ).alias("e"),
-        )
-        .groupBy("user_id")
-        .agg(F.collect_list("e").alias("evts")),
-        output_mode="complete",
-    )
-    seq = per_user.select(
-        F.transform(F.array_sort("evts"), lambda s: s["page"]).alias("pages")
-    )
-    hop = F.arrays_zip(
-        F.slice("pages", 1, F.size("pages") - 1).alias("src"),
-        F.slice(F.col("pages"), 2, F.size("pages") - 1).alias("dst"),
-    )
-    hops = seq.where(F.size("pages") > 1).select(F.explode(hop).alias("h"))
-    edges = (
-        hops.select(F.col("h.src").alias("src"), F.col("h.dst").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    outdeg = edges.groupBy("src").agg(F.sum("cnt").cast("long").alias("od"))
-    rk = Window.partitionBy("src").orderBy(F.desc("cnt"), "dst")
-    return (
-        edges.join(outdeg, "src")
-        .select(
-            "src",
-            "dst",
-            "cnt",
-            F.expr("CAST(cnt * 10000 DIV od AS BIGINT)").alias("p_bp"),
-        )
-        .withColumn("rk", F.row_number().over(rk).cast("long"))
-        .where(F.col("rk") <= 3)
-    )
+    from .behavior import transition_topk_frame
+
+    return transition_topk_frame(_page_hops(spark, sf_dir))
 
 
 @query(
@@ -2245,22 +2087,11 @@ def streaming_browse_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def streaming_user_event_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .behavior import event_diversity_frame, event_type_counts
+
     ev = events_stream(spark, sf_dir, watermark="10 minutes")
-    counts = run_available_now(
-        ev.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("cnt")),
-        output_mode="complete",
-    )
-    u = counts.groupBy("user_id").agg(
-        F.sum("cnt").cast("long").alias("n_events"),
-        F.sum(F.col("cnt") * F.col("cnt")).cast("long").alias("sum_sq"),
-    )
-    return u.select(
-        "user_id",
-        "n_events",
-        F.expr(
-            "CAST(10000 - (sum_sq * 10000) DIV (n_events * n_events) AS BIGINT)"
-        ).alias("diversity_bp"),
-    )
+    counts = run_available_now(event_type_counts(ev), output_mode="complete")
+    return event_diversity_frame(counts)
 
 
 @query(
@@ -2300,54 +2131,9 @@ def streaming_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def streaming_browse_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = events_stream(spark, sf_dir, watermark="10 minutes")
-    page = F.get_json_object("props", "$.k").cast("int")
-    per_user = run_available_now(
-        ev.select(
-            "user_id",
-            F.struct(
-                F.col("ts"), F.col("event_id").alias("eid"), page.alias("page")
-            ).alias("e"),
-        )
-        .groupBy("user_id")
-        .agg(F.collect_list("e").alias("evts")),
-        output_mode="complete",
-    )
-    seq = per_user.select(
-        F.transform(F.array_sort("evts"), lambda s: s["page"]).alias("pages")
-    )
-    hop = F.arrays_zip(
-        F.slice("pages", 1, F.size("pages") - 1).alias("src"),
-        F.slice(F.col("pages"), 2, F.size("pages") - 1).alias("dst"),
-    )
-    edges = (
-        seq.where(F.size("pages") > 1)
-        .select(F.explode(hop).alias("h"))
-        .where(F.col("h.src") != F.col("h.dst"))
-        .select(
-            F.least("h.src", "h.dst").alias("a"),
-            F.greatest("h.src", "h.dst").alias("b"),
-        )
-        .distinct()
-        .persist()
-    )
-    e1 = edges.alias("e1")
-    e2 = edges.select(F.col("a").alias("b"), F.col("b").alias("c")).alias("e2")
-    wedges = e1.join(F.broadcast(e2), "b").select("a", "c")
-    closed = wedges.join(
-        F.broadcast(edges.select(F.col("a"), F.col("b").alias("c"))),
-        ["a", "c"],
-        "inner",
-    )
-    tri = closed.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    nodes = (
-        edges.select(F.col("a").alias("v"))
-        .union(edges.select(F.col("b").alias("v")))
-        .distinct()
-        .agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
-    )
-    ecnt = edges.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
-    return nodes.crossJoin(F.broadcast(ecnt)).crossJoin(F.broadcast(tri))
+    from .behavior import triangle_census_frame
+
+    return triangle_census_frame(_page_hops(spark, sf_dir))
 
 
 @query(
@@ -2365,44 +2151,15 @@ def streaming_browse_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def streaming_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .behavior import mad_outliers_frame
+
     ev = events_stream(spark, sf_dir, watermark="10 minutes")
     w = F.window("ts", "1 hour").alias("w")
     counts = run_available_now(
         ev.groupBy(w).agg(F.count(F.lit(1)).cast("long").alias("cnt")),
         output_mode="complete",
     ).select(F.col("w.start").alias("window_start"), "cnt").persist()
-    w1 = Window.orderBy("cnt", "window_start")
-    ranked = counts.select(
-        "cnt",
-        F.row_number().over(w1).alias("rk"),
-        F.count(F.lit(1)).over(Window.partitionBy()).alias("h"),
-    )
-    med = ranked.agg(
-        (
-            F.sum(F.when(F.expr("rk = (h + 1) DIV 2"), F.col("cnt")).otherwise(0))
-            + F.sum(F.when(F.expr("rk = h DIV 2 + 1"), F.col("cnt")).otherwise(0))
-        ).cast("long").alias("med2")
-    )
-    dev = counts.crossJoin(F.broadcast(med)).select(
-        "window_start", "cnt",
-        F.abs(2 * F.col("cnt") - F.col("med2")).cast("long").alias("dev2"),
-    )
-    w2 = Window.orderBy("dev2", "window_start")
-    dranked = dev.select(
-        "dev2",
-        F.row_number().over(w2).alias("rk"),
-        F.count(F.lit(1)).over(Window.partitionBy()).alias("h"),
-    )
-    mad = dranked.agg(
-        (
-            F.sum(F.when(F.expr("rk = (h + 1) DIV 2"), F.col("dev2")).otherwise(0))
-            + F.sum(F.when(F.expr("rk = h DIV 2 + 1"), F.col("dev2")).otherwise(0))
-        ).cast("long").alias("mad4")
-    )
-    return dev.crossJoin(F.broadcast(mad)).select(
-        "window_start", "cnt", "dev2", "mad4",
-        F.expr("CAST(2 * dev2 > 3 * mad4 AS INT)").alias("is_outlier"),
-    )
+    return mad_outliers_frame(counts)
 
 
 @query(
@@ -2477,58 +2234,17 @@ def streaming_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def streaming_session_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .behavior import page_pairs_topk_frame
+
     ev = events_stream(spark, sf_dir, watermark="10 minutes")
     page = F.get_json_object("props", "$.k").cast("int")
-    per_user = run_available_now(
-        ev.select(
-            "user_id",
-            F.struct(
-                F.col("ts"), F.col("event_id").alias("eid"), page.alias("page")
-            ).alias("e"),
-        )
-        .groupBy("user_id")
-        .agg(F.collect_list("e").alias("evts")),
-        output_mode="complete",
+    per_user = _per_user_events(
+        ev, F.col("ts"), F.col("event_id").alias("eid"), page.alias("page")
     )
     rows = per_user.select(
         "user_id", F.explode("evts").alias("e")
     ).select("user_id", "e.ts", F.col("e.eid").alias("event_id"), "e.page")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
-    sess = rows.select(
-        "user_id", "ts", "event_id", "page",
-        F.when(gap.isNull() | (gap >= 3600), 1).otherwise(0).alias("is_new"),
-    ).withColumn(
-        "sid",
-        F.sum("is_new").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    sets = (
-        sess.select("user_id", "sid", "page")
-        .distinct()
-        .groupBy("user_id", "sid")
-        .agg(F.array_sort(F.collect_list("page")).alias("pages"))
-    )
-    pair = F.flatten(
-        F.transform(
-            F.col("pages"),
-            lambda x, i: F.transform(
-                F.slice(F.col("pages"), i + 2, F.size(F.col("pages"))),
-                lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-            ),
-        )
-    )
-    pairs = (
-        sets.select(F.explode(pair).alias("p"))
-        .groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    rk = Window.orderBy(F.desc("cnt"), "pa", "pb")
-    return (
-        pairs.withColumn("rk", F.row_number().over(rk).cast("long"))
-        .where(F.col("rk") <= 15)
-    )
+    return page_pairs_topk_frame(rows, F.col("page"))
 
 
 @query(
@@ -2546,31 +2262,12 @@ def streaming_session_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def streaming_source_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import text
     from ..sources.streams import documents_stream
+    from .corpus import source_gini_frame, source_token_counts
 
     feed = documents_stream(spark, sf_dir)
-    census = run_available_now(
-        feed.groupBy("source").agg(
-            F.sum(F.size(text.tokens("text"))).cast("long").alias("toks")
-        ),
-        output_mode="complete",
-    )
-    w = Window.orderBy("toks", "source")
-    ranked = census.select(
-        "toks",
-        F.row_number().over(w).alias("i"),
-        F.count(F.lit(1)).over(Window.partitionBy()).alias("n"),
-        F.sum("toks").over(Window.partitionBy()).alias("total"),
-    )
-    return ranked.agg(
-        F.max("n").cast("long").alias("n_sources"),
-        F.max("total").cast("long").alias("total_tokens"),
-        F.expr(
-            "CAST(sum((2 * i - n - 1) * toks) * 10000"
-            " DIV (max(n) * max(total)) AS BIGINT)"
-        ).alias("gini_bp"),
-    )
+    census = run_available_now(source_token_counts(feed), output_mode="complete")
+    return source_gini_frame(census)
 
 
 @query(
@@ -2592,6 +2289,7 @@ def streaming_source_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_label_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.streams import embeddings_stream
+    from .datapipe import label_drift_frame
 
     # scan_guard: the 64-way posexplode + decimal cast runs map-side
     # BEFORE the partial agg - spread it (round 12)
@@ -2610,42 +2308,13 @@ def streaming_label_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     lc = census.select(
         "label", "pos", (F.col("sv").cast("double") / F.col("c")).alias("mv")
     )
-    la = lc.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "mv"))),
-            lambda s: s["mv"],
-        ).alias("lv")
-    )
     gc = census.groupBy("pos").agg(
         (F.sum("sv").cast("double") / F.sum("c")).alias("mv")
     )
-    ga = gc.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "mv"))),
-            lambda s: s["mv"],
-        ).alias("gv")
-    )
-    # la and n both derive from the persisted sink table — give the
-    # count side fresh attribute ids via aliases so the equi-join keys
-    # can't collide (the streaming_drift_chi2 self-join rule)
     n = census.where(F.col("pos") == 0).select(
-        F.col("label").alias("lbl_n"), F.col("c").cast("long").alias("n_vecs")
+        "label", F.col("c").cast("long").alias("n_vecs")
     )
-    dot = lambda a, b: F.aggregate(  # noqa: E731 — the list_dot_product fold
-        F.zip_with(a, b, lambda p, q: p * q),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
-    j = (
-        la.join(n, la["label"] == n["lbl_n"])
-        .drop("lbl_n")
-        .crossJoin(F.broadcast(ga))
-    )
-    cos = dot(F.col("lv"), F.col("gv")) / (
-        F.sqrt(dot(F.col("lv"), F.col("lv")))
-        * F.sqrt(dot(F.col("gv"), F.col("gv")))
-    )
-    return j.select("label", "n_vecs", F.round(cos, 6).alias("cos_to_global"))
+    return label_drift_frame(lc, gc, _fresh_ids(n))
 
 
 @query(
@@ -2705,6 +2374,8 @@ def streaming_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def streaming_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .behavior import dau_wau_mau_frame
+
     ev = events_stream(spark, sf_dir, watermark="10 minutes")
     du = run_available_now(
         ev.select(
@@ -2714,25 +2385,7 @@ def streaming_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("__n")),
         output_mode="complete",
     ).select("d", "user_id").persist()
-    dau = du.groupBy("d").agg(F.count(F.lit(1)).cast("long").alias("dau"))
-
-    def trailing(n: int, alias: str):
-        return (
-            du.select(
-                F.explode(F.sequence(F.lit(0), F.lit(n - 1))).alias("delta"),
-                "d",
-                "user_id",
-            )
-            .select(F.date_add(F.col("d"), F.col("delta")).alias("d"), "user_id")
-            .groupBy("d")
-            .agg(F.countDistinct("user_id").cast("long").alias(alias))
-        )
-
-    return (
-        dau.join(trailing(7, "wau"), "d")
-        .join(trailing(30, "mau"), "d")
-        .select(F.col("d").cast("timestamp").alias("day"), "dau", "wau", "mau")
-    )
+    return dau_wau_mau_frame(du)
 
 
 @query(
@@ -2752,28 +2405,7 @@ def streaming_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_window_cumulate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_stream(spark, sf_dir, watermark="10 minutes")
-    step, size, n_steps = 3600, 14400, 4
-    es = F.col("ts").cast("long")
-    x = ev.select(
-        "event_type",
-        (es - (es % size)).alias("ws"),
-        ((es % size) / step).cast("long").alias("j0"),
-    ).select(
-        "event_type",
-        F.col("ws").alias("window_start_s"),
-        F.explode(
-            F.transform(
-                F.sequence(F.col("j0") + 1, F.lit(n_steps)),
-                lambda j: F.col("ws") + j * step,
-            )
-        ).alias("window_end_s"),
-    )
-    return run_available_now(
-        x.groupBy("window_start_s", "window_end_s", "event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n_events")
-        ),
-        output_mode="complete",
-    )
+    return run_available_now(cumulate_counts(ev), output_mode="complete")
 
 
 @query(
@@ -2792,31 +2424,11 @@ def streaming_window_cumulate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def streaming_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .behavior import value_cent_counts, value_quantiles_frame
+
     ev = events_stream(spark, sf_dir, watermark="10 minutes")
-    cents = F.round(F.col("value") * 100).cast("long")
-    c = run_available_now(
-        ev.groupBy("event_type", cents.alias("cents")).agg(
-            F.count(F.lit(1)).cast("long").alias("cnt")
-        ),
-        output_mode="complete",
-    )
-    w = Window.partitionBy("event_type").orderBy("cents")
-    r = c.select(
-        "event_type", "cents",
-        F.sum("cnt").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ).alias("cum"),
-        F.sum("cnt").over(Window.partitionBy("event_type")).alias("n"),
-    )
-    qcol = lambda q: F.min(  # noqa: E731
-        F.when(F.expr(f"cum >= ({q} * n + 99) DIV 100"), F.col("cents"))
-    ).cast("long")
-    return r.groupBy("event_type").agg(
-        F.max("n").cast("long").alias("n_events"),
-        qcol(50).alias("p50_cents"),
-        qcol(95).alias("p95_cents"),
-        qcol(99).alias("p99_cents"),
-    )
+    c = run_available_now(value_cent_counts(ev), output_mode="complete")
+    return value_quantiles_frame(c)
 
 
 def _lang_census_oracle():
@@ -2961,42 +2573,11 @@ def streaming_repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def streaming_decayed_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .behavior import day_page_counts, decayed_popularity_frame
+
     ev = events_stream(spark, sf_dir, watermark="10 minutes")
-    census = run_available_now(
-        ev.groupBy(
-            F.date_trunc("day", F.col("ts")).cast("date").alias("d"),
-            F.get_json_object("props", "$.k").cast("int").alias("page"),
-        ).agg(F.count(F.lit(1)).cast("long").alias("cnt")),
-        output_mode="complete",
-    ).persist()
-    mx = census.agg(F.max("d").alias("max_d"))
-    # 30-day horizon filter BEFORE the shift: days older than the
-    # horizon would make the shift amount negative — DuckDB errors on a
-    # negative shift while Spark's shiftleft masks the amount mod 64 and
-    # silently fabricates weights (round-11 ADVICE). The docstring's
-    # horizon is now enforced, not assumed, on both engines.
-    weighted = (
-        census.crossJoin(F.broadcast(mx))
-        .where(F.expr("datediff(max_d, d) <= 29"))
-        .select(
-            "page",
-            "cnt",
-            F.expr(
-                "CAST(cnt AS DECIMAL(38,0))"
-                " * CAST(SHIFTLEFT(CAST(1 AS BIGINT),"
-                "        29 - datediff(max_d, d)) AS DECIMAL(38,0))"
-            ).alias("w"),
-        )
-    )
-    return (
-        weighted.groupBy("page")
-        .agg(
-            F.sum("cnt").cast("long").alias("total_events"),
-            F.sum("w").cast("double").alias("decayed_score"),
-        )
-        .orderBy(F.col("decayed_score").desc(), "page")
-        .limit(10)
-    )
+    census = run_available_now(day_page_counts(ev), output_mode="complete").persist()
+    return decayed_popularity_frame(census)
 
 
 @query(
@@ -3019,32 +2600,13 @@ def streaming_decayed_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_chunk_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.streams import documents_stream
-    from .corpus import cdc_chunk_frame
+    from .corpus import cdc_chunk_frame, chunk_freq_frame
 
     # scan_guard: the per-row CDC rolling hash is the expensive stage
     # (round 12, same rationale as streaming_dedup_minhash)
     feed = documents_stream(spark, sf_dir, scan_guard=True)
-    per_chunk = run_available_now(
-        cdc_chunk_frame(feed), output_mode="append"
-    ).persist()
-    # the census side re-aliases its key: both branches read the same
-    # memory-sink view, and an un-renamed self-join would carry
-    # conflicting attribute references
-    freq = (
-        per_chunk.select(F.col("chunk_hash").alias("ch"))
-        .groupBy("ch")
-        .agg(F.count(F.lit(1)).cast("long").alias("corpus_freq"))
-    )
-    return per_chunk.join(
-        freq, per_chunk["chunk_hash"] == freq["ch"]
-    ).select(
-        "doc_id",
-        "chunk_id",
-        "chunk_start",
-        "n_chunk_tokens",
-        "chunk_hash",
-        "corpus_freq",
-    )
+    per_chunk = run_available_now(cdc_chunk_frame(feed), output_mode="append")
+    return chunk_freq_frame(_fresh_ids(per_chunk.persist()))
 
 
 @query(
@@ -3063,45 +2625,11 @@ def streaming_chunk_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.streams import documents_stream
+    from .datapipe import vocab_coverage_frame, word_counts
 
     feed = documents_stream(spark, sf_dir)
-    census = run_available_now(
-        feed.select(
-            F.explode_outer(
-                F.split(F.trim(F.lower("text")), r"\s+")
-            ).alias("word")
-        )
-        .where(F.col("word").isNotNull())
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt")),
-        output_mode="complete",
-    ).persist()
-    ranked = census.select(
-        "cnt",
-        F.row_number()
-        .over(Window.orderBy(F.desc("cnt"), F.asc("word")))
-        .alias("rk"),
-    )
-    tot = census.agg(F.sum("cnt").cast("long").alias("n"))
-    sizes = F.array(*[F.lit(s) for s in (8, 16, 32, 64, 128)])
-    cov = (
-        ranked.select(
-            "cnt",
-            F.explode(
-                F.filter(sizes, lambda v: v >= F.col("rk"))
-            ).alias("vocab_size"),
-        )
-        .groupBy("vocab_size")
-        .agg(F.sum("cnt").cast("long").alias("covered_tokens"))
-    )
-    return cov.crossJoin(F.broadcast(tot)).select(
-        F.col("vocab_size").cast("int").alias("vocab_size"),
-        "covered_tokens",
-        F.col("n").alias("total_tokens"),
-        F.expr(
-            "CAST(covered_tokens * 10000 DIV n AS BIGINT)"
-        ).alias("coverage_bp"),
-    )
+    census = run_available_now(word_counts(feed), output_mode="complete")
+    return vocab_coverage_frame(census.persist())
 
 
 @query(
@@ -3120,18 +2648,11 @@ def streaming_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def streaming_interarrival_bots(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .behavior import interarrival_bots_frame
+
     ev = events_stream(spark, sf_dir, watermark="10 minutes")
-    per_user = run_available_now(
-        ev.select(
-            "user_id",
-            F.struct(
-                F.unix_millis("ts").alias("ts_ms"),
-                F.col("event_id").alias("eid"),
-            ).alias("e"),
-        )
-        .groupBy("user_id")
-        .agg(F.collect_list("e").alias("evts")),
-        output_mode="complete",
+    per_user = _per_user_events(
+        ev, F.unix_millis("ts").alias("ts_ms"), F.col("event_id").alias("eid")
     )
     ts_sorted = F.transform(F.array_sort("evts"), lambda s: s["ts_ms"])
     gaps = F.zip_with(
@@ -3153,15 +2674,7 @@ def streaming_interarrival_bots(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("burst_gaps"),
     )
-    return s.where(F.col("n_gaps") >= 20).select(
-        "user_id",
-        "n_gaps",
-        "burst_gaps",
-        F.expr("CAST(burst_gaps * 10000 DIV n_gaps AS BIGINT)").alias(
-            "burst_share_bp"
-        ),
-        (F.col("burst_gaps") * 2 >= F.col("n_gaps")).alias("is_bot"),
-    )
+    return interarrival_bots_frame(s)
 
 
 @query(
@@ -3180,31 +2693,12 @@ def streaming_interarrival_bots(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_chunk_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.streams import documents_stream
-    from .corpus import cdc_chunk_frame
+    from .corpus import chunk_census, chunk_savings_frame
 
     # scan_guard (round 12): see streaming_chunk_cdc
     feed = documents_stream(spark, sf_dir, scan_guard=True)
-    census = run_available_now(
-        cdc_chunk_frame(feed)
-        .groupBy("chunk_hash")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("freq"),
-            F.max("n_chunk_tokens").cast("long").alias("n_tok"),
-        ),
-        output_mode="complete",
-    )
-    return census.agg(
-        F.sum("freq").cast("long").alias("n_chunks"),
-        F.count(F.lit(1)).cast("long").alias("n_unique_chunks"),
-        F.sum(F.col("freq") * F.col("n_tok")).cast("long").alias("total_tokens"),
-        F.sum((F.col("freq") - 1) * F.col("n_tok"))
-        .cast("long")
-        .alias("dup_tokens"),
-        F.expr(
-            "CAST(sum((freq - 1) * n_tok) * 10000"
-            " DIV sum(freq * n_tok) AS BIGINT)"
-        ).alias("savings_bp"),
-    )
+    census = run_available_now(chunk_census(feed), output_mode="complete")
+    return chunk_savings_frame(census)
 
 
 @query(
@@ -3228,23 +2722,14 @@ def streaming_chunk_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_stream(spark, sf_dir, watermark="10 minutes")
     page = F.get_json_object("props", "$.k").cast("int")
-    per_user = run_available_now(
-        ev.select(
-            "user_id",
-            F.struct(
-                F.unix_millis("ts").alias("ts_ms"),
-                F.col("event_id").alias("eid"),
-                (F.col("event_type") == "click").cast("int").alias("is_click"),
-                (F.col("event_type") == "purchase")
-                .cast("int")
-                .alias("is_purchase"),
-                page.alias("page"),
-                F.round(F.col("value") * 100).cast("long").alias("cents"),
-            ).alias("e"),
-        )
-        .groupBy("user_id")
-        .agg(F.collect_list("e").alias("evts")),
-        output_mode="complete",
+    per_user = _per_user_events(
+        ev,
+        F.unix_millis("ts").alias("ts_ms"),
+        F.col("event_id").alias("eid"),
+        (F.col("event_type") == "click").cast("int").alias("is_click"),
+        (F.col("event_type") == "purchase").cast("int").alias("is_purchase"),
+        page.alias("page"),
+        F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
     hit_t = "array<struct<page:int,cents:bigint>>"
     fold = F.aggregate(
@@ -3308,63 +2793,16 @@ def streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def streaming_session_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .behavior import session_duration_frame
+
     ev = events_stream(spark, sf_dir, watermark="10 minutes")
-    per_user = run_available_now(
-        ev.select(
-            "user_id",
-            F.struct(
-                F.unix_millis("ts").alias("ts_ms"),
-                F.col("event_id").alias("eid"),
-            ).alias("e"),
-        )
-        .groupBy("user_id")
-        .agg(F.collect_list("e").alias("evts")),
-        output_mode="complete",
+    per_user = _per_user_events(
+        ev, F.unix_millis("ts").alias("ts_ms"), F.col("event_id").alias("eid")
     )
     rows = per_user.select(
         "user_id", F.explode("evts").alias("e")
     ).select("user_id", "e.ts_ms", F.col("e.eid").alias("event_id"))
-    wl = Window.partitionBy("user_id").orderBy("ts_ms", "event_id")
-    g = rows.withColumn(
-        "brk",
-        F.when(
-            F.col("ts_ms") - F.lag("ts_ms").over(wl) > 3600000, 1
-        ).otherwise(0),
-    )
-    s = g.withColumn(
-        "sid",
-        # (ts_ms, event_id) tie-break — same total order as the lag
-        # window and as the batch twin (round-11 ADVICE)
-        F.sum("brk").over(
-            Window.partitionBy("user_id")
-            .orderBy("ts_ms", "event_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    d = s.groupBy("user_id", "sid").agg(
-        F.expr("(max(ts_ms) - min(ts_ms)) DIV 1000").alias("dur_s")
-    )
-    c = d.groupBy("dur_s").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    r = c.select(
-        "dur_s",
-        F.sum("cnt")
-        .over(
-            Window.orderBy("dur_s").rowsBetween(
-                Window.unboundedPreceding, Window.currentRow
-            )
-        )
-        .alias("cum"),
-        F.sum("cnt").over(Window.partitionBy(F.lit(1))).alias("n"),
-    )
-    qcol = lambda q, nm: F.min(  # noqa: E731
-        F.when(F.expr(f"cum >= ({q} * n + 99) DIV 100"), F.col("dur_s"))
-    ).cast("long").alias(nm)
-    return r.agg(
-        F.max("n").cast("long").alias("n_sessions"),
-        qcol(50, "p50_s"),
-        qcol(90, "p90_s"),
-        qcol(99, "p99_s"),
-    )
+    return session_duration_frame(rows)
 
 
 def _evicting_session_quantiles(
@@ -3374,6 +2812,7 @@ def _evicting_session_quantiles(
     EOF-padded events replay cut into ``chunks`` micro-batches."""
     from ..sources.streams import eof_pad_hours
     from ..streaming.stateful import session_durations_evicting
+    from .behavior import duration_quantiles
 
     gap_ms = 3_600_000  # pad derived from the SAME constant (r12 ADVICE)
     ev = events_stream(
@@ -3383,27 +2822,7 @@ def _evicting_session_quantiles(
         session_durations_evicting(ev, gap_ms=gap_ms), output_mode="append"
     )
     d = per_session.where(F.col("user_id") >= 0)  # drop the sentinel
-    c = d.groupBy("dur_s").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    r = c.select(
-        "dur_s",
-        F.sum("cnt")
-        .over(
-            Window.orderBy("dur_s").rowsBetween(
-                Window.unboundedPreceding, Window.currentRow
-            )
-        )
-        .alias("cum"),
-        F.sum("cnt").over(Window.partitionBy(F.lit(1))).alias("n"),
-    )
-    qcol = lambda q, nm: F.min(  # noqa: E731
-        F.when(F.expr(f"cum >= ({q} * n + 99) DIV 100"), F.col("dur_s"))
-    ).cast("long").alias(nm)
-    return r.agg(
-        F.max("n").cast("long").alias("n_sessions"),
-        qcol(50, "p50_s"),
-        qcol(90, "p90_s"),
-        qcol(99, "p99_s"),
-    )
+    return duration_quantiles(d)
 
 
 @query(

@@ -10,12 +10,19 @@ engines compare at µs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.asof import asof_join
 from ..operators.sessionize import sessionize
+from ..streaming.windows import (
+    cumulate_counts,
+    interval_join_stream,
+    session_agg,
+    sliding_agg,
+    tumbling_agg,
+)
 from .registry import query
 
 
@@ -41,21 +48,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def window_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-        
-    )
+    return tumbling_agg(_events(spark, sf_dir))
 
 
 @query(
@@ -77,16 +70,7 @@ def window_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    return (
-        ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2).cast("double").alias("sum_value"),
-        )
-        .select(F.col("w.start").alias("window_start"), "n_events", "sum_value")
-        
-    )
+    return sliding_agg(_events(spark, sf_dir))
 
 
 @query(
@@ -122,21 +106,7 @@ def window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def window_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    return (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2).cast("double").alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            "n_events",
-            "sum_value",
-        )
-        
-    )
+    return session_agg(_events(spark, sf_dir), "30 minutes")
 
 
 @query(
@@ -184,25 +154,9 @@ def window_tumbling_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir)
-    p = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id"),
-        F.col("ts").alias("p_ts"),
-    )
-    c = ev.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-    )
-    return (
-        p.join(
-            c,
-            (F.col("user_id") == F.col("c_user"))
-            & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 MINUTES"))
-            & (F.col("c_ts") <= F.col("p_ts")),
-        )
-        .select("purchase_id", "click_id", "user_id")
-        
+    return interval_join_stream(
+        ev.where(F.col("event_type") == "purchase"),
+        ev.where(F.col("event_type") == "click"),
     )
 
 
@@ -328,6 +282,13 @@ def sessionize_operator(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def dynamic_session_gap() -> Column:
+    """The per-event session gap: clicks 10 minutes, others 45."""
+    return F.when(F.col("event_type") == "click", F.lit("10 minutes")).otherwise(
+        F.lit("45 minutes")
+    )
+
+
 @query(
     "window_session_dynamic",
     oracle="""
@@ -368,26 +329,7 @@ def sessionize_operator(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def window_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    gap = F.when(F.col("event_type") == "click", F.lit("10 minutes")).otherwise(
-        F.lit("45 minutes")
-    )
-    return (
-        ev.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,4)")), 2
-                ).cast("double").alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            "n_events",
-            "sum_value",
-        )
-        
-    )
+    return session_agg(_events(spark, sf_dir), dynamic_session_gap())
 
 
 # session-lifetime demo broker for the Kafka round-trip query: one
@@ -815,26 +757,7 @@ group by TUMBLE(ctime, INTERVAL '1' HOURS)
     ),
 )
 def window_cumulate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    step, size, n_steps = 3600, 14400, 4
-    es = F.col("ts").cast("long")
-    base = ev.select(
-        "event_type",
-        (es - (es % size)).alias("ws"),
-        ((es % size) / step).cast("long").alias("j0"),
-    )
-    x = base.select(
-        "event_type",
-        "ws",
-        F.explode(F.sequence(F.col("j0") + 1, F.lit(n_steps))).alias("j"),
-    ).select(
-        F.col("ws").alias("window_start_s"),
-        (F.col("ws") + F.col("j") * step).alias("window_end_s"),
-        "event_type",
-    )
-    return x.groupBy("window_start_s", "window_end_s", "event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events")
-    )
+    return cumulate_counts(_events(spark, sf_dir))
 
 
 def _tvf_view(spark: SparkSession, sf_dir: str) -> None:

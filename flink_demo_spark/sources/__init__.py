@@ -1,6 +1,8 @@
 """Source connectors (SURVEY.md §2.1).
 
-``batch``:   parquet/csv/in-memory bounded sources.
+Bounded tables are read by ``catalog.load_table``; other bounded
+sources are plain ``spark.read`` / ``spark.createDataFrame`` calls.
+
 ``streams``: Structured Streaming sources — file replay of
              pre-stamped event files (the deterministic-test pattern
              the reference builds in ``StreamSourceMock.scala`` /

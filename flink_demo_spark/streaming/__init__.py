@@ -3,7 +3,8 @@
 ``runner``:  execute a streaming DataFrame to a memory sink with the
              availableNow trigger and return the bounded result —
              the test harness pattern (reference TestSink.java).
-``windows``: event-time windowed aggregations over streams.
+``windows``: event-time windowed aggregations and the interval join,
+             shared by the batch queries and their streaming twins.
 ``stateful``: applyInPandasWithState operators (timeouts, enrichment
              joins, CEP) — phase 3.
 """

@@ -2,10 +2,15 @@
 
 A query that must return the same rows as another declares it as its
 twin and inherits that query's oracle; no oracle SQL may be a copy of
-another query's, so a copied oracle cannot creep back in.
+another query's, so a copied oracle cannot creep back in. Nor may a
+twin pair copy DataFrame code: the rows both compute are written once.
 """
 
+import ast
+import difflib
+import inspect
 import re
+import textwrap
 
 import pytest
 
@@ -46,6 +51,36 @@ def test_no_copied_oracles():
         if len({getattr(REGISTRY[n], "twin", None) or n for n in names}) > 1
     ]
     assert not copies, f"{len(copies)} groups share undeclared oracle SQL: {copies}"
+
+
+def _code_lines(fn) -> list[str]:
+    """The stripped lines of ``fn``'s body that hold code: not blank,
+    not comments, with a letter or digit."""
+    src = textwrap.dedent(inspect.getsource(fn))
+    body = ast.parse(src).body[0].body
+    lines = (ln.strip() for ln in src.splitlines()[body[0].lineno - 1 :])
+    return [
+        ln for ln in lines
+        if ln and not ln.startswith("#") and re.search(r"[A-Za-z0-9]", ln)
+    ]
+
+
+def test_twins_share_their_transformation():
+    """A query and its twin call one shared transformation instead of
+    copying it: their bodies share no run of 4 or more equal code
+    lines."""
+    copies = []
+    for name, spec in REGISTRY.items():
+        if spec.twin is None:
+            continue
+        sm = difflib.SequenceMatcher(
+            None, _code_lines(spec.fn), _code_lines(REGISTRY[spec.twin].fn),
+            autojunk=False,
+        )
+        runs = [m.size for m in sm.get_matching_blocks() if m.size >= 4]
+        if runs:
+            copies.append(f"{name} ~ {spec.twin}: runs of {runs} lines")
+    assert not copies, f"{len(copies)} twin pairs copy code: {copies}"
 
 
 def test_oracle_and_twin_are_exclusive():
