@@ -16,18 +16,24 @@ implements the subset the reference actually uses:
 - pattern groups (``begin_group``/``next_group``/``followed_by_group``
   — CEPDemo.scala:740);
 - ``within`` horizon from first to last matched event;
-- skip strategy after a match: ``skip_past_last_event`` (the
-  reference's default choice for its applied patterns) or
-  ``skip_to_next``; ``match_pattern_all`` is Flink's NO_SKIP default
-  (every anchor, every branch);
+- the five after-match strategies of Flink's
+  ``AfterMatchSkipStrategy`` (CEPDemo.scala:808-949):
+  ``skip_past_last_event`` (the reference's choice for its applied
+  patterns), ``skip_to_next``, ``skip_to_first(name)``,
+  ``skip_to_last(name)`` and ``no_skip()`` (every anchor, every
+  branch);
 - timeout side-output for expired partial matches
-  (``match_pattern_with_timeouts`` — TimeoutMatchByCep.scala:10-19).
+  (``match_pattern(..., timeout_measures=)`` —
+  TimeoutMatchByCep.scala:10-19).
 
-Execution model (batch): events are grouped per key, sorted by event
-time, and an NFA runs inside ``applyInPandas`` — one shuffle on the
-key, linear scan per group, state bounded by the pattern length.
-The streaming twin (``streaming/stateful.py``) runs the same NFA in
-``applyInPandasWithState`` with the buffer kept in group state.
+Execution model (batch): ``match_pattern`` groups events per key,
+sorts them by event time, and runs the NFA in one pandas stage — one
+shuffle on the key, linear scan per group, state bounded by the
+pattern length. The streaming twins in ``streaming/cep_stream.py``
+run the same NFA in ``applyInPandasWithState`` with the buffer kept
+in group state, one operator per input contract (in-order or
+watermarked). Every operator checks the strategy/timeout contract
+with :func:`_check_contract` before it plans anything.
 
 Covers the applied uses: login-fail ``fail next fail within 2s``
 (``LoginFail.scala:78-86``), order-timeout ``create followedBy pay
@@ -164,15 +170,17 @@ class Step:
 class Pattern:
     """Fluent pattern builder mirroring the Flink CEP API surface.
 
-    ``after_match``: 'skip_past_last_event' (default; CEPDemo.scala:879)
-    or 'skip_to_next' (overlapping matches, anchor advances one row;
-    CEPDemo.scala:846).
+    ``after_match``: 'skip_past_last_event' (default; CEPDemo.scala:879),
+    'skip_to_next' (overlapping matches, anchor advances one row;
+    CEPDemo.scala:846), 'no_skip' (every solution of every anchor;
+    CEPDemo.scala:808) or a named skip (``skip_to_first`` /
+    ``skip_to_last``).
     """
 
     steps: list[Step] = field(default_factory=list)
     within: pd.Timedelta | None = None
-    # 'skip_past_last_event' | 'skip_to_next' | ('skip_to_first', name)
-    # | ('skip_to_last', name)
+    # 'skip_past_last_event' | 'skip_to_next' | 'no_skip'
+    # | ('skip_to_first', name) | ('skip_to_last', name)
     after_match: str | tuple[str, str] = "skip_past_last_event"
     until_pred: Predicate | None = None  # stop condition (CEPDemo.scala:489)
 
@@ -192,7 +200,7 @@ class Pattern:
         """Skip-till-ANY-match: branch at every later event satisfying
         the predicate, not just the first (CEP .followedByAny,
         CEPDemo.scala:674-704 — 'a followByAny c -> (a,c), (a,c)').
-        Branches beyond the first are emitted by ``match_pattern_all``."""
+        Branches beyond the first are emitted under ``no_skip()``."""
         self.steps.append(Step(name, predicate, contiguity="followed_by_any"))
         return self
 
@@ -225,8 +233,8 @@ class Pattern:
         """Loop repeats may be ANY subset of later matching events,
         with other events interleaved (CEP .allowCombinations,
         CEPDemo.scala:211-246: times(2) over matches at t1<t2<t3 yields
-        {t1,t2}, {t1,t3}, {t2,t3}). All subsets are emitted by
-        ``match_pattern_all``."""
+        {t1,t2}, {t1,t3}, {t2,t3}). All subsets are emitted under
+        ``no_skip()``."""
         self.steps[-1] = self.steps[-1].replace(loop="combinations")
         return self
 
@@ -297,6 +305,14 @@ class Pattern:
         """AFTER MATCH SKIP TO NEXT ROW: emit overlapping matches
         (CEP skip strategies, CEPDemo.scala:846)."""
         self.after_match = "skip_to_next"
+        return self
+
+    def no_skip(self) -> "Pattern":
+        """AFTER MATCH NO_SKIP (CEP ``AfterMatchSkipStrategy.noSkip``,
+        Flink's default; CEPDemo.scala:808): every anchor emits EVERY
+        solution — all followedByAny branches, all allowCombinations
+        subsets, all repeat counts — and consumes no rows."""
+        self.after_match = "no_skip"
         return self
 
     def skip_to_first(self, name: str) -> "Pattern":
@@ -791,6 +807,45 @@ def _sorted_rows_recs(
     return rows, recs
 
 
+_AFTER_MATCH = ("skip_past_last_event", "skip_to_next", "no_skip")
+_NAMED_SKIPS = ("skip_to_first", "skip_to_last")
+_TIMEOUT_SKIPS = ("skip_past_last_event", "skip_to_next")
+
+
+def _check_contract(pattern: Pattern, timeouts: bool, streaming: bool) -> None:
+    """The input contract every CEP operator enforces before it plans
+    anything, batch and streaming alike: a known after-match strategy;
+    a timeout side-output only under ``skip_past_last_event`` or
+    ``skip_to_next`` (a timeout is a failed anchor of a consuming walk,
+    which the emit-all and named-skip strategies do not have); and a
+    WITHIN horizon wherever timeouts or a stream need one to decide an
+    anchor."""
+    after = pattern.after_match
+    if not (
+        after in _AFTER_MATCH
+        or (isinstance(after, tuple) and after[0] in _NAMED_SKIPS)
+    ):
+        raise NotImplementedError(f"unknown after-match strategy {after!r}")
+    if timeouts and after not in _TIMEOUT_SKIPS:
+        raise ValueError(
+            "timeout side-output needs skip_past_last_event or "
+            f"skip_to_next, not {after!r}"
+        )
+    if pattern.within is None and (timeouts or streaming):
+        raise ValueError(
+            "timeout side-outputs and streaming CEP require "
+            "pattern.within_time(...)"
+        )
+
+
+def _emits_all(after) -> bool:
+    """Strategies that emit EVERY solution of a matched anchor: NO_SKIP
+    and SKIP TO FIRST (whose anchor stays pinned)."""
+    return after == "no_skip" or (
+        isinstance(after, tuple) and after[0] == "skip_to_first"
+    )
+
+
 def match_pattern(
     df: DataFrame,
     pattern: Pattern,
@@ -799,95 +854,93 @@ def match_pattern(
     measures: Callable[[pd.DataFrame, dict[str, list[int]]], dict],
     output_schema: StructType | str,
     order_cols: list[str] | None = None,
+    timeout_measures: Callable[[pd.DataFrame, dict[str, list[int]]], dict]
+    | None = None,
 ) -> DataFrame:
     """Run the NFA per key over time-sorted events (batch).
 
     ``measures(rows, bindings) -> dict`` builds one output row per
-    match (MATCH_RECOGNIZE MEASURES clause). AFTER MATCH SKIP PAST
-    LAST EVENT.
+    match (MATCH_RECOGNIZE MEASURES clause). The walk finds the first
+    anchor at or after the scan position that matches and resumes per
+    ``pattern.after_match``: past the last matched event (default), at
+    the next row (``skip_to_next``), at the first or last event bound
+    to a step (``skip_to_first``/``skip_to_last``), or at the next row
+    after emitting EVERY solution of the anchor (``no_skip``, Flink's
+    NO_SKIP: all followedByAny branches, all allowCombinations subsets,
+    all repeat counts; CEPDemo.scala:674-704, 211-246).
+
+    ``timeout_measures`` adds the timeout side-output (Flink
+    ``PatternFlatTimeoutFunction``, TimeoutMatchByCep.scala:10-19 /
+    OrderPay.scala:31-53): every anchor the walk passes over that
+    begins a partial match but cannot complete within
+    ``pattern.within`` emits a ``timeout_measures`` row with
+    ``is_timeout=true``; matches emit with ``is_timeout=false``. One
+    DataFrame with an ``is_timeout`` flag is the Spark shape of a side
+    output (filter to split), so ``output_schema`` must hold an
+    ``is_timeout boolean`` field. A partial that merely dies on a
+    strict-``next`` mismatch emits nothing, as in Flink. Timeouts need
+    ``pattern.within`` and ``skip_past_last_event`` or
+    ``skip_to_next`` (:func:`_check_contract`).
     """
+    _check_contract(pattern, timeout_measures is not None, streaming=False)
     # resolve output column names on the driver: workers have no session
     out_columns = [f.name for f in _schema_fields(output_schema)]
+    after = pattern.after_match
+    emit_every = _emits_all(after)
+    flag = False if timeout_measures is not None else None
 
     def run(group: pd.DataFrame) -> pd.DataFrame:
         rows, recs = _sorted_rows_recs(group, order_cols or [ts_col])
         out: list[dict] = []
+
+        def emit(measure_fn, bindings, is_timeout):
+            rec = measure_fn(rows, bindings)
+            if is_timeout is not None:
+                rec["is_timeout"] = is_timeout
+            for k in key_cols:
+                rec.setdefault(k, rows.iloc[0][k])
+            out.append(rec)
+
         start = 0
         n = len(rows)
         while start < n:
             m = None
             anchor = start
             for anchor in range(start, n):
-                m = _match_from(rows, anchor, pattern, ts_col, recs)
+                solutions = _iter_matches_from(rows, anchor, pattern, ts_col, recs)
+                m = next(solutions, None)
                 if m is not None:
                     break
+                if timeout_measures is not None:
+                    partial = _partial_bindings(rows, anchor, pattern, ts_col, recs)
+                    if partial:
+                        emit(timeout_measures, partial, True)
             if m is None:
                 break
             end, bindings = m
-            if (
-                isinstance(pattern.after_match, tuple)
-                and pattern.after_match[0] == "skip_to_first"
-            ):
-                # anchor is pinned: emit every solution at this anchor
-                pname = pattern.after_match[1]
-                max_end = end
-                for e2, b2 in _iter_matches_from(rows, anchor, pattern, ts_col, recs):
-                    rec = measures(rows, b2)
-                    for k in key_cols:
-                        rec.setdefault(k, rows.iloc[0][k])
-                    out.append(rec)
+            emit(measures, bindings, flag)
+            max_end = end
+            if emit_every:
+                for e2, b2 in solutions:
+                    emit(measures, b2, flag)
                     max_end = max(max_end, e2)
-                idxs = bindings.get(pname) or []
-                first_idx = min(idxs) if idxs else anchor
-                start = first_idx if first_idx > anchor else max_end
-                continue
-            rec = measures(rows, bindings)
-            for k in key_cols:
-                rec.setdefault(k, rows.iloc[0][k])
-            out.append(rec)
-            if (
-                isinstance(pattern.after_match, tuple)
-                and pattern.after_match[0] == "skip_to_last"
-            ):
-                idxs = bindings.get(pattern.after_match[1]) or []
-                last_idx = max(idxs) if idxs else anchor
-                start = last_idx if last_idx > anchor else end
-            elif pattern.after_match == "skip_to_next":
+            if after in ("no_skip", "skip_to_next"):
                 start = anchor + 1  # overlapping matches allowed
+            elif isinstance(after, tuple):
+                # the anchor resumes at the first/last event bound to
+                # the named step when that advances the scan
+                idxs = bindings.get(after[1]) or []
+                if after[0] == "skip_to_first":
+                    first_idx = min(idxs) if idxs else anchor
+                    start = first_idx if first_idx > anchor else max_end
+                else:
+                    last_idx = max(idxs) if idxs else anchor
+                    start = last_idx if last_idx > anchor else end
             else:
                 start = end  # skip past last event
-        if not out:
-            return pd.DataFrame(columns=out_columns)
-        return pd.DataFrame(out)
-
-    return _grouped_map(df, key_cols, run, output_schema)
-
-
-def match_pattern_all(
-    df: DataFrame,
-    pattern: Pattern,
-    key_cols: list[str],
-    ts_col: str,
-    measures: Callable[[pd.DataFrame, dict[str, list[int]]], dict],
-    output_schema: StructType | str,
-    order_cols: list[str] | None = None,
-) -> DataFrame:
-    """Flink NO_SKIP emission (CEP's default AfterMatchSkipStrategy):
-    every anchor emits EVERY solution — all followedByAny branches
-    (CEPDemo.scala:674-704), all allowCombinations subsets
-    (CEPDemo.scala:211-246), all non-greedy repeat counts. Use
-    ``match_pattern`` for the consuming skip strategies."""
-    out_columns = [f.name for f in _schema_fields(output_schema)]
-
-    def run(group: pd.DataFrame) -> pd.DataFrame:
-        rows, recs = _sorted_rows_recs(group, order_cols or [ts_col])
-        out: list[dict] = []
-        for anchor in range(len(rows)):
-            for _end, bindings in _iter_matches_from(rows, anchor, pattern, ts_col, recs):
-                rec = measures(rows, bindings)
-                for k in key_cols:
-                    rec.setdefault(k, rows.iloc[0][k])
-                out.append(rec)
+            # a zero-width match (every step optional, none bound) ends
+            # at its anchor: the scan still moves on
+            start = max(start, anchor + 1)
         if not out:
             return pd.DataFrame(columns=out_columns)
         return pd.DataFrame(out)
@@ -969,71 +1022,6 @@ def _partial_bindings(
         bindings[step.name] = run
         i = run[-1] + 1
     return None  # completed — not a timeout
-
-
-def match_pattern_with_timeouts(
-    df: DataFrame,
-    pattern: Pattern,
-    key_cols: list[str],
-    ts_col: str,
-    measures: Callable[[pd.DataFrame, dict[str, list[int]]], dict],
-    timeout_measures: Callable[[pd.DataFrame, dict[str, list[int]]], dict],
-    output_schema: StructType | str,
-    order_cols: list[str] | None = None,
-) -> DataFrame:
-    """Match with a timeout side-output (Flink
-    ``PatternFlatTimeoutFunction``, reference TimeoutMatchByCep.scala:
-    10-19 / OrderPay.scala:31-53): anchors that begin a partial match
-    but cannot complete within ``pattern.within`` emit a row built by
-    ``timeout_measures`` with ``is_timeout=true``; completed matches
-    emit ``measures`` rows with ``is_timeout=false``. One DataFrame
-    with an ``is_timeout`` flag is the Spark shape of a side output —
-    filter to split (same pattern as operators/streams_util.py).
-
-    ``output_schema`` must contain an ``is_timeout boolean`` field.
-    Requires ``pattern.within``; a partial that merely dies on a
-    strict-``next`` mismatch emits nothing, matching Flink. Skip
-    strategies here: skip-past-last-event (default) and skip_to_next;
-    the named skip_to_first/skip_to_last strategies fall back to
-    skip-past (use ``match_pattern`` for those).
-    """
-    if pattern.within is None:
-        raise ValueError("timeout output requires pattern.within_time(...)")
-    out_columns = [f.name for f in _schema_fields(output_schema)]
-
-    def run(group: pd.DataFrame) -> pd.DataFrame:
-        rows, recs = _sorted_rows_recs(group, order_cols or [ts_col])
-        out: list[dict] = []
-        start = 0
-        n = len(rows)
-        while start < n:
-            m = None
-            anchor = start
-            for anchor in range(start, n):
-                m = _match_from(rows, anchor, pattern, ts_col, recs)
-                if m is not None:
-                    break
-                partial = _partial_bindings(rows, anchor, pattern, ts_col, recs)
-                if partial:
-                    rec = timeout_measures(rows, partial)
-                    rec["is_timeout"] = True
-                    for k in key_cols:
-                        rec.setdefault(k, rows.iloc[0][k])
-                    out.append(rec)
-            if m is None:
-                break
-            end, bindings = m
-            rec = measures(rows, bindings)
-            rec["is_timeout"] = False
-            for k in key_cols:
-                rec.setdefault(k, rows.iloc[0][k])
-            out.append(rec)
-            start = anchor + 1 if pattern.after_match == "skip_to_next" else end
-        if not out:
-            return pd.DataFrame(columns=out_columns)
-        return pd.DataFrame(out)
-
-    return _grouped_map(df, key_cols, run, output_schema)
 
 
 def _schema_fields(schema: StructType | str):

@@ -968,12 +968,22 @@ def _run_stream_increment(recs, spec: MatchRecognizeSpec, ts_col):
     return out, n
 
 
-def streaming_match_recognize(
-    df: DataFrame,
-    sql: str,
-    state_payload_version: int = 2,
-    state_layout: str = "v2",
-) -> DataFrame:
+def _read_payload(raw: bytes) -> tuple[list[dict], int]:
+    """``(buffered rows, MATCH_NUMBER counter)`` of a
+    ``streaming_match_recognize`` state payload."""
+    import pickle
+
+    payload = pickle.loads(raw)
+    if isinstance(payload, tuple) and payload and payload[0] == "mr2":
+        _tag, buf, match_no = payload
+        return buf, match_no
+    raise ValueError(
+        "unrecognized match_recognize state payload "
+        f"(type {type(payload).__name__}); cannot restore"
+    )
+
+
+def streaming_match_recognize(df: DataFrame, sql: str) -> DataFrame:
     """Streaming twin of ``match_recognize``: per partition key, rows
     not yet resolvable stay in group state (pickled buffer) and
     matches emit as soon as their outcome is decided — a greedy loop
@@ -994,44 +1004,20 @@ def streaming_match_recognize(
     patterns a WITHIN horizon.
 
     Checkpoint compatibility: the state-store schema is the single
-    field ``(buf: binary)`` — the ORIGINAL layout — and everything
-    else (currently the MATCH_NUMBER() continuity counter) rides
-    INSIDE the pickled payload under a version tag, because Spark
-    validates the state-store STRUCT schema at restore and any
-    field-list change bricks existing checkpoints. Restore accepts
-    both payload generations: a bare pickled row list (the v1 layout,
-    MATCH_NUMBER resumes from 0 — v1 never persisted it) and the
-    tagged ``("mr2", rows, match_no)`` tuple. Future state additions
-    extend the tagged tuple, never the struct, so checkpoints stay
-    restorable across upgrades — the tolerant analogue of Flink's
-    savepoint migration (which fails restore on incompatible operator
-    state). The short-lived two-FIELD ``(buf, match_no)`` layout
-    (round 7 only) predates this rule, and Spark's state-schema
-    compatibility check rejects any FIELD-LIST change at restore — so
-    an r7 checkpoint cannot ride the single-field struct at all.
-    ``state_layout="r7"`` declares the matching two-field struct and
-    keeps writing it (a checkpoint's struct schema is fixed for its
-    lifetime): the pickled buffer reads/writes positionally from
-    field 0 and MATCH_NUMBER() continuity uses field 1, so r7
-    checkpoints restore losslessly — see MIGRATING.md.
-
-    ``state_payload_version=1`` makes the WRITE side emit the bare v1
-    row-list payload (reads always tolerate both) — the downgrade path
-    when an older engine must be able to take over the checkpoint; v1
-    never persisted MATCH_NUMBER, so numbering restarts at 1 after a
-    handover, exactly as v1 behaved.
+    field ``(buf: binary)``, and everything else (currently the
+    MATCH_NUMBER() continuity counter) rides INSIDE the pickled
+    payload, the tagged ``("mr2", rows, match_no)`` tuple, because
+    Spark validates the state-store STRUCT schema at restore and any
+    field-list change bricks existing checkpoints. Future state
+    additions extend the tagged tuple, never the struct. A payload
+    without the tag raises ``ValueError`` on restore instead of being
+    guessed at.
     """
     import pickle
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import BinaryType, StructField, StructType
 
-    if state_payload_version not in (1, 2):
-        raise ValueError(
-            f"state_payload_version must be 1 or 2, got {state_payload_version}"
-        )
-    if state_layout not in ("v2", "r7"):
-        raise ValueError(f"state_layout must be 'v2' or 'r7', got {state_layout}")
     spec = parse_match_recognize(sql)
     schema_map = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     if spec.all_rows:
@@ -1054,38 +1040,11 @@ def streaming_match_recognize(
     ts_col = spec.order_by[0] if spec.order_by else None
     order = spec.order_by or ([ts_col] if ts_col else [])
     part_cols = list(spec.partition_by)
-    if state_layout == "r7":
-        from pyspark.sql.types import LongType
-
-        state_schema = StructType(
-            [StructField("buf", BinaryType()), StructField("match_no", LongType())]
-        )
-    else:
-        state_schema = StructType([StructField("buf", BinaryType())])
+    state_schema = StructType([StructField("buf", BinaryType())])
 
     def fn(key, pdfs, state: GroupState):
         if state.exists:
-            if state_layout == "r7":
-                # round-7 two-field layout: positional read — buffer in
-                # field 0, MATCH_NUMBER counter in field 1
-                raw, mno_field = state.get
-                payload = pickle.loads(raw)
-                mno_field = int(mno_field) if mno_field is not None else 0
-            else:
-                (raw,) = state.get
-                payload = pickle.loads(raw)
-                mno_field = 0
-            if isinstance(payload, tuple) and payload and payload[0] == "mr2":
-                _tag, buf, match_no = payload
-            elif isinstance(payload, list):
-                # v1 payload: bare row list; MATCH_NUMBER comes from the
-                # r7 struct field when present, else restarts at 0
-                buf, match_no = payload, mno_field
-            else:
-                raise ValueError(
-                    "unrecognized match_recognize state payload "
-                    f"(type {type(payload).__name__}); cannot restore"
-                )
+            buf, match_no = _read_payload(state.get[0])
         else:
             buf, match_no = [], 0
         new = [pdf for pdf in pdfs if len(pdf)]
@@ -1111,15 +1070,7 @@ def streaming_match_recognize(
             for ast, alias in spec.measures:
                 rec[alias] = _eval(ast, ctx)
             rows_out.append(rec)
-        if state_layout == "r7":
-            # keep the checkpoint's two-field shape: bare-list payload,
-            # counter in its own field — byte-compatible with what the
-            # round-7 engine wrote
-            state.update((pickle.dumps(buf[keep_from:]), match_no))
-        elif state_payload_version == 1:
-            state.update((pickle.dumps(buf[keep_from:]),))
-        else:
-            state.update((pickle.dumps(("mr2", buf[keep_from:], match_no)),))
+        state.update((pickle.dumps(("mr2", buf[keep_from:], match_no)),))
         if rows_out:
             yield pd.DataFrame(rows_out, columns=out_columns)
         else:
@@ -1145,12 +1096,8 @@ def match_recognize_state_summary(
     partition key with ``buffered_rows`` (events held for undecided
     partial matches — the state-size signal an on-call watches) and
     ``match_no`` (last MATCH_NUMBER emitted). Decodes the version-
-    tagged payload; bare v1 row-list payloads read as
-    ``match_no = 0``, matching their restore semantics. Arrow-batched
-    ``mapInPandas`` over the state reader — one task per state
-    partition, nothing on the driver."""
-    import pickle
-
+    tagged payload. Arrow-batched ``mapInPandas`` over the state
+    reader — one task per state partition, nothing on the driver."""
     import pandas as pd
 
     from ..streaming.state_query import read_keyed_state
@@ -1174,20 +1121,7 @@ def match_recognize_state_summary(
         for pdf in batches:
             rows = []
             for _, r in pdf.iterrows():
-                payload = pickle.loads(r["buf"])
-                if (
-                    isinstance(payload, tuple)
-                    and payload
-                    and payload[0] == "mr2"
-                ):
-                    _tag, buf, mno = payload
-                elif isinstance(payload, list):
-                    buf, mno = payload, 0
-                else:
-                    raise ValueError(
-                        "unrecognized match_recognize state payload "
-                        f"(type {type(payload).__name__})"
-                    )
+                buf, mno = _read_payload(r["buf"])
                 rec = {c: r[c] for c in key_cols}
                 rec["buffered_rows"] = len(buf)
                 rec["match_no"] = mno

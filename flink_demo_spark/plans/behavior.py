@@ -372,10 +372,11 @@ def cep_order_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
         return {"anchor_id": int(rows.iloc[b["begin"][0]]["event_id"]),
                 "status": "timeout"}
 
-    out = cep.match_pattern_with_timeouts(
-        ev, pat, ["user_id"], "ts", ok, timed_out,
+    out = cep.match_pattern(
+        ev, pat, ["user_id"], "ts", ok,
         "user_id long, anchor_id long, status string, is_timeout boolean",
         order_cols=["ts", "event_id"],
+        timeout_measures=timed_out,
     )
     return out
 
@@ -786,7 +787,7 @@ def cep_skip_to_first_prefixes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY s.user_id, signup_id, purchase_id
     """,
     doc=(
-        "Flink NO_SKIP emission via match_pattern_all (reference "
+        "Flink NO_SKIP emission via Pattern.no_skip() (reference "
         "CEPDemo.scala followedByAny:674-704 'every branch, every "
         "anchor'): signup followedByAny purchase WITHIN 1 day -> one "
         "row per (signup, in-horizon later purchase) pair."
@@ -800,6 +801,7 @@ def cep_no_skip_branches(spark: SparkSession, sf_dir: str) -> DataFrame:
         cep.Pattern.begin("s", lambda r: r["event_type"] == "signup")
         .followed_by_any("p", lambda r: r["event_type"] == "purchase")
         .within_time("1D")
+        .no_skip()
     )
 
     def measures(rows, b):
@@ -808,7 +810,7 @@ def cep_no_skip_branches(spark: SparkSession, sf_dir: str) -> DataFrame:
             "purchase_id": int(rows.iloc[b["p"][0]]["event_id"]),
         }
 
-    out = cep.match_pattern_all(
+    out = cep.match_pattern(
         ev, pat, ["user_id"], "ts", measures,
         "user_id long, signup_id long, purchase_id long",
         order_cols=["ts", "event_id"],

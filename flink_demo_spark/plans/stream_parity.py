@@ -53,14 +53,6 @@ def _per_user_events(ev: DataFrame, *fields: Column) -> DataFrame:
     )
 
 
-def _fresh_ids(df: DataFrame) -> DataFrame:
-    """``df`` with every column re-aliased. A sink table joined with a
-    frame derived from itself needs this: Spark cannot give its
-    MemoryPlan leaf fresh attribute ids, but it can re-alias a
-    projection."""
-    return df.select(*[F.col(c).alias(c) for c in df.columns])
-
-
 def _page_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Each user's consecutive (src, dst) page hops in (ts, event_id)
     order: the batch twins' ``lag("page")`` over a replayed stream."""
@@ -770,7 +762,7 @@ def streaming_cep_skip_to_last(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_cep_no_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import cep
-    from ..streaming.cep_stream import streaming_match_pattern_all
+    from ..streaming.cep_stream import streaming_match_pattern
 
     ev = events_stream(spark, sf_dir, watermark=None).where(
         F.col("event_type").isin("signup", "purchase")
@@ -779,6 +771,7 @@ def streaming_cep_no_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
         cep.Pattern.begin("s", lambda r: r["event_type"] == "signup")
         .followed_by_any("p", lambda r: r["event_type"] == "purchase")
         .within_time("1D")
+        .no_skip()
     )
 
     def measures(rows, b):
@@ -787,7 +780,7 @@ def streaming_cep_no_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "purchase_id": int(rows.iloc[b["p"][0]]["event_id"]),
         }
 
-    out = streaming_match_pattern_all(
+    out = streaming_match_pattern(
         ev,
         pat,
         key_cols=["user_id"],
@@ -1347,7 +1340,7 @@ def streaming_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     static = load_table(spark, sf_dir, "events")
     census = static.groupBy("event_type").agg(F.count(F.lit(1)).alias("g"))
     wins = counts.groupBy("w").agg(F.sum("o").alias("n"))
-    return drift_chi2_frame(census, wins, _fresh_ids(counts))
+    return drift_chi2_frame(census, wins, counts)
 
 
 @query(
@@ -2314,7 +2307,7 @@ def streaming_label_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = census.where(F.col("pos") == 0).select(
         "label", F.col("c").cast("long").alias("n_vecs")
     )
-    return label_drift_frame(lc, gc, _fresh_ids(n))
+    return label_drift_frame(lc, gc, n)
 
 
 @query(
@@ -2606,7 +2599,7 @@ def streaming_chunk_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (round 12, same rationale as streaming_dedup_minhash)
     feed = documents_stream(spark, sf_dir, scan_guard=True)
     per_chunk = run_available_now(cdc_chunk_frame(feed), output_mode="append")
-    return chunk_freq_frame(_fresh_ids(per_chunk.persist()))
+    return chunk_freq_frame(per_chunk.persist())
 
 
 @query(

@@ -45,13 +45,26 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+# the directory holding this package. Pandas stages pickle the
+# package's functions by reference, so their Python workers must
+# import it whatever the driver's cwd or PYTHONPATH.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an externally built session."""
+    """Apply runtime-settable confs to an externally built session and
+    put ``PACKAGE_ROOT`` on its Python workers' path: PySpark builds
+    each Python function's worker environment from
+    ``SparkContext.environment`` when the function is planned."""
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass  # static conf on this build; builder path sets it instead
+    env = spark.sparkContext.environment
+    paths = env.get("PYTHONPATH", "")
+    if PACKAGE_ROOT not in paths.split(os.pathsep):
+        env["PYTHONPATH"] = os.pathsep.join(p for p in (PACKAGE_ROOT, paths) if p)
     return spark
 
 
@@ -78,13 +91,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        # Python workers import this package (pandas stages pickle its
-        # functions by reference); put its parent dir on their path so
-        # they do not depend on the driver's cwd or PYTHONPATH
-        .config(
-            "spark.executorEnv.PYTHONPATH",
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        )
         # local test data is a single small parquet per table: the 128m
         # default makes every scan a single task. 8m splits scans across
         # cores (measured ~25% on scan-bound queries at sf0.1). On a real

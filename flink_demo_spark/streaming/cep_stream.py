@@ -1,24 +1,46 @@
-"""Streaming CEP: consecutive-event pattern detection with keyed state
-(SURVEY.md §2.12 streaming form).
+"""Streaming CEP from keyed state (SURVEY.md §2.12 streaming form).
 
-The reference's login-fail detector (``LoginFail.scala:78-86``: two
-consecutive fails within a horizon, via keyed state + timer or CEP)
-as an ``applyInPandasWithState`` operator: per key, the last seen
-event is carried in group state so the pattern matches across
-micro-batch boundaries when batches arrive in event-time order
-(file-replay and ``availableNow`` satisfy this; with out-of-order
-batches the watermark-sorted variant in operators/cep.py applies).
+Three ``applyInPandasWithState`` operators, one per input contract:
+
+- ``streaming_match_pattern`` runs the batch NFA of
+  ``operators/cep.py`` (any ``Pattern``, every after-match strategy,
+  the timeout side-output) over micro-batches that arrive in
+  event-time order per key (file replay, ``availableNow``);
+- ``streaming_match_pattern_watermarked`` runs the same NFA behind a
+  watermark for out-of-order input: an anchor is decided once
+  ``t0 + within <= watermark``, and rows at or below the watermark
+  are dropped as late on intake;
+- ``consecutive_pattern_stream`` is the vectorized special case of
+  the reference's login-fail detector (``LoginFail.scala:78-86``: two
+  consecutive fails within a horizon): per key only the last seen
+  event is carried in group state.
+
+The general operators' decision steps, ``drain_in_order`` and
+``drain_watermarked``, are pure Python, so the split-invariance fuzz
+drives them directly against batch ``match_pattern``.
 """
 
 from __future__ import annotations
 
+import pickle
 from collections.abc import Iterable
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+from pyspark.sql.types import BinaryType, LongType, StructField, StructType
+
+from ..operators.cep import (
+    _anchor_dead_now,
+    _anchor_failure_is_final,
+    _check_contract,
+    _emits_all,
+    _iter_matches_from,
+    _match_future_sensitive,
+    _partial_bindings,
+    _schema_fields,
+)
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -35,6 +57,9 @@ STATE_SCHEMA = StructType(
         StructField("last_ts_us", LongType()),
     ]
 )
+
+# the general operators' group state: the key's undecided rows, pickled
+BUFFER_STATE_SCHEMA = StructType([StructField("buf", BinaryType())])
 
 
 def _consecutive_hits(
@@ -122,110 +147,31 @@ def consecutive_pattern_stream(
     )
 
 
-BUFFERED_STATE_SCHEMA = StructType(
-    [
-        StructField("last_is_match", LongType()),
-        StructField("last_id", LongType()),
-        StructField("last_ts_us", LongType()),
-        StructField("buf_ts", ArrayType(LongType())),
-        StructField("buf_id", ArrayType(LongType())),
-        StructField("buf_match", ArrayType(LongType())),
-    ]
-)
-
-
-def buffered_consecutive_pattern_stream(
-    events: DataFrame,
-    match_type: str = "error",
-    horizon_us: int = 30 * 60 * 1_000_000,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Out-of-order-tolerant streaming CEP: the watermark-sorted buffer
-    Flink CEP keeps internally (events are queued per key and the NFA
-    only consumes them in event-time order once the watermark passes).
-
-    Events above the current watermark wait in group state; each
-    invocation (new data, or the event-time timer set at wm+1ms so the
-    flush happens even when a later batch brings this key no rows)
-    releases the buffered prefix <= watermark to the detector in
-    (ts, id) order. Events at or below the watermark on arrival are
-    dropped as late, matching Flink CEP's late-event handling. One
-    semantic difference, documented: a bounded Flink job emits a final
-    MAX_WATERMARK that flushes the tail; Spark's availableNow does not,
-    so events inside the final watermark delay stay buffered (use the
-    in-order ``consecutive_pattern_stream`` for bounded replays).
-    """
-
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            last_is_match, last_id, last_ts, b_ts, b_id, b_match = state.get
-            buf = list(zip(b_ts or [], b_id or [], b_match or []))
-        else:
-            last_is_match, last_id, last_ts, buf = 0, None, None, []
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                ts_arr = (
-                    pd.to_datetime(pdf[ts_col]).astype("int64") // 1_000
-                ).to_numpy()
-                id_arr = pdf[id_col].to_numpy()
-                m_arr = (pdf[type_col] == match_type).to_numpy()
-                if wm_us > 0:
-                    keep = ts_arr > wm_us  # late past watermark: dropped
-                    ts_arr, id_arr, m_arr = ts_arr[keep], id_arr[keep], m_arr[keep]
-                buf.extend(
-                    zip(
-                        ts_arr.tolist(),
-                        (int(i) for i in id_arr),
-                        m_arr.astype("int64").tolist(),
-                    )
-                )
-        buf.sort()
-        released = [e for e in buf if e[0] <= wm_us]
-        remaining = [e for e in buf if e[0] > wm_us]
-        out = []
-        if released:
-            import numpy as np
-
-            rel = np.asarray(released, dtype="int64")
-            out = _consecutive_hits(
-                key[0], rel[:, 0], rel[:, 1], rel[:, 2],
-                last_is_match, last_id, last_ts, horizon_us,
-            )
-            last_ts, last_id, last_is_match = (
-                int(rel[-1, 0]), int(rel[-1, 1]), int(rel[-1, 2]),
-            )
-        state.update(
-            (
-                last_is_match,
-                last_id,
-                last_ts,
-                [e[0] for e in remaining],
-                [e[1] for e in remaining],
-                [e[2] for e in remaining],
-            )
-        )
-        if remaining:
-            # wake this key as soon as the watermark moves again
-            state.setTimeoutTimestamp(wm_us // 1000 + 1)
-        yield pd.DataFrame(
-            out, columns=["user_id", "first_error_id", "second_error_id"]
-        )
-
-    return events.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=BUFFERED_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+def _emit_decided(after, head: int, match, solutions, emit) -> int:
+    """Emit the DECIDED anchor at ``head`` (its first solution is
+    ``match``, the rest come from ``solutions``) under the after-match
+    strategy ``after`` and return the next anchor. NO_SKIP and SKIP TO
+    FIRST emit every solution; the other strategies emit the preferred
+    one. Shared by both drains."""
+    end, bindings = match
+    emit(bindings)
+    if _emits_all(after):
+        max_end = end
+        for e2, b2 in solutions:
+            emit(b2)
+            max_end = max(max_end, e2)
+        if after == "no_skip":
+            return head + 1  # NO_SKIP: anchors never consume
+        idxs = bindings.get(after[1]) or []
+        first_idx = min(idxs) if idxs else head
+        return first_idx if first_idx > head else max(max_end, head + 1)
+    if isinstance(after, tuple):  # skip_to_last
+        idxs = bindings.get(after[1]) or []
+        last_idx = max(idxs) if idxs else head
+        return last_idx if last_idx > head else max(end, head + 1)
+    if after == "skip_to_next":
+        return head + 1
+    return max(end, head + 1)  # past_last; zero-width guard
 
 
 def drain_in_order(
@@ -245,33 +191,26 @@ def drain_in_order(
     Pure python (no Spark): shared by the
     ``streaming_match_pattern`` applyInPandasWithState closure and
     the split-fuzz harness in ``tests/``, so thousands of random
-    micro-batch splits can be driven against the batch operators
+    micro-batch splits can be driven against the batch operator
     without a streaming query per split. ``eos=True`` finalizes every
     pending decision (the flush_ts / end-of-stream path)."""
-    from ..operators.cep import (
-        _anchor_dead_now,
-        _anchor_failure_is_final,
-        _iter_matches_from,
-        _match_from,
-        _match_future_sensitive,
-        _partial_bindings,
-    )
-
     within = pattern.within
     after = pattern.after_match
+    emit_every = _emits_all(after)
+    flag = False if timeout_measures is not None else None
     out_rows: list[dict] = []
     max_ts = recs[-1][ts_col] if recs else None
     n = len(recs)
     head = 0  # consumed prefix: an index bump, not an O(n) list slice
     frame = None  # materialized lazily ONCE per drain (recs is stable)
 
-    def emit(measure_fn, bindings, flag):
+    def emit(measure_fn, bindings, is_timeout):
         nonlocal frame
         if frame is None:
             frame = pd.DataFrame(recs)
         rec = measure_fn(frame, bindings)
-        if flag is not None:
-            rec["is_timeout"] = flag
+        if is_timeout is not None:
+            rec["is_timeout"] = is_timeout
         for k, v in zip(key_cols, key):
             rec.setdefault(k, v)
         out_rows.append(rec)
@@ -283,7 +222,8 @@ def drain_in_order(
         if _anchor_dead_now(pattern, recs, head):
             head += 1  # can never anchor: drop immediately
             continue
-        m = _match_from(None, head, pattern, ts_col, recs)
+        solutions = _iter_matches_from(None, head, pattern, ts_col, recs)
+        m = next(solutions, None)
         t0 = recs[head][ts_col]
         expired = eos or (
             max_ts is not None and (max_ts - t0) > within
@@ -299,33 +239,15 @@ def drain_in_order(
                 head += 1  # anchor dead for good
                 continue
             break  # pending: a future row may still complete it
-        end, bindings = m
-        if isinstance(after, tuple) and after[0] == "skip_to_first":
-            if not expired:
-                break  # more solutions may land inside the horizon
-            max_end = end
-            for e2, b2 in _iter_matches_from(
-                None, head, pattern, ts_col, recs
-            ):
-                emit(measures, b2, None)
-                max_end = max(max_end, e2)
-            idxs = bindings.get(after[1]) or []
-            first_idx = min(idxs) if idxs else head
-            head = first_idx if first_idx > head else max_end
-            continue
-        if not expired and _match_future_sensitive(
-            pattern, bindings, end, n
+        if not expired and (
+            emit_every or _match_future_sensitive(pattern, m[1], m[0], n)
         ):
-            break  # a future in-horizon row could change the match
-        emit(measures, bindings, False if timeout_measures is not None else None)
-        if isinstance(after, tuple):  # skip_to_last
-            idxs = bindings.get(after[1]) or []
-            last_idx = max(idxs) if idxs else head
-            head = last_idx if last_idx > head else end
-        elif after == "skip_to_next":
-            head += 1
-        else:
-            head = max(end, head + 1)  # past_last; zero-width guard
+            # a future in-horizon row could add a solution (emit-all
+            # strategies) or change the preferred match
+            break
+        head = _emit_decided(
+            after, head, m, solutions, lambda b: emit(measures, b, flag)
+        )
     return out_rows, recs[head:] if head else recs
 
 
@@ -356,16 +278,17 @@ def streaming_match_pattern(
     expires.
 
     Requires ``pattern.within`` (unbounded patterns would buffer
-    forever, exactly like Flink NFA state) and supports ALL after-match
-    strategies the batch engine does: ``skip_past_last_event``,
-    ``skip_to_next``, ``("skip_to_first", name)`` and
-    ``("skip_to_last", name)``. The skip_to_first anchor emits EVERY
-    solution at the pinned anchor (CEPDemo.scala:914 semantics), so it
-    is decided only once the anchor's WITHIN horizon has expired — any
-    earlier, a future in-horizon row could still add a solution; the
-    single-match strategies emit at earliest decidability as before.
-    Assumes micro-batches arrive in event-time order per key (file
-    replay / availableNow) — the same contract as
+    forever, exactly like Flink NFA state) and supports every
+    after-match strategy the batch operator does. ``no_skip`` (every
+    followedByAny branch, every allowCombinations subset; anchors
+    never consume) and ``skip_to_first`` (every solution at the pinned
+    anchor, CEPDemo.scala:914) emit an anchor's full solution set, so
+    they decide it only once its WITHIN horizon has expired: under the
+    in-order contract every row that could participate has arrived by
+    then, and horizons expire in buffer order, so decided anchors walk
+    off the front. The single-match strategies emit at earliest
+    decidability. Assumes micro-batches arrive in event-time order
+    per key (file replay / availableNow) — the same contract as
     ``streaming_match_recognize``. Iterative (row, ctx) conditions
     work unchanged (same NFA).
 
@@ -375,49 +298,25 @@ def streaming_match_pattern(
     ``flush_ts`` is the same hook ``lateness.py`` uses: rows with
     ``ts >= flush_ts`` act as end-of-stream markers for their key —
     they are NOT buffered as events, and their arrival finalizes every
-    pending decision (all skip_to_first anchor solutions emit, pending
+    pending decision (all emit-all anchor solutions emit, pending
     matches emit, dead anchors drop) regardless of the WITHIN horizon.
-    The watermarked twin plus a horizon-advancing row remains the
-    correct path for out-of-order input.
+    :func:`streaming_match_pattern_watermarked` plus a
+    horizon-advancing row remains the correct path for out-of-order
+    input.
 
-    ``timeout_measures`` enables the timeout side-output (streaming
-    twin of ``match_pattern_with_timeouts`` — Flink's
-    ``PatternFlatTimeoutFunction``, reference TimeoutMatchByCep.scala:
-    10-19 / OrderPay.scala:31-53): an anchor that BEGAN a partial but
-    whose horizon expires incomplete emits a ``timeout_measures`` row
-    with ``is_timeout=true``; matches emit with ``is_timeout=false``.
-    Same strategy surface as batch (skip_past_last_event /
-    skip_to_next). Rows that can never anchor (begin predicate
-    rejects) drop immediately instead of waiting out their horizon —
-    per-key state stays proportional to live partials, not to
-    ``within`` × event rate.
+    ``timeout_measures`` enables the timeout side-output, with the
+    batch operator's contract (Flink's ``PatternFlatTimeoutFunction``,
+    reference TimeoutMatchByCep.scala:10-19 / OrderPay.scala:31-53):
+    an anchor that BEGAN a partial but whose horizon expires
+    incomplete emits a ``timeout_measures`` row with
+    ``is_timeout=true``; matches emit with ``is_timeout=false``. Rows
+    that can never anchor (begin predicate rejects) drop immediately
+    instead of waiting out their horizon — per-key state stays
+    proportional to live partials, not to ``within`` × event rate.
     """
-    import pickle
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import BinaryType, StructField, StructType
-
-    from ..operators.cep import _schema_fields
-
-    if pattern.within is None:
-        raise ValueError("streaming_match_pattern requires pattern.within")
-    after = pattern.after_match
-    if timeout_measures is not None and isinstance(after, tuple):
-        raise ValueError(
-            "timeout side-output supports skip_past_last_event / "
-            "skip_to_next (the batch operator's surface)"
-        )
-    if not (
-        after in ("skip_past_last_event", "skip_to_next")
-        or (
-            isinstance(after, tuple)
-            and after[0] in ("skip_to_first", "skip_to_last")
-        )
-    ):
-        raise NotImplementedError(f"unknown after-match strategy {after!r}")
+    _check_contract(pattern, timeout_measures is not None, streaming=True)
     out_columns = [f.name for f in _schema_fields(output_schema)]
     order = order_cols or [ts_col]
-    state_schema = StructType([StructField("buf", BinaryType())])
 
     def fn(key: tuple, pdfs, state: GroupState):
         recs: list[dict] = pickle.loads(state.get[0]) if state.exists else []
@@ -438,130 +337,12 @@ def streaming_match_pattern(
             timeout_measures=timeout_measures, eos=eos,
         )
         state.update((pickle.dumps(recs),))
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=out_columns)
-        else:
-            yield pd.DataFrame(columns=out_columns)
+        yield pd.DataFrame(out_rows, columns=out_columns)
 
     return events.groupBy(*key_cols).applyInPandasWithState(
         fn,
         outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def drain_all_in_order(
-    recs: list[dict],
-    pattern,
-    ts_col: str,
-    key_cols: list[str],
-    key: tuple,
-    measures,
-    eos: bool = False,
-):
-    """NO_SKIP incremental decision step (see :func:`drain_in_order`):
-    every decided anchor emits its full solution set and never
-    consumes rows. Pure python — shared by the streaming closure and
-    the split-fuzz harness."""
-    from ..operators.cep import _anchor_dead_now, _iter_matches_from
-
-    within = pattern.within
-    out_rows: list[dict] = []
-    max_ts = recs[-1][ts_col] if recs else None
-    frame = None  # materialized once, only if something emits
-    start = 0
-    while start < len(recs):
-        if _anchor_dead_now(pattern, recs, start):
-            start += 1  # can never anchor: no need to wait it out
-            continue
-        t0 = recs[start][ts_col]
-        if not (eos or (max_ts - t0) > within):
-            break  # this anchor (and all later ones) still open
-        for _end, bindings in _iter_matches_from(
-            None, start, pattern, ts_col, recs
-        ):
-            if frame is None:
-                frame = pd.DataFrame(recs)
-            rec = measures(frame, bindings)
-            for k, v in zip(key_cols, key):
-                rec.setdefault(k, v)
-            out_rows.append(rec)
-        start += 1  # NO_SKIP: anchors never consume
-    return out_rows, recs[start:] if start else recs
-
-
-def streaming_match_pattern_all(
-    events: DataFrame,
-    pattern,
-    key_cols: list[str],
-    ts_col: str,
-    measures,
-    output_schema,
-    order_cols: list[str] | None = None,
-    flush_ts=None,
-):
-    """Streaming twin of ``operators.cep.match_pattern_all`` — Flink's
-    NO_SKIP default strategy over a live stream (reference
-    followedByAny golden ``CEPDemo.scala:674-704``): EVERY anchor
-    emits EVERY solution (all followedByAny branches, all
-    allowCombinations subsets, all non-greedy repeat counts), and
-    anchors never consume rows — the next anchor starts one row later
-    regardless of what matched.
-
-    Decidability: an anchor's full solution set is final exactly when
-    its WITHIN horizon has expired (every row that could participate
-    has arrived under the in-order contract) — the same rule the
-    ``skip_to_first`` pinned-anchor uses in
-    :func:`streaming_match_pattern`. Horizons expire in buffer order
-    (t0 is monotone), so the loop walks decided anchors off the front
-    and leaves the rest buffered. Requires ``pattern.within``;
-    ``flush_ts`` is the same end-of-stream hook (a marker row at/past
-    it finalizes every buffered anchor for its key). Assumes in-order
-    micro-batches per key (file replay / availableNow); use the
-    watermarked twin for out-of-order feeds.
-    """
-    import pickle
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import BinaryType, StructField, StructType
-
-    from ..operators.cep import _schema_fields
-
-    if pattern.within is None:
-        raise ValueError("streaming_match_pattern_all requires pattern.within")
-    out_columns = [f.name for f in _schema_fields(output_schema)]
-    order = order_cols or [ts_col]
-    state_schema = StructType([StructField("buf", BinaryType())])
-
-    def fn(key: tuple, pdfs, state: GroupState):
-        recs: list[dict] = pickle.loads(state.get[0]) if state.exists else []
-        new = [pdf for pdf in pdfs if len(pdf)]
-        eos = False
-        if new:
-            batch = pd.concat(new, ignore_index=True).sort_values(
-                order, kind="stable"
-            )
-            if flush_ts is not None:
-                marker = batch[ts_col] >= flush_ts
-                if marker.any():
-                    eos = True
-                    batch = batch[~marker]
-            recs.extend(batch.to_dict("records"))
-        out_rows, recs = drain_all_in_order(
-            recs, pattern, ts_col, key_cols, key, measures, eos=eos
-        )
-        state.update((pickle.dumps(recs),))
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=out_columns)
-        else:
-            yield pd.DataFrame(columns=out_columns)
-
-    return events.groupBy(*key_cols).applyInPandasWithState(
-        fn,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
+        stateStructType=BUFFER_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -583,12 +364,6 @@ def drain_watermarked(
     shared by ``streaming_match_pattern_watermarked`` and the
     out-of-order split-fuzz harness. ``recs`` must already be sorted
     and late-filtered by the caller."""
-    from ..operators.cep import (
-        _anchor_dead_now,
-        _iter_matches_from,
-        _match_from,
-    )
-
     within = pattern.within
     after = pattern.after_match
     out_rows: list[dict] = []
@@ -620,31 +395,12 @@ def drain_watermarked(
             continue
         if wm is None or pd.Timestamp(t0) + within > wm:
             break  # horizon still open: rows may yet arrive
-        m = _match_from(None, head, pattern, ts_col, recs)
+        solutions = _iter_matches_from(None, head, pattern, ts_col, recs)
+        m = next(solutions, None)
         if m is None:
             head += 1
             continue
-        end, bindings = m
-        if isinstance(after, tuple) and after[0] == "skip_to_first":
-            max_end = end
-            for e2, b2 in _iter_matches_from(
-                None, head, pattern, ts_col, recs
-            ):
-                emit(b2)
-                max_end = max(max_end, e2)
-            idxs = bindings.get(after[1]) or []
-            first_idx = min(idxs) if idxs else head
-            head = first_idx if first_idx > head else max_end
-            continue
-        emit(bindings)
-        if isinstance(after, tuple):  # skip_to_last
-            idxs = bindings.get(after[1]) or []
-            last_idx = max(idxs) if idxs else head
-            head = last_idx if last_idx > head else end
-        elif after == "skip_to_next":
-            head += 1
-        else:
-            head = max(end, head + 1)  # past_last; zero-width guard
+        head = _emit_decided(after, head, m, solutions, emit)
     return out_rows, recs[head:] if head else recs
 
 
@@ -668,41 +424,21 @@ def streaming_match_pattern_watermarked(
     dropped as late on intake (Flink CEP's late-event handling).
 
     Requires ``withWatermark`` upstream and ``pattern.within``.
-    Supports every batch after-match strategy (skip_past_last_event,
-    skip_to_next, skip_to_first, skip_to_last) — an anchor is decided
-    only once its horizon is behind the watermark, at which point all
-    its solutions are final, so the skip_to_first emit-all rule needs
-    no extra wait here. An event-time timer
-    re-fires each key when the watermark advances past its oldest
-    buffered anchor, so decisions land even when later batches bring
-    the key no rows. Bounded Flink jobs flush with a final +inf
-    watermark; availableNow does not — anchors inside the final
-    watermark delay stay pending (same documented delta as
-    ``buffered_consecutive_pattern_stream``).
+    Supports every after-match strategy of the batch operator,
+    ``no_skip`` included — an anchor is decided only once its horizon
+    is behind the watermark, at which point all its solutions are
+    final, so the emit-all strategies need no extra wait here. An
+    event-time timer re-fires each key when the watermark advances
+    past its oldest buffered anchor, so decisions land even when
+    later batches bring the key no rows. Bounded Flink jobs flush with
+    a final +inf watermark; availableNow does not, so anchors inside
+    the final watermark delay stay pending (use the in-order
+    :func:`streaming_match_pattern` with ``flush_ts`` for bounded
+    replays).
     """
-    import pickle
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import BinaryType, StructField, StructType
-
-    from ..operators.cep import _schema_fields
-
-    if pattern.within is None:
-        raise ValueError(
-            "streaming_match_pattern_watermarked requires pattern.within"
-        )
-    after = pattern.after_match
-    if not (
-        after in ("skip_past_last_event", "skip_to_next")
-        or (
-            isinstance(after, tuple)
-            and after[0] in ("skip_to_first", "skip_to_last")
-        )
-    ):
-        raise NotImplementedError(f"unknown after-match strategy {after!r}")
+    _check_contract(pattern, False, streaming=True)
     out_columns = [f.name for f in _schema_fields(output_schema)]
     order = order_cols or [ts_col]
-    state_schema = StructType([StructField("buf", BinaryType())])
     within = pattern.within
 
     def fn(key: tuple, pdfs, state: GroupState):
@@ -727,112 +463,12 @@ def streaming_match_pattern_watermarked(
                 (pd.Timestamp(recs[0][ts_col]) + within).value // 1_000_000
             )
             state.setTimeoutTimestamp(max(first_due, wm_ms + 1))
-        yield (
-            pd.DataFrame(out_rows, columns=out_columns)
-            if out_rows
-            else pd.DataFrame(columns=out_columns)
-        )
+        yield pd.DataFrame(out_rows, columns=out_columns)
 
     return events.groupBy(*key_cols).applyInPandasWithState(
         fn,
         outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def streaming_match_pattern_all_watermarked(
-    events: DataFrame,
-    pattern,
-    key_cols: list[str],
-    ts_col: str,
-    measures,
-    output_schema,
-    order_cols: list[str] | None = None,
-):
-    """Out-of-order NO_SKIP: :func:`streaming_match_pattern_all`
-    behind a watermark (the reference's followedByAny job runs on a
-    watermarked stream like every CEPDemo pattern). An anchor emits
-    its full solution set once its WITHIN horizon is entirely behind
-    the watermark and never consumes rows; rows at or below the
-    watermark are dropped late on intake; an event-time timer re-fires
-    keys whose oldest open horizon the watermark has passed. Requires
-    ``withWatermark`` upstream and ``pattern.within``."""
-    import pickle
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import BinaryType, StructField, StructType
-
-    from ..operators.cep import (
-        _anchor_dead_now,
-        _iter_matches_from,
-        _schema_fields,
-    )
-
-    if pattern.within is None:
-        raise ValueError(
-            "streaming_match_pattern_all_watermarked requires pattern.within"
-        )
-    out_columns = [f.name for f in _schema_fields(output_schema)]
-    order = order_cols or [ts_col]
-    state_schema = StructType([StructField("buf", BinaryType())])
-    within = pattern.within
-
-    def fn(key: tuple, pdfs, state: GroupState):
-        recs: list[dict] = pickle.loads(state.get[0]) if state.exists else []
-        wm_ms = state.getCurrentWatermarkMs()
-        wm = pd.Timestamp(wm_ms, unit="ms") if wm_ms > 0 else None
-        if not state.hasTimedOut:
-            new = [pdf for pdf in pdfs if len(pdf)]
-            if new:
-                batch = pd.concat(new, ignore_index=True)
-                if wm is not None:
-                    batch = batch[batch[ts_col] > wm]  # late: dropped
-                recs.extend(batch.to_dict("records"))
-        recs.sort(key=lambda r: tuple(r[c] for c in order))
-        out_rows: list[dict] = []
-        frame = None
-        start = 0
-        while start < len(recs):
-            t0 = recs[start][ts_col]
-            if (
-                wm is not None
-                and pd.Timestamp(t0) <= wm
-                and _anchor_dead_now(pattern, recs, start)
-            ):
-                start += 1  # behind the wm and can never anchor
-                continue
-            if wm is None or pd.Timestamp(t0) + within > wm:
-                break  # horizon still open: rows may yet arrive
-            for _end, bindings in _iter_matches_from(
-                None, start, pattern, ts_col, recs
-            ):
-                if frame is None:
-                    frame = pd.DataFrame(recs)
-                rec = measures(frame, bindings)
-                for k, v in zip(key_cols, key):
-                    rec.setdefault(k, v)
-                out_rows.append(rec)
-            start += 1  # NO_SKIP: anchors never consume
-        if start:
-            recs = recs[start:]
-        state.update((pickle.dumps(recs),))
-        if recs and wm_ms > 0:
-            first_due = int(
-                (pd.Timestamp(recs[0][ts_col]) + within).value // 1_000_000
-            )
-            state.setTimeoutTimestamp(max(first_due, wm_ms + 1))
-        yield (
-            pd.DataFrame(out_rows, columns=out_columns)
-            if out_rows
-            else pd.DataFrame(columns=out_columns)
-        )
-
-    return events.groupBy(*key_cols).applyInPandasWithState(
-        fn,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
+        stateStructType=BUFFER_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )

@@ -174,7 +174,13 @@ def run_available_now(
     (300 s, enough for every gate and bench scale). The sink's temp
     view is dropped on the way out, failed replays included: the
     returned frame holds the sink's rows, which go with it instead of
-    living as long as the session."""
+    living as long as the session.
+
+    The returned frame re-aliases every sink column. Spark cannot give
+    the sink's ``MemoryPlan`` leaf fresh attribute ids, so a join of
+    the bare sink table with a frame derived from it fails with
+    "Conflicting attributes"; an aliasing projection is something it
+    can re-instance, and the optimizer collapses it."""
     if timeout_sec is None:
         timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT_SEC", "300"))
     name = f"mem_{uuid.uuid4().hex[:12]}"
@@ -210,7 +216,8 @@ def run_available_now(
                 f"streaming query {name!r} did not finish within "
                 f"{timeout_sec}s; memory table would be truncated"
             )
-        return spark.table(name)
+        table = spark.table(name)
+        return table.toDF(*table.columns)
     finally:
         if q is not None and q.isActive:
             q.stop()

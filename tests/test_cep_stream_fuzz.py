@@ -1,13 +1,13 @@
 """Split-fuzz for the streaming NFA decision step.
 
-``drain_in_order`` / ``drain_all_in_order`` are the pure-python
+``drain_in_order`` / ``drain_watermarked`` are the pure-python
 incremental cores the applyInPandasWithState closures call, so the
 micro-batch split space can be fuzzed WITHOUT a streaming query per
 split: each pattern gets ONE Spark batch golden, then dozens of random
 splits replay through the drain functions (chunk -> drain -> final
 eos=True call, exactly the flush_ts path) and must reproduce it.
-Covers all four single-match skip strategies, the NO_SKIP twin, and
-the timeout side-output.
+Covers all five after-match strategies (NO_SKIP included) and the
+timeout side-output.
 """
 
 from __future__ import annotations
@@ -16,11 +16,11 @@ import datetime as dt
 import random
 from collections import Counter
 
+import pandas as pd
 import pytest
 
 from flink_demo_spark.operators import cep
 from flink_demo_spark.streaming.cep_stream import (
-    drain_all_in_order,
     drain_in_order,
     drain_watermarked,
 )
@@ -135,6 +135,17 @@ def _patterns():
     }
 
 
+def _no_skip():
+    """NO_SKIP over a followedByAny branch: every anchor emits every
+    in-horizon branch."""
+    return (
+        cep.Pattern.begin("x", lambda r: r["event_type"] == "a")
+        .followed_by_any("y", lambda r: r["event_type"] == "b")
+        .within_time("5s")
+        .no_skip()
+    )
+
+
 def _drive(rows_sorted, pattern_fn, drain, n_splits, rng, **drain_kw):
     """Replay random splits through the pure drain core; return the
     list of per-split output multisets."""
@@ -216,10 +227,10 @@ def test_drain_in_order_timeout_split_fuzz_equals_batch(spark, pname):
 
     golden = Counter(
         tuple(sorted(r.asDict().items()))
-        for r in cep.match_pattern_with_timeouts(
+        for r in cep.match_pattern(
             spark.createDataFrame(rows, SCHEMA), pattern_fn(),
-            ["k"], "ts", _measures, timed_out, OUT_TO,
-            order_cols=["ts", "event_id"],
+            ["k"], "ts", _measures, OUT_TO,
+            order_cols=["ts", "event_id"], timeout_measures=timed_out,
         ).collect()
     )
     for i, got in enumerate(
@@ -232,31 +243,25 @@ def test_drain_in_order_timeout_split_fuzz_equals_batch(spark, pname):
 
 
 def test_drain_all_in_order_split_fuzz_equals_batch(spark):
+    """NO_SKIP: ``drain_in_order`` over a ``no_skip()`` pattern emits
+    every solution of every anchor, the batch ``match_pattern`` set."""
     rng = random.Random(4242)
     rows = _gen_rows(rng)
     rows_sorted = sorted(rows, key=lambda r: (r[2], r[3]))
-
-    def pattern_fn():
-        return (
-            cep.Pattern.begin("x", lambda r: r["event_type"] == "a")
-            .followed_by_any("y", lambda r: r["event_type"] == "b")
-            .within_time("5s")
-        )
-
     golden = Counter(
         tuple(sorted(r.asDict().items()))
-        for r in cep.match_pattern_all(
-            spark.createDataFrame(rows, SCHEMA), pattern_fn(),
+        for r in cep.match_pattern(
+            spark.createDataFrame(rows, SCHEMA), _no_skip(),
             ["k"], "ts", _measures, OUT_ONE, order_cols=["ts", "event_id"],
         ).collect()
     )
     for i, got in enumerate(
-        _drive(rows_sorted, pattern_fn, drain_all_in_order, 25, rng)
+        _drive(rows_sorted, _no_skip, drain_in_order, 25, rng)
     ):
         assert got == golden, (i, got, golden)
 
 
-@pytest.mark.parametrize("pname", sorted(_patterns()))
+@pytest.mark.parametrize("pname", [*sorted(_patterns()), "no_skip"])
 def test_drain_watermarked_out_of_order_fuzz(pname):
     """Out-of-order fuzz for the watermark-driven drain, no Spark at
     all: shuffle the rows into random micro-batches, simulate the
@@ -285,7 +290,7 @@ def test_drain_watermarked_out_of_order_fuzz(pname):
             prev = c
         delay = dt.timedelta(seconds=rng.randrange(2, 6))
 
-        pattern_fn = _patterns()[pname]
+        pattern_fn = {**_patterns(), "no_skip": _no_skip}[pname]
         state: dict[int, list] = {}
         survivors: dict[int, list] = {}
         out: list[dict] = []
@@ -504,9 +509,10 @@ def test_timeout_partial_never_binds_beyond_horizon(spark):
 
     got = {
         (r.a_id, r.b_last, r.is_timeout)
-        for r in cep.match_pattern_with_timeouts(
+        for r in cep.match_pattern(
             spark.createDataFrame(rows, SCHEMA), p, ["k"], "ts",
-            spans, spans, OUT_TO, order_cols=["ts", "event_id"],
+            spans, OUT_TO, order_cols=["ts", "event_id"],
+            timeout_measures=spans,
         ).collect()
     }
     # every anchor times out (no c lands inside any anchor's horizon
@@ -543,3 +549,56 @@ def test_timeout_partial_never_binds_beyond_horizon(spark):
     split_out.extend(emitted)
     canon = lambda rs: Counter(tuple(sorted(r.items())) for r in rs)
     assert canon(split_out) == canon(single)
+
+
+@pytest.mark.parametrize(
+    "strategy",
+    ["skip_past_last_event", "skip_to_next", "no_skip", "skip_to_first",
+     "skip_to_last"],
+)
+def test_zero_width_match_advances_every_walk(spark, strategy):
+    """A pattern that can match zero rows (its only step optional)
+    matches at every anchor, the empty match ending AT the anchor. Each
+    walk must still move past that anchor under every strategy, and the
+    batch operator and both drains emit the same rows."""
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (1, e, t0 + dt.timedelta(seconds=i), i)
+        for i, e in enumerate(["a", "b", "a", "b"])
+    ]
+    recs = [
+        {"k": k, "event_type": e, "ts": ts, "event_id": i}
+        for k, e, ts, i in rows
+    ]
+
+    def pattern():
+        p = cep.Pattern.begin("x", lambda r: r["event_type"] == "a")
+        p = p.optional().within_time("5s")
+        if strategy == "skip_past_last_event":
+            return p
+        if strategy in ("skip_to_first", "skip_to_last"):
+            return getattr(p, strategy)("x")
+        return getattr(p, strategy)()
+
+    def bound(rows_df, b):
+        idxs = [i for v in b.values() for i in v]
+        first = int(rows_df.iloc[idxs[0]]["event_id"]) if idxs else -1
+        return {"a_id": first, "b_last": len(idxs)}
+
+    canon = lambda rs: Counter(tuple(sorted(r.items())) for r in rs)
+    golden = canon(
+        r.asDict()
+        for r in cep.match_pattern(
+            spark.createDataFrame(rows, SCHEMA), pattern(), ["k"], "ts",
+            bound, OUT_ONE, order_cols=["ts", "event_id"],
+        ).collect()
+    )
+    in_order, _ = drain_in_order(
+        recs, pattern(), "ts", ["k"], (1,), bound, eos=True
+    )
+    wm = pd.Timestamp(t0 + dt.timedelta(hours=1))
+    watermarked, _ = drain_watermarked(
+        recs, pattern(), "ts", ["k"], (1,), bound, wm
+    )
+    assert golden == canon(in_order) == canon(watermarked)
+    assert golden[(("a_id", 0), ("b_last", 1), ("k", 1))] == 1

@@ -71,8 +71,9 @@ def test_sample_order_rotates_away_from_green_rows():
 def test_pandas_stage_runs_outside_repo_root(tmp_path):
     """A driver started in another directory, with the package on its
     sys.path only (no PYTHONPATH), runs a pandas stage whose Python
-    workers import the package: get_spark puts the package's parent
-    dir on the workers' path."""
+    workers import the package: get_spark, through
+    apply_runtime_confs, puts the package's parent dir on the workers'
+    path."""
     script = f"""
 import sys
 sys.path.insert(0, {HERE!r})
@@ -99,3 +100,29 @@ spark.stop()
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "ROWS [Row(k=7)]" in out.stdout
+
+
+def test_plain_session_runs_pandas_stage_outside_repo_root(tmp_path):
+    """The driver contract from another directory: ``tools/driver_sim.py``
+    builds a plain session (no engine confs, no PYTHONPATH) and runs a
+    CEP query, a pandas stage whose workers import the package. The
+    table loader's ``apply_runtime_confs`` puts the package root on the
+    workers' path, so the query matches its oracle."""
+    from .conftest import SF_DIR
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["DRIVER_SIM_SF_DIR"] = SF_DIR
+    out = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(HERE, "tools", "driver_sim.py"),
+            "cep_skip_to_last_pairs",
+        ],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stdout[-2000:] + out.stderr[-2000:]
+    assert "cep_skip_to_last_pairs:" in out.stdout and "MATCH" in out.stdout

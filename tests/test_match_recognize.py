@@ -658,20 +658,13 @@ def test_streaming_equals_batch_on_random_splits(spark):
 
 
 @pytest.mark.parametrize("provider", ["hdfs", "rocksdb"])
-def test_streaming_restore_from_v1_state_payload(spark, provider):
-    """Round-8: a checkpoint whose keyed state holds the ORIGINAL bare
-    row-list payload (v1 engines persisted only the pickled buffer —
-    no MATCH_NUMBER counter) must restore: a partial A+ run buffered
-    before the stop completes after the restart under the current
-    engine, and final output equals the batch result on all rows.
-
-    Phase 1 runs the writer in its v1-downgrade mode
-    (state_payload_version=1) to produce a byte-genuine v1 checkpoint;
-    phase 2 resumes the SAME checkpoint with the default (tagged v2)
-    engine. Parametrized over the state-store provider (round-8
-    verdict #6): the cross-version payload restore must also hold on a
-    RocksDB-backed checkpoint (snapshot/changelog files, columnar
-    encoding)."""
+def test_streaming_restore_from_v2_state_payload(spark, provider):
+    """A checkpointed restart restores the tagged ``mr2`` payload: a
+    partial A+ run buffered before the stop completes after the
+    restart, and final output equals the batch result on all rows.
+    Parametrized over the state-store provider: the payload restore
+    must also hold on a RocksDB-backed checkpoint (snapshot/changelog
+    files, columnar encoding)."""
     import tempfile
 
     from .conftest import state_store_provider
@@ -692,22 +685,20 @@ def test_streaming_restore_from_v1_state_payload(spark, provider):
         for r in match_recognize(spark.createDataFrame(rows, schema), sql).collect()
     )
 
-    src = tempfile.mkdtemp(prefix="mr_v1_src_")
-    ckpt = tempfile.mkdtemp(prefix="mr_v1_ckpt_")
-    out_dir = tempfile.mkdtemp(prefix="mr_v1_out_") + "/data"
+    src = tempfile.mkdtemp(prefix="mr_v2_src_")
+    ckpt = tempfile.mkdtemp(prefix="mr_v2_ckpt_")
+    out_dir = tempfile.mkdtemp(prefix="mr_v2_out_") + "/data"
 
     def write_batch(batch_rows, name):
         spark.createDataFrame(batch_rows, schema).coalesce(1).write.mode(
             "overwrite"
         ).parquet(f"{src}/{name}")
 
-    def run_once(version):
+    def run_once():
         with state_store_provider(spark, provider):
             stream = spark.readStream.schema(schema).parquet(f"{src}/*")
             q = (
-                streaming_match_recognize(
-                    stream, sql, state_payload_version=version
-                )
+                streaming_match_recognize(stream, sql)
                 .writeStream.format("parquet")
                 .option("path", out_dir)
                 .option("checkpointLocation", ckpt)
@@ -718,71 +709,7 @@ def test_streaming_restore_from_v1_state_payload(spark, provider):
             assert q.awaitTermination(180)
 
     # split mid-A-run: the first match is undecided at the stop, so the
-    # restored v1 buffer must carry it across the restart
-    write_batch(rows[:3], "b1")
-    run_once(version=1)
-    write_batch(rows[3:], "b2")
-    run_once(version=2)  # default engine restores the bare-list payload
-
-    got = sorted(
-        (r.SUM_PRICE, r.START_TIME, r.LAST_TIME)
-        for r in spark.read.parquet(out_dir).collect()
-    )
-    assert got == expected
-
-
-def test_streaming_restore_from_r7_two_field_layout(spark):
-    """Round-9 (round-8 verdict #2): a checkpoint written in the
-    short-lived round-7 TWO-FIELD state layout ``(buf, match_no)``
-    must restore losslessly via ``state_layout="r7"`` — Spark's
-    state-schema check rejects a field-list change, so the restore
-    path declares the matching struct and reads it positionally.
-    Phase 1 writes a byte-genuine r7 checkpoint (bare-list payload +
-    counter field); phase 2 resumes the SAME checkpoint, carrying an
-    undecided partial match and MATCH_NUMBER continuity across the
-    restart; final output equals batch on all rows."""
-    import tempfile
-
-    from flink_demo_spark.operators.match_recognize import (
-        match_recognize,
-        streaming_match_recognize,
-    )
-
-    sql = _sum_budget_sql("SKIP PAST LAST ROW")
-    schema = "symbol string, ctime timestamp, price bigint, tax bigint, rid bigint"
-    rows = [
-        (sym, _t(ts), price, tax, i)
-        for i, (sym, ts, price, tax) in enumerate(XYZ)
-    ]
-    expected = sorted(
-        (r.SUM_PRICE, r.START_TIME, r.LAST_TIME)
-        for r in match_recognize(spark.createDataFrame(rows, schema), sql).collect()
-    )
-
-    src = tempfile.mkdtemp(prefix="mr_r7_src_")
-    ckpt = tempfile.mkdtemp(prefix="mr_r7_ckpt_")
-    out_dir = tempfile.mkdtemp(prefix="mr_r7_out_") + "/data"
-
-    def write_batch(batch_rows, name):
-        spark.createDataFrame(batch_rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/{name}")
-
-    def run_once():
-        stream = spark.readStream.schema(schema).parquet(f"{src}/*")
-        q = (
-            streaming_match_recognize(stream, sql, state_layout="r7")
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(180)
-
-    # split mid-A-run: the first match is undecided at the stop, so the
-    # restored r7 buffer must carry it across the restart
+    # restored buffer must carry it across the restart
     write_batch(rows[:3], "b1")
     run_once()
     write_batch(rows[3:], "b2")
@@ -793,21 +720,6 @@ def test_streaming_restore_from_r7_two_field_layout(spark):
         for r in spark.read.parquet(out_dir).collect()
     )
     assert got == expected
-
-
-def test_streaming_match_recognize_rejects_unknown_layout(spark):
-    import pytest as _pytest
-
-    from flink_demo_spark.operators.match_recognize import (
-        streaming_match_recognize,
-    )
-
-    schema = "symbol string, ctime timestamp, price bigint, tax bigint, rid bigint"
-    stream = spark.readStream.schema(schema).parquet("/nonexistent/*")
-    with _pytest.raises(ValueError, match="state_layout"):
-        streaming_match_recognize(
-            stream, _sum_budget_sql("SKIP PAST LAST ROW"), state_layout="v3"
-        )
 
 
 def test_streaming_match_number_continuity_rides_v2_payload(spark):
@@ -869,8 +781,7 @@ def test_streaming_match_number_continuity_rides_v2_payload(spark):
 def test_match_recognize_state_summary_introspection(spark):
     """match_recognize_state_summary reads the checkpointed keyed
     state: buffered_rows counts the undecided tail held in state and
-    match_no the emitted matches; v1-payload checkpoints read with
-    match_no=0."""
+    match_no the emitted matches."""
     import tempfile
 
     from flink_demo_spark.operators.match_recognize import (

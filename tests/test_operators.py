@@ -894,8 +894,8 @@ def test_cep_followed_by_any_reference_golden(spark):
             "third_ts": rows_df.iloc[b["third"][0]]["ts"],
         }
 
-    out = cep.match_pattern_all(
-        df, pat, ["k"], "ts", measures,
+    out = cep.match_pattern(
+        df, pat.no_skip(), ["k"], "ts", measures,
         "k long, first_ts timestamp, third_ts timestamp",
     ).collect()
     got = sorted((r.first_ts.second, r.third_ts.second) for r in out)
@@ -922,8 +922,8 @@ def test_cep_allow_combinations_reference_golden(spark):
             "t2": rows_df.iloc[b["first"][1]]["ts"],
         }
 
-    out = cep.match_pattern_all(
-        df, pat, ["k"], "ts", measures, "k long, t1 timestamp, t2 timestamp"
+    out = cep.match_pattern(
+        df, pat.no_skip(), ["k"], "ts", measures, "k long, t1 timestamp, t2 timestamp"
     ).collect()
     got = sorted((r.t1.second, r.t2.second) for r in out)
     assert got == [(32, 34), (32, 36), (34, 36)]
@@ -953,8 +953,8 @@ def test_cep_pattern_group_reference_golden(spark):
             "sec": rows_df.iloc[b["second"][0]]["ts"],
         }
 
-    out = cep.match_pattern_all(
-        df, pat, ["k"], "ts", measures,
+    out = cep.match_pattern(
+        df, pat.no_skip(), ["k"], "ts", measures,
         "k long, s1 timestamp, s2 timestamp, sec timestamp",
     ).collect()
     got = sorted((r.s1.second, r.s2.second, r.sec.second) for r in out)
@@ -985,9 +985,10 @@ def test_cep_timeout_side_output(spark):
         assert b.get("begin"), "timeout must carry the partial begin event"
         return {"status": "timeout"}
 
-    out = cep.match_pattern_with_timeouts(
-        df, pat, ["order_id"], "ts", ok, timed_out,
+    out = cep.match_pattern(
+        df, pat, ["order_id"], "ts", ok,
         "order_id long, status string, is_timeout boolean",
+        timeout_measures=timed_out,
     ).collect()
     got = {(r.order_id, r.status, r.is_timeout) for r in out}
     assert got == {(1, "success", False), (2, "timeout", True)}
@@ -1010,8 +1011,8 @@ def test_cep_times_range_and_times_or_more(spark):
     def measures(rows_df, b):
         return {"n_first": len(b["first"]), "t1": rows_df.iloc[b["first"][0]]["ts"]}
 
-    out = cep.match_pattern_all(
-        df, pat, ["k"], "ts", measures, "k long, n_first long, t1 timestamp"
+    out = cep.match_pattern(
+        df, pat.no_skip(), ["k"], "ts", measures, "k long, n_first long, t1 timestamp"
     ).collect()
     got = sorted((r.t1.second, r.n_first) for r in out)
     # anchor@92: counts 1 and 2; anchor@93: count 1
@@ -1085,8 +1086,8 @@ def test_cep_group_optional_inner_step(spark):
             "nb": len(b.get("b", [])),
         }
 
-    out = cep.match_pattern_all(
-        df, pat, ["k"], "ts", measures, "k long, a1 timestamp, a2 timestamp, nb long"
+    out = cep.match_pattern(
+        df, pat.no_skip(), ["k"], "ts", measures, "k long, a1 timestamp, a2 timestamp, nb long"
     ).collect()
     got = sorted((r.a1.second, r.a2.second, r.nb) for r in out)
     assert got == [(32, 34, 0), (32, 34, 1)]
@@ -1114,8 +1115,8 @@ def test_cep_group_not_next_inner_step(spark):
             "b_ts": rows_df.iloc[b["b"][0]]["ts"],
         }
 
-    out = cep.match_pattern_all(
-        df, pat, ["k"], "ts", measures, "k long, a_ts timestamp, b_ts timestamp"
+    out = cep.match_pattern(
+        df, pat.no_skip(), ["k"], "ts", measures, "k long, a_ts timestamp, b_ts timestamp"
     ).collect()
     assert sorted((r.a_ts.second, r.b_ts.second) for r in out) == [(32, 33)]
 
@@ -1142,8 +1143,8 @@ def test_cep_group_not_followed_by_inner_step(spark):
             "b_ts": rows_df.iloc[b["b"][0]]["ts"],
         }
 
-    out = cep.match_pattern_all(
-        df, pat, ["k"], "ts", measures, "k long, a_ts timestamp, b_ts timestamp"
+    out = cep.match_pattern(
+        df, pat.no_skip(), ["k"], "ts", measures, "k long, a_ts timestamp, b_ts timestamp"
     ).collect()
     assert sorted((r.a_ts.second, r.b_ts.second) for r in out) == [(32, 33)]
 
@@ -1195,8 +1196,8 @@ def test_cep_group_trailing_not_followed_by_rejected(spark):
         return {"a_ts": rows_df.iloc[b["a"][0]]["ts"]}
 
     with pytest.raises(Exception, match="notFollowedBy"):
-        cep.match_pattern_all(
-            df, pat, ["k"], "ts", measures, "k long, a_ts timestamp"
+        cep.match_pattern(
+            df, pat.no_skip(), ["k"], "ts", measures, "k long, a_ts timestamp"
         ).collect()
 
 
@@ -1268,8 +1269,8 @@ def test_cep_iterative_condition_reference_golden(spark):
     def measures(rows_df, bindings):
         return {"ts": rows_df.iloc[bindings["first"][0]]["ts"]}
 
-    out = cep.match_pattern_all(
-        df, pat, ["k"], "ts", measures, "k long, ts timestamp"
+    out = cep.match_pattern(
+        df, pat.no_skip(), ["k"], "ts", measures, "k long, ts timestamp"
     ).collect()
     got = sorted(int(r.ts.timestamp() * 1000) for r in out)
     assert got == [1607527992000, 1607527994000, 1607527996000]

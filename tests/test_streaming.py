@@ -258,7 +258,7 @@ def test_streaming_cep_state_survives_checkpoint_restart(spark, provider):
     """The NFA's pickled keyed state must survive a checkpointed
     restart: a partial match begun before the stop completes after the
     restart, and a timeout decided only by post-restart rows emits —
-    final output equals batch match_pattern_with_timeouts.
+    final output equals batch match_pattern with timeout_measures.
 
     Parametrized over the state-store provider (round-8 brief #7): the
     pandas-state schema contract must hold under RocksDB exactly as
@@ -1030,6 +1030,26 @@ def test_runner_restores_partitions_on_start_failure(spark, sf_dir, replay_spy):
     assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
 
 
+def test_replay_result_joins_a_frame_derived_from_it(spark, sf_dir):
+    """A returned frame joins with a frame derived from itself (the
+    batch twins' ``df.join(df.groupBy(k).agg(...), k)`` shape): Spark
+    can re-instance what the runner returns, so the join resolves and
+    counts every window's rows against the window's total."""
+    counts = run_available_now(
+        events_stream(spark, sf_dir, watermark="10 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("o")),
+        output_mode="complete",
+    )
+    totals = counts.groupBy("w").agg(F.sum("o").alias("n"))
+    joined = counts.join(totals, "w").collect()
+    assert len(joined) == counts.count() > 0
+    per_w = {}
+    for r in joined:
+        per_w.setdefault(r.w, [0, r.n])[0] += r.o
+    assert all(o == n for o, n in per_w.values())
+
+
 def test_tiny_replay_runs_in_one_wave(spark, sf_dir, replay_spy):
     """A replay far below the 8 MiB divisor starts with the one-wave
     floor, min(8, defaultParallelism), not a fixed 8: on a host with
@@ -1244,13 +1264,38 @@ def test_evicting_session_multi_trigger_matches_single_batch(spark, sf_dir):
     assert single and sessions(3) == single
 
 
+def _error_pairs_watermarked(stream):
+    """The login-fail pair (two consecutive errors within 30 minutes)
+    through the watermark-sorted general operator."""
+    from flink_demo_spark.operators import cep
+    from flink_demo_spark.streaming.cep_stream import (
+        streaming_match_pattern_watermarked,
+    )
+
+    pat = (
+        cep.Pattern.begin("e1", lambda r: r["event_type"] == "error")
+        .next("e2", lambda r: r["event_type"] == "error")
+        .skip_to_next()
+        .within_time("30min")
+    )
+
+    def ids(rows_df, b):
+        return {
+            "first_error_id": int(rows_df.iloc[b["e1"][0]]["event_id"]),
+            "second_error_id": int(rows_df.iloc[b["e2"][0]]["event_id"]),
+        }
+
+    return streaming_match_pattern_watermarked(
+        stream, pat, ["user_id"], "ts", ids,
+        "user_id long, first_error_id long, second_error_id long",
+        order_cols=["ts", "event_id"],
+    )
+
+
 def test_buffered_cep_handles_out_of_order_batches(spark):
     """Flink CEP's watermark-sorted buffer: an earlier event arriving
     in a LATER micro-batch is re-ordered before the NFA consumes it.
     The unbuffered detector would see (e2, e1) and miss the pair."""
-    from flink_demo_spark.streaming.cep_stream import (
-        buffered_consecutive_pattern_stream,
-    )
 
     t0 = dt.datetime(2024, 1, 1)
     batch1 = [(1, 2, "error", t0 + dt.timedelta(seconds=10))]  # arrives first
@@ -1262,7 +1307,7 @@ def test_buffered_cep_handles_out_of_order_batches(spark):
         "user_id long, event_id long, event_type string, ts timestamp",
     ).withWatermark("ts", "1 hour")
     out = run_available_now(
-        buffered_consecutive_pattern_stream(stream), output_mode="append"
+        _error_pairs_watermarked(stream), output_mode="append"
     )
     got = {(r.user_id, r.first_error_id, r.second_error_id) for r in out.collect()}
     assert got == {(1, 1, 2)}, (
@@ -1273,9 +1318,6 @@ def test_buffered_cep_handles_out_of_order_batches(spark):
 def test_buffered_cep_drops_late_events(spark):
     """An event at or below the watermark on arrival is dropped (Flink
     CEP late-event handling): no pair forms with a too-late event."""
-    from flink_demo_spark.streaming.cep_stream import (
-        buffered_consecutive_pattern_stream,
-    )
 
     t0 = dt.datetime(2024, 1, 1)
     batch1 = [(1, 2, "error", t0 + dt.timedelta(hours=2))]  # pushes wm to t0+1h
@@ -1287,7 +1329,7 @@ def test_buffered_cep_drops_late_events(spark):
         "user_id long, event_id long, event_type string, ts timestamp",
     ).withWatermark("ts", "1 hour")
     out = run_available_now(
-        buffered_consecutive_pattern_stream(stream), output_mode="append"
+        _error_pairs_watermarked(stream), output_mode="append"
     )
     assert out.count() == 0
 
@@ -1931,13 +1973,13 @@ def test_streaming_match_pattern_all_no_skip_equals_batch(spark):
     every anchor, every branch) through BOTH streaming twins: the
     in-order twin on random micro-batch splits (flush marker drains
     the tail) and the watermarked twin on OUT-OF-ORDER splits, each
-    equal to batch match_pattern_all."""
+    equal to batch match_pattern under no_skip()."""
     import random
 
     from flink_demo_spark.operators import cep
     from flink_demo_spark.streaming.cep_stream import (
-        streaming_match_pattern_all,
-        streaming_match_pattern_all_watermarked,
+        streaming_match_pattern,
+        streaming_match_pattern_watermarked,
     )
 
     t0 = dt.datetime(1970, 1, 2)
@@ -1956,6 +1998,7 @@ def test_streaming_match_pattern_all_no_skip_equals_batch(spark):
         cep.Pattern.begin("s", lambda r: r["id"] == "sensor_1")
         .followed_by_any("p", lambda r: r["id"] == "sensor_2")
         .within_time("30s")
+        .no_skip()
     )
 
     def measures(rows_df, b):
@@ -1967,7 +2010,7 @@ def test_streaming_match_pattern_all_no_skip_equals_batch(spark):
     out_schema = "k long, s_id long, p_id long"
     golden = {
         (r.s_id, r.p_id)
-        for r in cep.match_pattern_all(
+        for r in cep.match_pattern(
             spark.createDataFrame(rows, schema), pat, ["k"], "ts",
             measures, out_schema, order_cols=["ts", "event_id"],
         ).collect()
@@ -1991,7 +2034,7 @@ def test_streaming_match_pattern_all_no_skip_equals_batch(spark):
     got = {
         (r.s_id, r.p_id)
         for r in run_available_now(
-            streaming_match_pattern_all(
+            streaming_match_pattern(
                 _mem_stream_batches(spark, batches, schema),
                 pat, ["k"], "ts", measures, out_schema,
                 order_cols=["ts", "event_id"], flush_ts=flush_at,
@@ -2020,7 +2063,7 @@ def test_streaming_match_pattern_all_no_skip_equals_batch(spark):
     got_wm = {
         (r.s_id, r.p_id)
         for r in run_available_now(
-            streaming_match_pattern_all_watermarked(
+            streaming_match_pattern_watermarked(
                 stream, pat, ["k"], "ts", measures, out_schema,
                 order_cols=["ts", "event_id"],
             ),
@@ -2030,10 +2073,62 @@ def test_streaming_match_pattern_all_no_skip_equals_batch(spark):
     assert got_wm == golden, got_wm
 
 
+def test_cep_timeout_contract_is_one_loud_error(spark, tmp_path):
+    """The timeout side-output runs only under skip-past-last and
+    skip_to_next: every other strategy, NO_SKIP included, raises the
+    same ValueError from the batch and the streaming operator instead
+    of running a different strategy."""
+    from flink_demo_spark.operators import cep
+    from flink_demo_spark.streaming.cep_stream import streaming_match_pattern
+
+    schema = "k long, event_type string, ts timestamp, event_id long"
+    df = spark.createDataFrame([], schema)
+    stream = spark.readStream.schema(df.schema).parquet(str(tmp_path))
+    out_schema = "k long, a long, is_timeout boolean"
+
+    def pattern():
+        return (
+            cep.Pattern.begin("x", lambda r: r["event_type"] == "a")
+            .followed_by("y", lambda r: r["event_type"] == "b")
+            .within_time("5s")
+        )
+
+    def first(rows_df, b):
+        return {"a": int(rows_df.iloc[b["x"][0]]["event_id"])}
+
+    for strategy in (
+        lambda p: p.no_skip(),
+        lambda p: p.skip_to_first("x"),
+        lambda p: p.skip_to_last("x"),
+    ):
+        messages = []
+        for run in (
+            lambda p: cep.match_pattern(
+                df, p, ["k"], "ts", first, out_schema, timeout_measures=first
+            ),
+            lambda p: streaming_match_pattern(
+                stream, p, ["k"], "ts", first, out_schema,
+                timeout_measures=first,
+            ),
+        ):
+            with pytest.raises(ValueError, match="timeout side-output") as e:
+                run(strategy(pattern()))
+            messages.append(str(e.value))
+        assert messages[0] == messages[1]
+    # the two timeout strategies plan on both operators
+    for p in (pattern(), pattern().skip_to_next()):
+        cep.match_pattern(
+            df, p, ["k"], "ts", first, out_schema, timeout_measures=first
+        )
+        streaming_match_pattern(
+            stream, p, ["k"], "ts", first, out_schema, timeout_measures=first
+        )
+
+
 def test_streaming_match_pattern_timeout_side_output_equals_batch(spark):
     """The timeout side-output (Flink PatternFlatTimeoutFunction,
     OrderPay.scala) through the streaming twin on random micro-batch
-    splits equals batch match_pattern_with_timeouts: completed
+    splits equals batch match_pattern with timeout_measures: completed
     signup->purchase pairs emit is_timeout=false, expired partials
     emit the anchoring signup with is_timeout=true."""
     import random
@@ -2072,9 +2167,10 @@ def test_streaming_match_pattern_timeout_side_output_equals_batch(spark):
     out_schema = "k long, anchor_id long, status string, is_timeout boolean"
     golden = {
         (r.k, r.anchor_id, r.status, r.is_timeout)
-        for r in cep.match_pattern_with_timeouts(
+        for r in cep.match_pattern(
             spark.createDataFrame(rows, schema), pat, ["k"], "ts",
-            ok, timed_out, out_schema, order_cols=["ts", "event_id"],
+            ok, out_schema, order_cols=["ts", "event_id"],
+            timeout_measures=timed_out,
         ).collect()
     }
     assert golden == {

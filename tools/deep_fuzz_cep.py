@@ -5,10 +5,13 @@ The committed suite (tests/test_cep_stream_fuzz.py) pins each pattern
 against a SPARK batch golden on one dataset + 25 splits. This tool
 scales the SPLIT-INVARIANCE axis orders of magnitude further without a
 JVM: for thousands of random (dataset, split-sequence) pairs, replaying
-the stream in arbitrary micro-batch chunks through
-``drain_in_order`` / ``drain_all_in_order`` must produce exactly the
+the stream in arbitrary micro-batch chunks through ``drain_in_order``
+(each pattern under its own after-match strategy, with the timeout
+side-output, and under ``no_skip()``) must produce exactly the
 single-shot ``eos=True`` drain over the complete input (whose own
-batch-equality is what the Spark-backed suite pins).
+batch-equality is what the Spark-backed suite pins). ``--surface wm``
+checks ``drain_watermarked`` on out-of-order splits the same way, each
+pattern also under ``no_skip()``.
 
     python tools/deep_fuzz_cep.py --trials 100 --splits 8 [--seed 7]
 
@@ -31,10 +34,7 @@ sys.path.insert(0, os.path.join(
 
 from test_cep_stream_fuzz import _gen_rows, _measures, _patterns  # noqa: E402
 
-from flink_demo_spark.streaming.cep_stream import (  # noqa: E402
-    drain_all_in_order,
-    drain_in_order,
-)
+from flink_demo_spark.streaming.cep_stream import drain_in_order  # noqa: E402
 
 
 def _timed_out(rows_df, b):
@@ -58,8 +58,17 @@ def _gen_rows_ties(rng, n_keys=4, lo=8, hi=14):
     return rows
 
 
-def _run(rows_sorted, pattern_fn, drain, chunks, **kw):
-    """Replay rows through drain in the given chunking; final eos flush."""
+def _with_no_skip(pats: dict) -> dict:
+    """Each pattern under its own strategy and under ``no_skip()``."""
+    out = dict(pats)
+    for name, fn in pats.items():
+        out[f"{name}+no_skip"] = lambda fn=fn: fn().no_skip()
+    return out
+
+
+def _run(rows_sorted, pattern_fn, chunks, **kw):
+    """Replay rows through drain_in_order in the given chunking; final
+    eos flush."""
     out = []
     state: dict = {}
     for chunk in chunks:
@@ -70,14 +79,14 @@ def _run(rows_sorted, pattern_fn, drain, chunks, **kw):
             )
         for k, rows_k in by_key.items():
             recs = state.get(k, []) + rows_k
-            rows_out, recs = drain(
+            rows_out, recs = drain_in_order(
                 recs, pattern_fn(), "ts", ["k"], (k,), _measures, **kw
             )
             out.extend(rows_out)
             state[k] = recs
     keys = {r[0] for ch in chunks for r in ch}
     for k in keys:
-        rows_out, _ = drain(
+        rows_out, _ = drain_in_order(
             state.get(k, []), pattern_fn(), "ts", ["k"], (k,), _measures,
             eos=True, **kw,
         )
@@ -94,7 +103,7 @@ def main() -> int:
         "--surface",
         choices=["inorder", "wm", "mr", "all"],
         default="inorder",
-        help="inorder: drain_in_order/all split invariance; wm: "
+        help="inorder: drain_in_order split invariance; wm: "
         "out-of-order watermarked vs in-order; mr: MATCH_RECOGNIZE "
         "stream increment; all: everything",
     )
@@ -125,19 +134,20 @@ def main() -> int:
 
     pats = _patterns()
     configs = [
-        ("one", drain_in_order, {}),
-        ("one+timeout", drain_in_order, {"timeout_measures": _timed_out}),
-        ("all", drain_all_in_order, {}),
+        ("one", lambda fn: fn, {}),
+        ("one+timeout", lambda fn: fn, {"timeout_measures": _timed_out}),
+        ("no_skip", lambda fn: lambda: fn().no_skip(), {}),
     ]
     failures = 0
     total = 0
     gen = _gen_rows_ties if args.ties else _gen_rows
-    for pname, pattern_fn in sorted(pats.items()):
+    for pname, base_fn in sorted(pats.items()):
         for trial in range(args.trials):
             rng = random.Random(args.seed * 1_000_003 + hash(pname) % 99991 + trial)
             rows = sorted(gen(rng), key=lambda r: (r[2], r[3]))
-            for cname, drain, kw in configs:
-                golden = _run(rows, pattern_fn, drain, [rows], **kw)
+            for cname, variant, kw in configs:
+                pattern_fn = variant(base_fn)
+                golden = _run(rows, pattern_fn, [rows], **kw)
                 for s in range(args.splits):
                     n_cuts = rng.randrange(1, min(7, len(rows) - 1))
                     cuts = sorted(rng.sample(range(1, len(rows)), n_cuts))
@@ -145,7 +155,7 @@ def main() -> int:
                         rows[a:b]
                         for a, b in zip([0, *cuts], [*cuts, len(rows)])
                     ]
-                    got = _run(rows, pattern_fn, drain, chunks, **kw)
+                    got = _run(rows, pattern_fn, chunks, **kw)
                     total += 1
                     if got != golden:
                         failures += 1
@@ -175,7 +185,7 @@ def fuzz_watermarked(trials: int, seed: int) -> tuple[int, int]:
 
     from flink_demo_spark.streaming.cep_stream import drain_watermarked
 
-    pats = _patterns()
+    pats = _with_no_skip(_patterns())
     total = fails = 0
     for pname, pattern_fn in sorted(pats.items()):
         for trial in range(trials):
